@@ -17,7 +17,8 @@ import graft.streaming.{ChangesPipeline, MergeSink}
   *                             [seedDocs] [file|http]
   *
   * `bucketed` uses [[graft.streaming.BucketedMergeSink]] (per-batch
-  * cost O(touched buckets)); `flat` (default) rewrites the snapshot.
+  * cost O(touched buckets)); `flat` (default) is [[MergeSink]] (an
+  * O(batch) delta per batch, compacted by its size rule).
   * Optional 4th arg seeds the store with that many docs FIRST (untimed),
   * so the timed phase measures incremental tail ingest against a large
   * resident state — the regime where bucketing pays.

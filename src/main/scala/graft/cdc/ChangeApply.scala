@@ -24,9 +24,10 @@ import org.apache.spark.sql.expressions.Window
   *
   * SCALE: both sides shuffle-partition on `id`; at 100 TB the state table
   * should be bucketed by id so only the (much smaller) batch moves.
-  * `planActions` additionally exposes the per-row decision so a sink can
-  * skip rev-equal NOOP writes entirely (write amplification = changed
-  * rows only).
+  * `planActions` additionally exposes the per-row decision, and
+  * [[effectiveChanges]] is the same grid in delta form: only the rows a
+  * batch changes, decided against the state's (id, rev) without
+  * shuffling the state (write amplification = changed rows only).
   */
 object ChangeApply {
 
@@ -70,25 +71,76 @@ object ChangeApply {
     val c = latest.select(
       col("id").as("c_id"), col("rev").as("c_rev"),
       col("deleted").as("c_deleted"), col("doc").as("c_doc"))
-    // Type-exclusion ingest filter (lib/index.js:131-146, P8). The
-    // reference's check guards only the insert branch, so updates to an
-    // already-present excluded-type doc still pass through.
-    val excluded: Column =
-      if (excludeTypes.isEmpty) lit(false)
-      else get_json_object(col("c_doc"), "$.type")
-        .isin(excludeTypes.toSeq: _*)
 
     s.join(c, col("s_id") === col("c_id"), "full_outer")
       .select(
         coalesce(col("s_id"), col("c_id")).as("id"),
         when(col("c_id").isNull, lit("NOOP"))
-          .when(col("c_deleted") && col("s_id").isNotNull, lit("DELETE"))
-          .when(col("c_deleted"), lit("DELETE_NOOP"))
-          .when(col("s_id").isNull && excluded, lit("IGNORE"))
-          .when(col("s_id").isNull, lit("INSERT"))
-          .when(col("s_rev") === col("c_rev"), lit("NOOP"))
-          .otherwise(lit("UPDATE")).as("action"),
+          .otherwise(revGuard(col("s_id"), col("s_rev"), col("c_rev"),
+            col("c_deleted"), excluded(col("c_doc"), excludeTypes)))
+          .as("action"),
         col("s_rev"), col("s_doc"), col("c_rev"), col("c_doc"))
+  }
+
+  /** The T4 grid for one incoming change against its stored row
+    * (`sId` null when the id is absent from the state) — the rev guard
+    * [[planActions]] and [[effectiveChanges]] share. */
+  private def revGuard(sId: Column, sRev: Column, cRev: Column,
+      cDeleted: Column, excluded: Column): Column =
+    when(cDeleted && sId.isNotNull, lit("DELETE"))
+      .when(cDeleted, lit("DELETE_NOOP"))
+      .when(sId.isNull && excluded, lit("IGNORE"))
+      .when(sId.isNull, lit("INSERT"))
+      .when(sRev === cRev, lit("NOOP"))
+      .otherwise(lit("UPDATE"))
+
+  /** Type-exclusion ingest filter (lib/index.js:131-146, P8). The
+    * reference's check guards only the insert branch, so updates to an
+    * already-present excluded-type doc still pass through. */
+  private def excluded(doc: Column, excludeTypes: Set[String]): Column =
+    if (excludeTypes.isEmpty) lit(false)
+    else get_json_object(doc, "$.type").isin(excludeTypes.toSeq: _*)
+
+  /** Delta form of [[applyChanges]]: only the rows the batch changes —
+    * (id, rev, doc, deleted) for every INSERT and UPDATE, and a
+    * tombstone (doc null, deleted true) for every DELETE; NOOP,
+    * DELETE_NOOP and IGNORE rows are dropped. Folding these rows over
+    * the state (replace by id, drop tombstones) equals
+    * `applyChanges(state, changes, ...)` row for row.
+    *
+    * `stored` is the state as versioned rows (id, rev, deleted, v): an
+    * id's current row is its highest-`v` row, and the id is absent when
+    * that row is a tombstone (`deleted`; null reads as false). Only the
+    * rows of the batch's ids are read: the batch's key set is broadcast
+    * into the `stored` scan (semi-join), the matching rows come back as
+    * a broadcast too, and the newest of them is picked inside the
+    * batch's own `id` partitioning — the state is scanned, never
+    * shuffled, and both broadcasts are O(batch). */
+  def effectiveChanges(
+      stored: DataFrame,
+      changes: DataFrame,
+      excludeTypes: Set[String] = Set.empty,
+      mapDoc: Option[Column => Column] = None): DataFrame = {
+    val latest = latestPerKey(withMapDoc(changes, mapDoc))
+    val candidates = stored
+      .join(broadcast(changes.select(col("id").as("c_id"))),
+        col("id") === col("c_id"), "left_semi")
+      .select(col("id").as("s_id"), struct(col("v"), col("rev"),
+        coalesce(col("deleted"), lit(false)).as("deleted")).as("s"))
+    latest.join(broadcast(candidates), col("id") === col("s_id"), "left_outer")
+      // newest stored version (struct order: `v` first); `latest` is
+      // already partitioned by id, so this adds no shuffle
+      .groupBy(col("id"))
+      .agg(any_value(col("rev")).as("rev"), any_value(col("deleted")).as("deleted"),
+        any_value(col("doc")).as("doc"), max(col("s")).as("s"))
+      .select(col("id"), col("rev"), col("doc"),
+        revGuard(when(!col("s.deleted"), col("id")), col("s.rev"),
+          col("rev"), col("deleted"), excluded(col("doc"), excludeTypes))
+          .as("action"))
+      .where(col("action").isin("INSERT", "UPDATE", "DELETE"))
+      .select(col("id"), col("rev"),
+        when(col("action") =!= "DELETE", col("doc")).as("doc"),
+        (col("action") === "DELETE").as("deleted"))
   }
 
   private def withMapDoc(changes: DataFrame,
@@ -120,12 +172,8 @@ object ChangeApply {
       excludeTypes: Set[String] = Set.empty,
       mapDoc: Option[Column => Column] = None): DataFrame = {
     val latest = latestPerKey(withMapDoc(changes, mapDoc))
-    val excluded: Column =
-      if (excludeTypes.isEmpty) lit(false)
-      else get_json_object(col("doc"), "$.type")
-        .isin(excludeTypes.toSeq: _*)
     latest
-      .where(!col("deleted") && !excluded)
+      .where(!col("deleted") && !excluded(col("doc"), excludeTypes))
       .select(col("id"), col("rev"), col("doc"))
   }
 
@@ -151,6 +199,11 @@ object ChangeApply {
     }
 
   /** Fold a sequence of batches (streaming replay / catch-up). */
-  def applyAll(state: DataFrame, batches: Seq[DataFrame]): DataFrame =
-    batches.foldLeft(state)((s, b) => applyChanges(s, b))
+  def applyAll(
+      state: DataFrame,
+      batches: Seq[DataFrame],
+      excludeTypes: Set[String] = Set.empty,
+      mapDoc: Option[Column => Column] = None): DataFrame =
+    batches.foldLeft(state)((s, b) =>
+      applyChanges(s, b, excludeTypes, mapDoc))
 }

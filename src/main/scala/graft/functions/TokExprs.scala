@@ -94,17 +94,25 @@ object Tok {
     true
   }
 
+  /** Interning table size for `nTokens` tokens: the next power of two
+    * >= 2 * nTokens (load factor <= 0.5), at least 4. Computed in Long:
+    * past 2^29 tokens the doubled count overflows an Int and the table
+    * could not be allocated, so such a document fails here with a
+    * message instead of looping forever. */
+  private[functions] def tableCapacity(nTokens: Int): Int = {
+    require(nTokens <= (1 << 29),
+      s"a document of $nTokens tokens exceeds the tokenizer's limit of 2^29")
+    var c = 4L
+    while (c < 2L * nTokens) c <<= 1
+    c.toInt
+  }
+
   /** Open-addressing token interning over [start,end) byte ranges of one
     * document. Returns (tokStart, tokEnd, count, order) arrays packed as
     * (starts, ends, counts, nDistinct) — tokens in first-occurrence
     * order. */
   private final class Counter(t: UTF8String, nTokens: Int) {
-    // table size: next pow2 >= 2*nTokens (load factor <= 0.5)
-    private val cap = {
-      var c = 4
-      while (c < nTokens * 2) c <<= 1
-      c
-    }
+    private val cap = tableCapacity(nTokens)
     private val table = new Array[Int](cap) // 0 = empty, else idx+1
     val starts = new Array[Int](nTokens)
     val ends = new Array[Int](nTokens)

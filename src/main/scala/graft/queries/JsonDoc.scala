@@ -736,11 +736,12 @@ object JsonDoc {
       Some(replayOracle),
       "full streaming plane: DSv2 changes source -> checkpoint -> rev-guarded merge, final store hash-matched"),
 
-    // ---- The SCALE-SAFE state stores under the same gate: the 100 TB
-    // production regime is high-rate small batches over large state —
-    // exactly where the snapshot MergeSink (full state rewrite per
-    // batch) is the documented wrong store (DeltaLogMergeSink.scala:
-    // 13-30). j24 replays j19's EXACT feed through BucketedMergeSink
+    // ---- The other state stores under the same gate: the 100 TB
+    // production regime is high-rate small batches over large state,
+    // which every store meets with O(batch)-ish writes — MergeSink (the
+    // default) as a size-compacted delta log, these two as hash buckets
+    // and a count-compacted delta log (DeltaLogMergeSink.scala:13-31).
+    // j24 replays j19's EXACT feed through BucketedMergeSink
     // (O(touched buckets) write amplification, per-bucket versioned
     // parquet + atomic manifest swap) and must converge on the SAME
     // oracle — the write-amplification spectrum is a storage-layout

@@ -13,10 +13,10 @@ import graft.cdc.ChangeApply
 /** Hash-bucketed document store: the merge sink whose per-batch cost is
   * O(touched buckets), not O(state).
   *
-  * [[MergeSink]] rewrites the whole snapshot per batch — correct at any
-  * size but O(state) write amplification; at 100 TB state with small
-  * batches that is the bottleneck (SURVEY §2.11 T4 scale note). Here
-  * the state is split into `buckets` hash buckets of `id`
+  * [[MergeSink]] writes each batch as a delta and merges on read; its
+  * reads anti-join the base against the log's broadcast key set, which
+  * at 100 TB state outgrows a broadcast (SURVEY §2.11 T4 scale note).
+  * Here the state is split into `buckets` hash buckets of `id`
   * (murmur3 `hash(id) pmod B`, deterministic across sessions):
   *
   *   root/_MANIFEST          "batchId buckets b0v b1v ... bN-1v"

@@ -83,8 +83,9 @@ object ChangesPipeline {
   /** The store-agnostic core of [[start]]: source + checkpoint plane
     * wired to ANY foreachBatch sink. The three state stores share one
     * contract — a replayed batchId is a NOOP — so the same feed drives
-    * [[MergeSink]] (snapshot), [[BucketedMergeSink]] (O(touched
-    * buckets)) or [[DeltaLogMergeSink]] (O(batch) append) unchanged;
+    * [[MergeSink]] (O(batch) delta, size-ruled compaction),
+    * [[BucketedMergeSink]] (O(touched buckets)) or [[DeltaLogMergeSink]]
+    * (O(batch) append, count-ruled compaction) unchanged;
     * which one is right is a write-amplification trade-off
     * (DeltaLogMergeSink.scala:13-30), not a semantics choice. */
   def startWith(

@@ -15,13 +15,16 @@ import graft.cdc.ChangeApply
   *
   * The three state stores cover the CDC write-amplification spectrum
   * (all share the rev-guarded merge semantics and batch-replay NOOP):
-  *  - [[MergeSink]]: full snapshot per batch — best for bulk loads;
+  *  - [[MergeSink]] (the default): also log-structured — a per-batch
+  *    delta, merged on read, compacted when the log weighs twice the
+  *    base (a size rule, no knob); the first batch writes the base
+  *    directly, so a bulk load is one O(batch) write;
   *  - [[BucketedMergeSink]]: rewrite touched hash buckets — best when
   *    batches have key locality;
-  *  - this store: append the batch's effective changes as a delta file
-  *    (merge-on-read, like log-structured merge tables) — best for
-  *    high-rate small batches over large state, the regime where the
-  *    others are measured at 16-43 docs/s.
+  *  - this store: the same delta/merge-on-read shape with a delta-COUNT
+  *    compaction knob (`compactEvery`, which j25 uses to force a
+  *    mid-stream compaction) and a rev guard that reads the whole
+  *    merged state, where [[MergeSink]] reads only the batch's ids.
   *
   * Layout:
   *   root/_LOG                "lastBatchId baseVersion d<id> d<id> ..."

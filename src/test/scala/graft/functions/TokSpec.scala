@@ -131,4 +131,17 @@ class TokSpec extends AnyFunSuite with SparkSpec {
       .groupBy($"doc").count().collect()
     assert(n.map(r => (r.getLong(0), r.getLong(1))).toSet == Set((2L, 2L)))
   }
+
+  test("interning table capacity: next pow2 >= 2n, fails fast past 2^29 tokens") {
+    assert(Tok.tableCapacity(0) == 4)
+    assert(Tok.tableCapacity(1) == 4)
+    assert(Tok.tableCapacity(3) == 8)
+    assert(Tok.tableCapacity(1000) == 2048)
+    assert(Tok.tableCapacity(1 << 29) == (1 << 30))
+    // 2n overflows an Int here: an Int loop never reached it
+    Seq((1 << 29) + 1, 1 << 30, Int.MaxValue).foreach { n =>
+      val e = intercept[IllegalArgumentException](Tok.tableCapacity(n))
+      assert(e.getMessage.contains("2^29"))
+    }
+  }
 }
