@@ -18,8 +18,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * passes each. Each kernel here is ONE monomorphic static method that
   * scans the UTF-8 bytes directly (0x20 never occurs inside a
   * multi-byte UTF-8 sequence, so byte-splitting IS char-splitting) and
-  * emits zero-copy slices of the original buffer — the same
-  * view-over-base technique `UTF8String.substring` itself uses.
+  * emits zero-copy slices of the original buffer (`UTF8String.fromAddress`
+  * views; `UTF8String.substring`, by contrast, copies). INVARIANT: a
+  * slice must be consumed before the input row advances. Upstream
+  * buffers (shuffle-reader rows, column vectors) are reused row to row,
+  * so a slice read after the next input row points at that row's
+  * bytes. Every current consumer holds it: generate/project write each
+  * output into an UnsafeRow (a copy) before pulling the next input.
   *
   * Semantics are BIT-IDENTICAL to `split(text, " ")` (Java
   * `String.split(" ", -1)`) for valid UTF-8: every token kept,

@@ -21,7 +21,7 @@ object GateKeys {
     * fingerprint in the `graft-<key>-<fp>` tmp-dir name). */
   val byQuery: Map[String, String] = Map(
     "j19_streaming_replay" -> "j19gate-v1",
-    "j21_writeback_roundtrip" -> "j21gate-v1",
+    "j21_writeback_roundtrip" -> "j21gate-v2",
     "j24_bucketed_store" -> "j24gate-v1",
     "j25_deltalog_store" -> "j25gate-v1",
     "j26_multi_feed_union" -> "j26gate-v1",
@@ -33,12 +33,12 @@ object GateKeys {
     "j35_live_tail" -> "j35gate-v1",
     "j36_single_put_roundtrip" -> "j36gate-v1",
     "j37_bootstrap" -> "j37gate-v1",
-    "j42_repopulate" -> "j42repop-v1",
+    "j42_repopulate" -> "j42repop-v2",
     "j43_streaming_dsir_features" -> "j43dsir-v1",
     "j20_streaming_index" -> "j20idx-c1",
     "j27_streaming_ann_index" -> s"j27annidx-p$j27Planes-c1",
     "j28_streaming_lsh_dedup" -> "j28lsh-v2",
-    "j33_event_bus" -> "j33events-v1",
+    "j33_event_bus" -> "j33events-v2",
     "j39_streaming_sessionize" -> "j39sess-v3",
     "j40_stream_interval_join" -> "j40join-v3",
     "j41_stream_sliding_counts" -> "j41slide-v2")

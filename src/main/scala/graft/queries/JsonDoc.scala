@@ -1601,20 +1601,14 @@ object JsonDoc {
               base.resolve("ckpt").toString,
               name = name, maxChangesPerTrigger = Some(math.max(1L, cap)))
             // listener delivery is async but IN ORDER: once the
-            // terminal event for this query's id has landed, every
-            // earlier connect/progress event has too
+            // terminal event for this query has landed, every earlier
+            // connect/progress event has too
             val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-            def qid = log.all
-              .find(e => e.event == "connect" && e.query == name)
-              .map(_.detail)
-            while (System.nanoTime() < deadline && !log.all.exists(e =>
-                (e.event == "stop" || e.event == "error") &&
-                  qid.contains(e.query)))
+            while (System.nanoTime() < deadline && !log.forQuery(name)
+                .exists(e => e.event == "stop" || e.event == "error"))
               Thread.sleep(20)
-            val id = qid.getOrElse(sys.error("j33: connect event missing"))
-            val mine = log.all
-              .filter(e => e.query == name || e.query == id)
-            require(mine.exists(e => e.event == "stop" && e.query == id),
+            val mine = log.forQuery(name)
+            require(mine.exists(_.event == "stop"),
               s"j33: no clean stop within 30 s; events=${mine.map(_.event)}")
             val rowsRe = "rows=(\\d+)".r
             val out = mine.groupBy(_.event).toSeq.map { case (ev, es) =>
@@ -2002,9 +1996,9 @@ object JsonDoc {
     // query time; at 100 TB the schemaless plane should be STORED as a
     // parquet variant column with writer shredding, so `variant_get`
     // reads a typed subcolumn via scan pushdown instead of decoding the
-    // whole binary. Measured (graft.VariantProbe, sf1): text-parse
-    // 2.47 s, stored unshredded 1.01 s, stored shredded + scan pushdown
-    // 0.38 s (pushdown off: 1.19 s — the pushdown IS the win). Same
+    // whole binary. Measured in r16 at sf1: text-parse 2.47 s, stored
+    // unshredded 1.01 s, stored shredded + scan pushdown 0.38 s
+    // (pushdown off: 1.19 s — the pushdown IS the win). Same
     // semantics and oracle as j18, different (storage-level) plan.
     QueryDef(
       "j38_variant_shredded",

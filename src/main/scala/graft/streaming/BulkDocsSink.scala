@@ -1,8 +1,15 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.array.ByteArrayMethods
+import org.apache.spark.unsafe.types.UTF8String
 
 /** HTTP write-back sinks — SURVEY.md §2.1 S4/S5: push documents from the
   * engine back into CouchDB, single-doc PUT and chunked `_bulk_docs`.
@@ -18,9 +25,11 @@ import org.apache.spark.sql.functions._
   * Spark-first: the "trigger" is a sink stage — rows destined for
   * write-back flow through [[BulkDocsSink.post]] instead of the local
   * store (the `from_pg` column becomes *which sink you call*, SURVEY
-  * §1.1 #2). HTTP itself is behind [[DocPoster]] so tests inject a
-  * recorder (zero-egress environment); the production poster is a thin
-  * `java.net.http` client per executor.
+  * §1.1 #2). Bulk write-back is ONE pipelined stage with no shuffle:
+  * read → JSON map → chunk ([[BulkDocsSink.chunkedByPartition]]) →
+  * POST → per-doc result parse. HTTP itself is behind [[DocPoster]] so
+  * tests inject a recorder (zero-egress environment); the production
+  * poster is a thin `java.net.http` client per executor.
   */
 trait DocPoster extends Serializable {
   /** POST body to url; returns HTTP status. */
@@ -41,16 +50,22 @@ trait DocPoster extends Serializable {
 
 object BulkDocsSink {
 
+  /** [[chunkedByPartition]]'s output: the columns [[chunked]] yields. */
+  private val chunkSchema =
+    StructType.fromDDL("chunk_no BIGINT, n_docs BIGINT, docs_json STRING")
+
   /** The reference's chunk arithmetic, verbatim semantics (README.md:518):
     * `((ROW_NUMBER() OVER (ORDER BY id) - 1) / chunkSize) + 1`.
     *
-    * SCALE NOTE: a global ROW_NUMBER is a single-partition sort — faithful
-    * to the reference but a bottleneck at 100 TB. `chunkedByPartition`
-    * below is the scale path (chunk within each partition, no global
-    * shuffle); chunk NUMBERS differ but chunk CONTENTS are equivalent for
-    * an order-insensitive bulk API. */
+    * SCALE NOTE: a global ROW_NUMBER is a single-partition sort plus a
+    * shuffle of every doc into its chunk — faithful to the reference
+    * but a bottleneck at scale. [[chunkedByPartition]] is the scale
+    * path: it chunks each partition as it streams, with no sort and no
+    * shuffle; chunk NUMBERS and contents differ, which an
+    * order-insensitive bulk API does not see. */
   def chunked(df: DataFrame, idCol: String, docCol: String,
       chunkSize: Int = 50): DataFrame = {
+    require(chunkSize > 0, s"chunkSize must be positive, got $chunkSize")
     val w = Window.orderBy(col(idCol))
     df.withColumn("__rn", row_number().over(w))
       .withColumn("chunk_no",
@@ -67,23 +82,28 @@ object BulkDocsSink {
           lit("]")).as("docs_json"))
   }
 
-  /** Scale path: chunk within each partition — no global sort, chunk key
-    * = (partition, local chunk). Same payload shape. */
+  /** Scale path: one pass over each input partition, emitting a
+    * (chunk_no, n_docs, docs_json) row for every `chunkSize` rows (a
+    * partition's last chunk may be shorter). No sort, window, aggregate
+    * or exchange: read → chunk → POST runs as ONE stage, the first POST
+    * leaves after `chunkSize` rows, and a task holds one chunk in
+    * memory. A task retry re-reads its input partition.
+    *
+    * Chunks follow the partition's row order, not `idCol` (kept for
+    * symmetry with [[chunked]]). `chunk_no` is the partition index in
+    * the high 32 bits and the chunk's index within its partition in the
+    * low 32, so keys never collide. A null doc counts in `n_docs` and is
+    * left out of `docs_json` (`array_join`'s rule, as in [[chunked]]).
+    * Doc bytes are copied once, UTF-8 into the chunk's buffer, with no
+    * String round trip. */
   def chunkedByPartition(df: DataFrame, idCol: String, docCol: String,
       chunkSize: Int = 50): DataFrame = {
-    val w = Window.partitionBy(spark_partition_id()).orderBy(col(idCol))
-    df.withColumn("__pid", spark_partition_id())
-      .withColumn("__rn", row_number().over(w))
-      .withColumn("chunk_no",
-        (col("__pid").cast("long") * lit(1000000L)) +
-          floor((col("__rn") - 1) / chunkSize.toDouble).cast("long"))
-      .groupBy(col("chunk_no"))
-      .agg(count(lit(1)).as("n_docs"),
-        concat(lit("["),
-          array_join(transform(
-            array_sort(collect_list(struct(col("__rn"), col(docCol)))),
-            s => s.getField(docCol)), ","),
-          lit("]")).as("docs_json"))
+    require(chunkSize > 0, s"chunkSize must be positive, got $chunkSize")
+    val docs = df.select(col(docCol).cast("string")).queryExecution.toRdd
+    Bridge.internalDataFrame(df.sparkSession,
+      docs.mapPartitionsWithIndex((pid, rows) =>
+        new PartitionChunker(rows, pid, chunkSize)),
+      chunkSchema)
   }
 
   /** `_bulk_docs` payload from a chunk (README.md:522-527). */
@@ -375,6 +395,59 @@ object BulkDocsSink {
       }
     spark.createDataFrame(out,
       org.apache.spark.sql.types.StructType.fromDDL("id STRING, status INT"))
+  }
+}
+
+/** One partition's docs (column 0 of `rows`, a string) as `_bulk_docs`
+  * chunks, streamed: each `next()` drains up to `chunkSize` rows into a
+  * fresh buffer, sized from the previous chunk, and emits it as a
+  * (chunk_no, n_docs, docs_json) row. The emitted string owns its
+  * buffer, so a cached or buffered chunk row stays valid after the
+  * input advances. */
+private final class PartitionChunker(
+    rows: Iterator[InternalRow], pid: Int, chunkSize: Int)
+    extends Iterator[InternalRow] {
+  private var k = 0L
+  private var sizeHint = 64
+
+  def hasNext: Boolean = rows.hasNext
+
+  def next(): InternalRow = {
+    if (!rows.hasNext) throw new NoSuchElementException("no more chunks")
+    require(k <= 0xFFFFFFFFL,
+      s"partition $pid yields more than 2^32 chunks; raise chunkSize")
+    var buf = new Array[Byte](sizeHint)
+    buf(0) = '['
+    var len = 1
+    var n = 0L
+    var first = true
+    while (n < chunkSize && rows.hasNext) {
+      val r = rows.next()
+      n += 1
+      if (!r.isNullAt(0)) {
+        val doc = r.getUTF8String(0)
+        // room for a separator, the doc and the closing bracket
+        val need = len.toLong + doc.numBytes + 2
+        if (need > buf.length) {
+          require(need <= ByteArrayMethods.MAX_ROUNDED_ARRAY_LENGTH,
+            s"a chunk of partition $pid exceeds 2 GB; lower chunkSize")
+          buf = java.util.Arrays.copyOf(buf, math.min(
+            math.max(need, 2L * buf.length),
+            ByteArrayMethods.MAX_ROUNDED_ARRAY_LENGTH.toLong).toInt)
+        }
+        if (!first) { buf(len) = ','; len += 1 }
+        doc.writeToMemory(buf, Platform.BYTE_ARRAY_OFFSET + len)
+        len += doc.numBytes
+        first = false
+      }
+    }
+    buf(len) = ']'
+    len += 1
+    sizeHint = len
+    val chunk = new GenericInternalRow(Array[Any](
+      (pid.toLong << 32) | k, n, UTF8String.fromBytes(buf, 0, len)))
+    k += 1
+    chunk
   }
 }
 

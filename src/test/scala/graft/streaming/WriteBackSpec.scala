@@ -1,5 +1,7 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
@@ -385,5 +387,131 @@ class WriteBackSpec extends SparkSpec {
       assert(BulkDocsSink.appliedBatches(wb) == Set(0L),
         "the tombstone replay echo must converge, not crash-loop")
     } finally stub.stop()
+  }
+
+  /** Seeded docs over 6 range partitions: partition 2 empty, about a
+    * fifth of the rows dropped unevenly, about a tenth of the docs null,
+    * ids descending within each partition (so a sort would show). */
+  private def seededDocs(seed: Long) =
+    spark.range(0L, 600L, 1L, 6)
+      .where(spark_partition_id() =!= 2 && rand(seed) < 0.8)
+      .select((lit(10000L) - col("id")).as("id"))
+      .select(col("id"), when(rand(seed + 1) < 0.1, lit(null))
+        .otherwise(concat(lit("""{"_id":"d"""), col("id"), lit("""","v":"""),
+          col("id"), lit("}"))).as("doc"))
+
+  test("streaming chunker: every doc in exactly one chunk, in partition order, full chunks but the last") {
+    import spark.implicits._
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    for (seed <- 1L to 3L; chunkSize <- Seq(1, 7, 50)) {
+      val in = seededDocs(seed)
+      val input = in.select(spark_partition_id(), col("doc"))
+        .as[(Int, String)].collect().toSeq
+      val chunks = BulkDocsSink.chunkedByPartition(in, "id", "doc", chunkSize)
+        .as[(Long, Long, String)].collect().toSeq
+      val ctx = s"seed $seed, chunkSize $chunkSize"
+      assert(chunks.map(_._1).distinct.size == chunks.size, ctx)
+      assert(chunks.map(_._2).sum == input.size.toLong, ctx)
+      val byPid = chunks.groupBy(c => (c._1 >>> 32).toInt)
+      assert(!byPid.contains(2), s"$ctx: the empty partition made a chunk")
+      assert(byPid.keySet == input.map(_._1).toSet, ctx)
+      byPid.foreach { case (pid, cs) =>
+        val ordered = cs.sortBy(_._1)
+        assert(ordered.map(_._1 & 0xFFFFFFFFL) == ordered.indices.map(_.toLong),
+          s"$ctx: partition $pid's chunk indexes are not 0..n-1")
+        assert(ordered.init.forall(_._2 == chunkSize.toLong) &&
+          ordered.last._2 >= 1L && ordered.last._2 <= chunkSize.toLong,
+          s"$ctx: only partition $pid's last chunk may be short")
+        val docs = ordered.flatMap { c =>
+          val arr = mapper.readTree(c._3)
+          assert(arr.isArray, s"$ctx: ${c._3}")
+          (0 until arr.size()).map(i => mapper.writeValueAsString(arr.get(i)))
+        }
+        assert(docs == input.collect { case (p, d) if p == pid && d != null => d },
+          s"$ctx: partition $pid's docs are missing, repeated or reordered")
+      }
+      assert(input.exists(_._2 == null), s"$ctx: no null doc generated")
+    }
+  }
+
+  test("chunk_no stays distinct past 1,000,000 chunks in one partition") {
+    // chunkSize 1 over two 1,000,001-row partitions: the old key
+    // pid * 1,000,000 + k collided at (0, 1,000,000) vs (1, 0)
+    val chunks = BulkDocsSink.chunkedByPartition(
+      spark.range(0L, 2000002L, 1L, 2)
+        .select(col("id"), lit(null).cast("string").as("doc")),
+      "id", "doc", chunkSize = 1)
+    val r = chunks.agg(count(lit(1)), countDistinct(col("chunk_no")),
+      countDistinct(shiftrightunsigned(col("chunk_no"), 32)),
+      sum(col("n_docs")), max(length(col("docs_json")))).head()
+    assert(r.getLong(0) == 2000002L && r.getLong(1) == 2000002L)
+    assert(r.getLong(2) == 2L && r.getLong(3) == 2000002L)
+    assert(r.getInt(4) == 2) // all-null chunks are "[]"
+  }
+
+  test("chunkSize <= 0 fails clearly in both chunkers") {
+    for (n <- Seq(0, -5)) {
+      val a = intercept[IllegalArgumentException] {
+        BulkDocsSink.chunkedByPartition(docs(10), "id", "doc", n)
+      }
+      val b = intercept[IllegalArgumentException] {
+        BulkDocsSink.chunked(docs(10), "id", "doc", n)
+      }
+      assert(a.getMessage.contains("chunkSize") && b.getMessage.contains("chunkSize"))
+    }
+  }
+
+  test("scan -> chunk -> POST -> per-doc parse runs as one stage; every doc gets one ok row") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("wb-onestage").toString
+    seededDocs(4L).write.mode("overwrite").parquet(dir)
+    val in = spark.read.parquet(dir)
+    val expected = in.where(col("doc").isNotNull)
+      .select(concat(lit("d"), col("id"))).as[String].collect().sorted.toSeq
+    val stub = new CouchStubServer("wb", IndexedSeq.empty, stateful = true)
+    val port = stub.start()
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == "wb-onestage"))
+          stages.add(e.stageInfos.size)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup("wb-onestage", "one-stage write-back")
+      val chunks = BulkDocsSink.chunkedByPartition(in, "id", "doc", 50)
+      val res = BulkDocsSink.postPerDoc(
+        chunks, s"http://127.0.0.1:$port/wb", new JdkHttpPoster())
+      // the POST side plans over the chunker's RDD, so the executed
+      // plans end at that boundary; the RDD lineage below them reaches
+      // back to the scan and must hold no shuffle
+      for (df <- Seq(chunks, res)) {
+        val plan = df.queryExecution.executedPlan
+        assert(plan.collect {
+          case n @ (_: org.apache.spark.sql.execution.exchange.Exchange |
+            _: org.apache.spark.sql.execution.window.WindowExec |
+            _: org.apache.spark.sql.execution.SortExec) => n
+        }.isEmpty, plan.toString)
+      }
+      def shuffles(rdd: org.apache.spark.rdd.RDD[_]): Int =
+        rdd.dependencies.map {
+          case d: org.apache.spark.ShuffleDependency[_, _, _] => 1 + shuffles(d.rdd)
+          case d => shuffles(d.rdd)
+        }.sum
+      assert(shuffles(res.rdd) == 0, res.rdd.toDebugString)
+      val rows = res.select($"doc_id", $"ok").as[(String, Boolean)].collect()
+      spark.sparkContext.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 10000
+      while (stages.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(!stages.isEmpty && stages.asScala.forall(_ == 1),
+        s"stages per job: ${stages.asScala.toSeq}")
+      assert(rows.forall(_._2), "a doc was not accepted")
+      assert(rows.map(_._1).sorted.toSeq == expected)
+      assert(stub.writeStats._1 == chunks.count()) // one POST per chunk
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+      stub.stop()
+    }
   }
 }
