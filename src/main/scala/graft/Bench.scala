@@ -97,7 +97,11 @@ object Bench {
     // (BENCH_sf1.json jgate_isolated_r{N}).
     // A query that throws must NOT be timed as a ~0 s success — that
     // would make regressions look like speedups. Failures are reported
-    // per-query on stderr and counted in the JSON line.
+    // per-query on stderr and counted in the JSON line. A throw in ANY
+    // pass (warmup, timed round or retry) keeps the entry in `failed`
+    // even if a later pass succeeds: first-write-wins is deliberate, so
+    // a flaky entry is flagged (errors > 0, exit 1), not hidden behind
+    // a min-of-N time.
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val pinned = sys.env.getOrElse("SPARK_GRAFT_PIN", "0") == "1"
     def run(name: String): Double = {

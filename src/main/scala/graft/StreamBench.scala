@@ -16,9 +16,10 @@ import graft.streaming.{ChangesPipeline, MergeSink}
   *   runMain graft.StreamBench [nDocs] [maxPerTrigger] [flat|bucketed]
   *                             [seedDocs] [file|http]
   *
-  * `bucketed` uses [[graft.streaming.BucketedMergeSink]] (per-batch
-  * cost O(touched buckets)); `flat` (default) is [[MergeSink]] (an
-  * O(batch) delta per batch, compacted by its size rule).
+  * The two CDC state stores: `flat` (default) is [[MergeSink]] (an
+  * O(batch) delta per batch, compacted by its size rule); `bucketed`
+  * is [[graft.streaming.BucketedMergeSink]] (per-batch cost O(touched
+  * buckets)).
   * Optional 4th arg seeds the store with that many docs FIRST (untimed),
   * so the timed phase measures incremental tail ingest against a large
   * resident state — the regime where bucketing pays.
@@ -34,6 +35,8 @@ object StreamBench {
     val n = args.headOption.map(_.toInt).getOrElse(63840)
     val maxPerTrigger = args.lift(1).map(_.toLong).filter(_ > 0)
     val sinkKind = args.lift(2).getOrElse("flat")
+    require(sinkKind == "flat" || sinkKind == "bucketed",
+      s"sink must be flat or bucketed, got $sinkKind")
     val bucketed = sinkKind == "bucketed"
     val seedDocs = args.lift(3).map(_.toInt).getOrElse(0)
     val transport = args.lift(4).getOrElse("file")
@@ -64,13 +67,9 @@ object StreamBench {
     val store = dir.resolve("store").toString
     val ckpt = dir.resolve("ckpt").toString
 
-    val sinkFn: (org.apache.spark.sql.DataFrame, Long) => Unit = sinkKind match {
-      case "bucketed" =>
-        graft.streaming.BucketedMergeSink.forBatch(store, buckets = 64)
-      case "delta" =>
-        graft.streaming.DeltaLogMergeSink.forBatch(store, compactEvery = 32)
-      case _ => graft.streaming.MergeSink.forBatch(store)
-    }
+    val sinkFn: (org.apache.spark.sql.DataFrame, Long) => Unit =
+      if (bucketed) graft.streaming.BucketedMergeSink.forBatch(store, buckets = 64)
+      else MergeSink.forBatch(store)
 
     def runPipeline(name: String, cap: Option[Long], path: String): Unit = {
       var reader = spark.readStream.format("couch-changes")
@@ -112,19 +111,14 @@ object StreamBench {
     runPipeline("stream-bench", maxPerTrigger, tailPath)
     val sec = (System.nanoTime() - t0) / 1e9
     if (stub != null) stub.stop()
-    val (live, batches) = sinkKind match {
-      case "bucketed" => (
+    val (live, batches) =
+      if (bucketed) (
         graft.streaming.BucketedMergeSink.readState(spark, store).count(),
         graft.streaming.BucketedMergeSink.readManifest(store)
           .map(_.batchId + 1).getOrElse(0L))
-      case "delta" => (
-        graft.streaming.DeltaLogMergeSink.readState(spark, store).count(),
-        graft.streaming.DeltaLogMergeSink.readLog(store)
-          .map(_.batchId + 1).getOrElse(0L))
-      case _ => (
+      else (
         MergeSink.readState(spark, store).count(),
         MergeSink.currentVersion(store).map(_._2 + 1).getOrElse(0L))
-    }
     println(f"""{"metric":"stream_ingest","sink":"$sinkKind","docs":$n,"sec":$sec%.2f,"docs_per_sec":${n / sec}%.0f,"live_docs":$live,"batches":$batches}""")
     spark.stop()
   }

@@ -1,10 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.internal.types.StringTypeWithCollation
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -270,6 +271,11 @@ object Tok {
   def orderedPairsCol(arr: Column): Column =
     Bridge.column(OrderedPairsExpr(Bridge.expression(arr)))
 
+  /** The string kernels' input type, checked at analysis: a string of
+    * any collation, the default one included. */
+  private[functions] val textInput: Seq[StringTypeWithCollation] =
+    Seq(StringTypeWithCollation())
+
   val pairStruct: StructType = StructType(Seq(
     StructField("a", StringType, nullable = false),
     StructField("b", StringType, nullable = false)))
@@ -278,7 +284,9 @@ object Tok {
     StructField("n", LongType, nullable = false)))
 }
 
-final case class TokensExpr(child: Expression) extends UnaryExpression {
+final case class TokensExpr(child: Expression)
+    extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes: Seq[StringTypeWithCollation] = Tok.textInput
   override def dataType: DataType =
     ArrayType(StringType, containsNull = false) // matches StringSplit
   override def nullSafeEval(input: Any): Any =
@@ -289,7 +297,9 @@ final case class TokensExpr(child: Expression) extends UnaryExpression {
     copy(child = c)
 }
 
-final case class TokenCountsExpr(child: Expression) extends UnaryExpression {
+final case class TokenCountsExpr(child: Expression)
+    extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes: Seq[StringTypeWithCollation] = Tok.textInput
   override def dataType: DataType =
     ArrayType(Tok.countStruct, containsNull = false)
   override def nullSafeEval(input: Any): Any =
@@ -300,7 +310,9 @@ final case class TokenCountsExpr(child: Expression) extends UnaryExpression {
     copy(child = c)
 }
 
-final case class BigramsExpr(child: Expression) extends UnaryExpression {
+final case class BigramsExpr(child: Expression)
+    extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes: Seq[StringTypeWithCollation] = Tok.textInput
   override def dataType: DataType =
     ArrayType(Tok.pairStruct, containsNull = false)
   override def nullSafeEval(input: Any): Any =
@@ -312,7 +324,8 @@ final case class BigramsExpr(child: Expression) extends UnaryExpression {
 }
 
 final case class SortedDistinctTokensExpr(child: Expression, cap: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes: Seq[StringTypeWithCollation] = Tok.textInput
   override def dataType: DataType =
     ArrayType(StringType, containsNull = false)
   override def nullSafeEval(input: Any): Any =
@@ -324,7 +337,9 @@ final case class SortedDistinctTokensExpr(child: Expression, cap: Int)
       c: Expression): SortedDistinctTokensExpr = copy(child = c)
 }
 
-final case class OrderedPairsExpr(child: Expression) extends UnaryExpression {
+final case class OrderedPairsExpr(child: Expression)
+    extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
   override def dataType: DataType =
     ArrayType(Tok.pairStruct, containsNull = false)
   override def nullSafeEval(input: Any): Any =

@@ -58,7 +58,12 @@ object Vocab {
     * token per doc, so tf = sum(n) and — because (doc, token) rows are
     * already unique — df = count(*). The countDistinct two-phase
     * aggregation (an extra exchange keyed (token, doc) over the full
-    * OCCURRENCE stream) disappears; one vocab-sized shuffle remains. */
+    * OCCURRENCE stream) disappears; one vocab-sized shuffle remains.
+    *
+    * PRECONDITION: one input row per document. df counts (row, token)
+    * pairs, so a document split over several rows (after a union or a
+    * re-chunking) counts once per row. `idCol` is unused: it stays for
+    * signature parity with the other Vocab operators. */
   def termStats(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     Par.widen(docs.select(col(textCol)))
       .select(
@@ -255,6 +260,9 @@ object Vocab {
     * SCALE: identical shape to [[topTermsPerDoc]] — the df table and
     * the one-row corpus count are vocabulary-sized broadcasts onto the
     * per-doc term counts; the ranking window partitions by document.
+    *
+    * PRECONDITION: one input row per document (`idCol` unique), as in
+    * [[termStats]]: tf and df are counted per row, not per distinct id.
     */
   def tfidfTopTerms(docs: DataFrame, idCol: String, textCol: String,
       k: Int): DataFrame = {
@@ -289,7 +297,10 @@ object Vocab {
     *
     * The corpus df table is vocabulary-sized (≪ corpus), so Catalyst
     * broadcast-joins it back onto the per-doc term counts; the ranking
-    * window partitions by document. */
+    * window partitions by document.
+    *
+    * PRECONDITION: one input row per document (`idCol` unique), as in
+    * [[termStats]]: tf and df are counted per row, not per distinct id. */
   def topTermsPerDoc(docs: DataFrame, idCol: String, textCol: String, k: Int): DataFrame = {
     // r16 fused kernel — same restructure as [[tfidfTopTerms]]: the
     // generator output IS the per-doc tf table (no corpus-pairs

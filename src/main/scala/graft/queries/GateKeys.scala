@@ -23,7 +23,7 @@ object GateKeys {
     "j19_streaming_replay" -> "j19gate-v1",
     "j21_writeback_roundtrip" -> "j21gate-v2",
     "j24_bucketed_store" -> "j24gate-v1",
-    "j25_deltalog_store" -> "j25gate-v1",
+    "j25_deltalog_store" -> "j25gate-v2",
     "j26_multi_feed_union" -> "j26gate-v1",
     "j29_ingest_filter_map" -> "j29gate-v1",
     "j30_faulted_feed_convergence" -> "j30gate-v1",

@@ -91,8 +91,9 @@ object JsonDoc {
     * semantics, see j19's entry comment). Synthesized DISTRIBUTED
     * (to_json + write.text, no driver collect) once per corpus into the
     * content-keyed artifact cache: the feed is a pure function of the
-    * documents table, and all three gated state stores must replay the
-    * SAME bytes against the SAME oracle — that sameness IS the gate. */
+    * documents table, and the three store gates (j19/j24/j25) must
+    * replay the SAME bytes against the SAME oracle — that sameness IS
+    * the gate. */
   private def stagedReplayFeed(
       s: org.apache.spark.sql.SparkSession, dir: String,
       typed: Boolean = false, limitDocs: Option[Long] = None,
@@ -166,7 +167,7 @@ object JsonDoc {
     out.toString
   }
 
-  /** Replay the shared feed through one of the three state stores in
+  /** Replay the shared feed through one of the state stores in
     * admission-controlled micro-batches (~3 at any SF), returning the
     * converged (id, rev, doc) state. `run` wires the store's
     * foreachBatch + readState pair. The WHOLE replay is a pure function
@@ -190,8 +191,9 @@ object JsonDoc {
       // admission cap scales with the corpus so the replay is always
       // ~3 admission-controlled micro-batches, at any SF (a fixed cap
       // would mean O(corpus) trigger overhead at bench scale). minCap
-      // bounds trigger overhead at tiny SF; a caller that NEEDS multiple
-      // batches even there (j25's mid-stream compaction) lowers it.
+      // bounds trigger overhead at tiny SF; a caller that NEEDS more
+      // batches (j25's mid-stream compaction) lowers it and divides the
+      // cap it is handed.
       val state = run(base, feed, Some(math.max(minCap, nLines / 2L)))
       pinAndDelete(state, base)
     }
@@ -736,12 +738,11 @@ object JsonDoc {
       Some(replayOracle),
       "full streaming plane: DSv2 changes source -> checkpoint -> rev-guarded merge, final store hash-matched"),
 
-    // ---- The other state stores under the same gate: the 100 TB
+    // ---- The other state store under the same gate: the 100 TB
     // production regime is high-rate small batches over large state,
-    // which every store meets with O(batch)-ish writes — MergeSink (the
-    // default) as a size-compacted delta log, these two as hash buckets
-    // and a count-compacted delta log (DeltaLogMergeSink.scala:13-31).
-    // j24 replays j19's EXACT feed through BucketedMergeSink
+    // which both stores meet with O(batch)-ish writes — MergeSink (the
+    // default) as a size-compacted delta log, BucketedMergeSink as hash
+    // buckets. j24 replays j19's EXACT feed through BucketedMergeSink
     // (O(touched buckets) write amplification, per-bucket versioned
     // parquet + atomic manifest swap) and must converge on the SAME
     // oracle — the write-amplification spectrum is a storage-layout
@@ -766,13 +767,19 @@ object JsonDoc {
       Some(replayOracle),
       "scale-safe CDC store #1: j19's feed through the hash-bucketed merge sink (O(touched buckets) per batch), same oracle"),
 
-    // ---- j25: the LSM-style delta-log store — O(batch) appends,
-    // merge-on-read, with a MID-STREAM compaction (compactEvery=1 folds
-    // the log into a new base after the second micro-batch, so the
-    // final read crosses base ⊕ post-compaction deltas). Same feed,
-    // same oracle. minCap=50 guarantees >=2 non-empty batches even at
-    // the smallest SF — the compaction `require` below must never
-    // depend on Spark happening to emit a trailing empty batch.
+    // ---- j25: MergeSink's mid-stream compaction under the gate. j19
+    // replays the same feed through the same store in ~3 batches, where
+    // the size rule (log >= 2x base weight) need not fire (at sf0.01 it
+    // does not). Here the admission cap is a quarter of the replay cap
+    // (~12 batches; minCap=50 keeps that down to the smallest corpus),
+    // so the first batch's base is small against the deltas that
+    // follow and the rule folds the log into a new base mid-stream —
+    // the final read crosses base ⊕ post-compaction deltas. Same feed,
+    // same oracle. The version rises by one per applied batch and by
+    // one more per compaction, so on this fresh store
+    // `version > lastBatchId` proves a compaction ran (sf0.01 and sf0.1
+    // both end at version 13 after batch 11: two compactions), never
+    // resting on Spark emitting a trailing empty batch.
     QueryDef(
       "j25_deltalog_store",
       (s, dir) => {
@@ -782,19 +789,18 @@ object JsonDoc {
           graft.streaming.ChangesPipeline.runOnceWith(s, feed,
             base.resolve("ckpt").toString,
             name = s"j25-${java.util.UUID.randomUUID()}",
-            sink = graft.streaming.DeltaLogMergeSink.forBatch(store,
-              compactEvery = 1),
-            maxChangesPerTrigger = cap)
-          val log = graft.streaming.DeltaLogMergeSink.readLog(store)
-          require(log.exists(_.baseVersion >= 0),
-            s"expected a mid-stream compaction to have run, log=$log")
-          graft.streaming.DeltaLogMergeSink.readState(s, store)
+            sink = graft.streaming.MergeSink.forBatch(store),
+            maxChangesPerTrigger = cap.map(_ / 4))
+          val ptr = graft.streaming.MergeSink.currentVersion(store)
+          require(ptr.exists { case (v, b) => v > b },
+            s"expected a mid-stream compaction to have run, (version, batchId)=$ptr")
+          graft.streaming.MergeSink.readState(s, store)
             .select($"id", $"rev", $"doc")
             .orderBy($"id")
         }
       },
       Some(replayOracle),
-      "scale-safe CDC store #2: j19's feed through the delta-log (LSM) sink with a mid-stream compaction, same oracle"),
+      "scale-safe CDC store #2: j19's feed through MergeSink's delta log with a mid-stream size-ruled compaction, same oracle"),
 
     // ---- P8 + P9 under the gate: the j19 replay with the reference's
     // two ingest-side hooks active. excludeTypes (lib/index.js:131-146):

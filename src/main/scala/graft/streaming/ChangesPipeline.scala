@@ -81,13 +81,11 @@ object ChangesPipeline {
       since, maxChangesPerTrigger, trigger)
 
   /** The store-agnostic core of [[start]]: source + checkpoint plane
-    * wired to ANY foreachBatch sink. The three state stores share one
+    * wired to ANY foreachBatch sink. The two state stores share one
     * contract — a replayed batchId is a NOOP — so the same feed drives
-    * [[MergeSink]] (O(batch) delta, size-ruled compaction),
-    * [[BucketedMergeSink]] (O(touched buckets)) or [[DeltaLogMergeSink]]
-    * (O(batch) append, count-ruled compaction) unchanged;
-    * which one is right is a write-amplification trade-off
-    * (DeltaLogMergeSink.scala:13-30), not a semantics choice. */
+    * [[MergeSink]] (O(batch) delta, size-ruled compaction) or
+    * [[BucketedMergeSink]] (O(touched buckets)) unchanged; which one is
+    * right is a write-amplification trade-off, not a semantics choice. */
   def startWith(
       spark: SparkSession,
       feedPath: String,

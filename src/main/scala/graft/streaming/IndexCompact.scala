@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.StringType
   * accumulation inside every `<partCol>=` directory back to ONE file per
   * partition, answer-preserving — the same fold [[graft.pipeline
   * .Retrieval.compact]] runs for the inverted index and
-  * [[DeltaLogMergeSink.compact]] for the doc store. Without it a
+  * [[MergeSink]]'s size-ruled compaction for the doc store. Without it a
   * standing 100 TB ingest accumulates a small file per touched
   * partition per micro-batch forever; with it the file count is bounded
   * by the partition fanout between compactions.

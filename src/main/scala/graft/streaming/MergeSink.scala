@@ -181,14 +181,12 @@ object MergeSink {
     * `mapDoc` is the reference's per-doc transform hook (`opts.map(doc)`,
     * lib/index.js:188-190, P9), applied to every non-deleted incoming
     * doc before the merge — threaded to [[ChangeApply]] so the gate
-    * (j29) can exercise it through the full streaming plane.
-    * `numPartitions` > 0 hash-partitions a written base by `id`. */
+    * (j29) can exercise it through the full streaming plane. */
   def applyBatch(
       root: String,
       batch: DataFrame,
       batchId: Long,
       excludeTypes: Set[String] = Set.empty,
-      numPartitions: Int = 0,
       mapDoc: Option[Column => Column] = None): Boolean = {
     val spark = batch.sparkSession
     val cur = pointer(root)
@@ -200,16 +198,15 @@ object MergeSink {
         // cache it so the source (an HTTP fetch) runs once
         val owned = batch.storageLevel == StorageLevel.NONE
         val once = if (owned) batch.persist() else batch
-        try ChangeApply.effectiveChanges(
-            versions(spark, root, p), once, excludeTypes, mapDoc)
-          .write.mode("overwrite").parquet(s"$root/v=$v")
+        try writeVersion(ChangeApply.effectiveChanges(
+            versions(spark, root, p), once, excludeTypes, mapDoc), root, v)
         finally if (owned) once.unpersist()
         Pointer(v, batchId, p.base)
       case _ =>
         // first batch: no state (or only the bootstrap-empty v=0) —
         // O(batch) insert path, no join against an empty table
-        writeBase(ChangeApply.initialState(batch, excludeTypes, mapDoc),
-          root, v, numPartitions)
+        writeVersion(ChangeApply.initialState(batch, excludeTypes, mapDoc),
+          root, v)
         Pointer(v, batchId, v)
     }
     swap(root, next)
@@ -219,23 +216,21 @@ object MergeSink {
         weight(spark, root, next.base + 1 to next.version) >=
           LogPerBase * weight(spark, root, Seq(next.base))) {
       val c = next.version + 1
-      writeBase(readState(spark, root), root, c, numPartitions)
+      writeVersion(readState(spark, root), root, c)
       swap(root, Pointer(c, batchId, c))
     }
     cur.foreach(prev => retireBelow(root, prev.base))
     true
   }
 
-  private def writeBase(rows: DataFrame, root: String, v: Long,
-      numPartitions: Int): Unit =
-    (if (numPartitions > 0) rows.repartition(numPartitions, rows("id"))
-     else rows).write.mode("overwrite").parquet(s"$root/v=$v")
+  private def writeVersion(rows: DataFrame, root: String, v: Long): Unit =
+    rows.write.mode("overwrite").parquet(s"$root/v=$v")
 
   /** foreachBatch hook: writeStream.foreachBatch(MergeSink.forBatch(root)). */
   def forBatch(root: String, excludeTypes: Set[String] = Set.empty,
       mapDoc: Option[Column => Column] = None)
       : (DataFrame, Long) => Unit =
-    (df, id) => { applyBatch(root, df, id, excludeTypes, mapDoc = mapDoc); () }
+    (df, id) => { applyBatch(root, df, id, excludeTypes, mapDoc); () }
 
   private def swap(root: String, p: Pointer): Unit = {
     val tmp = Paths.get(root, "_CURRENT.tmp")

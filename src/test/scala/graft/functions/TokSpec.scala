@@ -132,6 +132,17 @@ class TokSpec extends AnyFunSuite with SparkSpec {
     assert(n.map(r => (r.getLong(0), r.getLong(1))).toSet == Set((2L, 2L)))
   }
 
+  test("a non-string input is rejected at analysis") {
+    import spark.implicits._
+    val d = Seq((1L, "a b")).toDF("doc", "t")
+    Seq[org.apache.spark.sql.Column](
+      Tok.tokensCol($"doc"), Tok.tokenCountsCol($"doc"), Tok.bigramsCol($"doc"),
+      Tok.sortedDistinctTokensCol($"doc", 4), Tok.orderedPairsCol($"doc"),
+      Tok.orderedPairsCol(array($"doc"))).foreach { c =>
+      intercept[org.apache.spark.sql.AnalysisException](d.select(c))
+    }
+  }
+
   test("interning table capacity: next pow2 >= 2n, fails fast past 2^29 tokens") {
     assert(Tok.tableCapacity(0) == 4)
     assert(Tok.tableCapacity(1) == 4)

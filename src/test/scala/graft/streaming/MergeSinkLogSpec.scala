@@ -42,6 +42,13 @@ class MergeSinkLogSpec extends SparkSpec {
   private def read(root: Path): Set[Row3] =
     rows(MergeSink.readState(spark, root.toString))
 
+  /** The rows of one delta version as (id, rev, doc, deleted), the rev
+    * of a tombstone left out. */
+  private def delta(root: Path, v: Long): Set[(String, String, String, Boolean)] =
+    spark.read.parquet(s"$root/v=$v")
+      .select($"id", when(!$"deleted", $"rev"), $"doc", $"deleted")
+      .as[(String, String, String, Boolean)].collect().toSet
+
   /** One seeded batch over ids d0..d7: inserts and updates of two doc
     * types ("a", and "log", the excluded one), deletes (absent ids
     * included), rev-equal echoes of stored rows, and repeated ids. */
@@ -76,14 +83,14 @@ class MergeSinkLogSpec extends SparkSpec {
       if (batches.size >= 2 && rnd.nextInt(4) == 0) {
         val before = MergeSink.currentVersion(root.toString)
         assert(!MergeSink.applyBatch(root.toString, batches(rnd.nextInt(id)),
-          rnd.nextInt(id).toLong, excludeTypes, 3, mapDoc))
+          rnd.nextInt(id).toLong, excludeTypes, mapDoc))
         assert(MergeSink.currentVersion(root.toString) == before)
       }
       val b = batchDf(genBatch(rnd, () => { seq += 1; seq }, ref))
       batches :+= b
       val v0 = MergeSink.currentVersion(root.toString).map(_._1)
       assert(MergeSink.applyBatch(root.toString, b, id.toLong,
-        excludeTypes, 3, mapDoc))
+        excludeTypes, mapDoc))
       val p = MergeSink.pointer(root.toString).get
       assert(p.batchId == id.toLong)
       // one new version, or two when the batch also compacted
@@ -91,8 +98,17 @@ class MergeSinkLogSpec extends SparkSpec {
       assert(rise == 1 || (rise == 2 && p.base == p.version), s"$v0 -> $p")
       maxPending = math.max(maxPending, (p.version - p.base).toInt)
       if (id > 0 && p.base == p.version) compactions += 1
+      val prev = ref
       ref = rows(ChangeApply.applyAll(stateDf(ref), Seq(b), excludeTypes, mapDoc))
       assert(read(root) == ref, s"seed $seed batch $id (pointer $p)")
+      // the delta holds exactly what changed: no rev-equal echo, delete
+      // of an absent id or excluded-type insert enters the log
+      v0.foreach { v =>
+        val upserts = (ref -- prev).map(r => (r._1, r._2, r._3, false))
+        val deletes = (prev.map(_._1) -- ref.map(_._1))
+          .map(d => (d, null: String, null: String, true))
+        assert(delta(root, v + 1) == upserts ++ deletes, s"seed $seed batch $id")
+      }
     }
     (maxPending, compactions)
   }
@@ -117,8 +133,15 @@ class MergeSinkLogSpec extends SparkSpec {
     (1L, "a", "1-a", false, """{"v":1}"""),
     (2L, "b", "1-b", false, """{"v":2}"""),
     (3L, "c", "1-c", false, """{"v":3}""")) ++ filler
-  private def first(root: Path): Boolean =
-    MergeSink.applyBatch(root.toString, batchDf(b0), 0, numPartitions = 4)
+  private def first(root: Path): Boolean = {
+    // a multi-file base: the batch's 4 shuffle partitions, uncoalesced
+    val conf = Map("spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+    val was = conf.keys.map(k => k -> spark.conf.get(k)).toMap
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try MergeSink.applyBatch(root.toString, batchDf(b0), 0)
+    finally was.foreach { case (k, v) => spark.conf.set(k, v) }
+  }
   private val b1 = Seq[Change](
     (4L, "a", "2-a", false, """{"v":11}"""),
     (5L, "b", "9-b", true, null),
@@ -150,6 +173,9 @@ class MergeSinkLogSpec extends SparkSpec {
     assert(MergeSink.applyBatch(root.toString, batchDf(b2), 2))
     assert(read(root) == after2)
     assert(MergeSink.currentVersion(root.toString) == Some((ptr.get._1 + 1, 2L)))
+    // of b2 only the update enters the delta: not the echo of a, not
+    // the delete of the absent e
+    assert(delta(root, ptr.get._1 + 1) == Set(("c", "2-c", """{"v":33}""", false)))
   }
 
   test("a two-token snapshot pointer opens and applies; the old window retires") {
