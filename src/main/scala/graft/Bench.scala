@@ -57,7 +57,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = SparkEntry.localCpus
     val warmup = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") != "0"
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

@@ -61,7 +61,7 @@ object CountCheck {
       sys.exit(3)
     }
     val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
+      .master(s"local[${SparkEntry.localCpus}]")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

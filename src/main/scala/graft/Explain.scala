@@ -12,7 +12,7 @@ object Explain {
     val sfDir = args.head
     val (timeOnly, names) =
       if (args(1) == "-t") (true, args.drop(2)) else (false, args.tail)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = SparkEntry.localCpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -26,8 +26,8 @@ object RepCrossCheck {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[${SparkEntry.localCpus}]")
+      .config("spark.sql.shuffle.partitions", SparkEntry.localCpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -12,6 +12,12 @@ import graft.queries.{JsonDoc, Pipeline, QueryDef, Relational}
   */
 object SparkEntry {
 
+  /** Local worker threads for the mains: `SPARK_GRAFT_CPUS`, else the
+    * machine's core count, so no default overcommits the box. */
+  def localCpus: String =
+    sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+
   /** Full catalog, in registration order. */
   def catalog: Seq[QueryDef] =
     Relational.entries ++ JsonDoc.entries ++ Pipeline.entries

@@ -13,17 +13,14 @@ import graft.streaming.{ChangesPipeline, MergeSink}
   * Yardstick (BASELINE.md): the reference syncs 63.8 k docs in 1 m 42 s
   * ≈ 625 docs/s with per-change SQL round-trips. Usage:
   *
-  *   runMain graft.StreamBench [nDocs] [maxPerTrigger] [flat|bucketed]
-  *                             [seedDocs] [file|http]
+  *   runMain graft.StreamBench [nDocs] [maxPerTrigger] [seedDocs] [file|http]
   *
-  * The two CDC state stores: `flat` (default) is [[MergeSink]] (an
-  * O(batch) delta per batch, compacted by its size rule); `bucketed`
-  * is [[graft.streaming.BucketedMergeSink]] (per-batch cost O(touched
-  * buckets)).
-  * Optional 4th arg seeds the store with that many docs FIRST (untimed),
+  * The store is [[MergeSink]] (an O(batch) delta per batch, compacted by
+  * its size rule). `maxPerTrigger` 0 means no admission cap (one batch).
+  * Optional 3rd arg seeds the store with that many docs FIRST (untimed),
   * so the timed phase measures incremental tail ingest against a large
-  * resident state — the regime where bucketing pays.
-  * 5th arg `http` serves the tail through [[graft.streaming.CouchStubServer]]
+  * resident state.
+  * 4th arg `http` serves the tail through [[graft.streaming.CouchStubServer]]
   * and ingests it with the real [[graft.streaming.HttpChangesFeed]]
   * client (paged GETs, seq-range partitions) — the S1-over-HTTP
   * throughput number.
@@ -34,13 +31,9 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(63840)
     val maxPerTrigger = args.lift(1).map(_.toLong).filter(_ > 0)
-    val sinkKind = args.lift(2).getOrElse("flat")
-    require(sinkKind == "flat" || sinkKind == "bucketed",
-      s"sink must be flat or bucketed, got $sinkKind")
-    val bucketed = sinkKind == "bucketed"
-    val seedDocs = args.lift(3).map(_.toInt).getOrElse(0)
-    val transport = args.lift(4).getOrElse("file")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val seedDocs = args.lift(2).map(_.toInt).getOrElse(0)
+    val transport = args.lift(3).getOrElse("file")
+    val cpus = SparkEntry.localCpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -67,10 +60,6 @@ object StreamBench {
     val store = dir.resolve("store").toString
     val ckpt = dir.resolve("ckpt").toString
 
-    val sinkFn: (org.apache.spark.sql.DataFrame, Long) => Unit =
-      if (bucketed) graft.streaming.BucketedMergeSink.forBatch(store, buckets = 64)
-      else MergeSink.forBatch(store)
-
     def runPipeline(name: String, cap: Option[Long], path: String): Unit = {
       var reader = spark.readStream.format("couch-changes")
       if (path.startsWith("http://")) {
@@ -85,7 +74,7 @@ object StreamBench {
         .queryName(name)
         .option("checkpointLocation", ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch(sinkFn)
+        .foreachBatch(MergeSink.forBatch(store))
         .start()
       q.awaitTermination()
     }
@@ -111,15 +100,9 @@ object StreamBench {
     runPipeline("stream-bench", maxPerTrigger, tailPath)
     val sec = (System.nanoTime() - t0) / 1e9
     if (stub != null) stub.stop()
-    val (live, batches) =
-      if (bucketed) (
-        graft.streaming.BucketedMergeSink.readState(spark, store).count(),
-        graft.streaming.BucketedMergeSink.readManifest(store)
-          .map(_.batchId + 1).getOrElse(0L))
-      else (
-        MergeSink.readState(spark, store).count(),
-        MergeSink.currentVersion(store).map(_._2 + 1).getOrElse(0L))
-    println(f"""{"metric":"stream_ingest","sink":"$sinkKind","docs":$n,"sec":$sec%.2f,"docs_per_sec":${n / sec}%.0f,"live_docs":$live,"batches":$batches}""")
+    val live = MergeSink.readState(spark, store).count()
+    val batches = MergeSink.currentVersion(store).map(_._2 + 1).getOrElse(0L)
+    println(f"""{"metric":"stream_ingest","docs":$n,"sec":$sec%.2f,"docs_per_sec":${n / sec}%.0f,"live_docs":$live,"batches":$batches}""")
     spark.stop()
   }
 }

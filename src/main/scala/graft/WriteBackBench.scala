@@ -26,7 +26,7 @@ object WriteBackBench {
     val n = args.headOption.map(_.toInt).getOrElse(63840)
     val mode = args.lift(1).getOrElse("bulk")
     val chunkSize = args.lift(2).map(_.toInt).getOrElse(50)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = SparkEntry.localCpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -22,7 +22,6 @@ object GateKeys {
   val byQuery: Map[String, String] = Map(
     "j19_streaming_replay" -> "j19gate-v1",
     "j21_writeback_roundtrip" -> "j21gate-v2",
-    "j24_bucketed_store" -> "j24gate-v1",
     "j25_deltalog_store" -> "j25gate-v2",
     "j26_multi_feed_union" -> "j26gate-v1",
     "j29_ingest_filter_map" -> "j29gate-v1",
@@ -34,7 +33,7 @@ object GateKeys {
     "j36_single_put_roundtrip" -> "j36gate-v1",
     "j37_bootstrap" -> "j37gate-v1",
     "j42_repopulate" -> "j42repop-v2",
-    "j43_streaming_dsir_features" -> "j43dsir-v1",
+    "j43_streaming_dsir_features" -> "j43dsir-v2",
     "j20_streaming_index" -> "j20idx-c1",
     "j27_streaming_ann_index" -> s"j27annidx-p$j27Planes-c1",
     "j28_streaming_lsh_dedup" -> "j28lsh-v2",

@@ -85,15 +85,15 @@ object JsonDoc {
       .orderBy(order: _*)
   }
 
-  /** The replay `_changes` feed j19/j24/j25 share: per doc an insert,
+  /** The replay `_changes` feed j19/j25 share: per doc an insert,
     * an update for doc_id%3==0, a delete for doc_id%7==0 — with
     * multi-rev conflict-branch lines (style=all_docs winning-rev
     * semantics, see j19's entry comment). Synthesized DISTRIBUTED
     * (to_json + write.text, no driver collect) once per corpus into the
     * content-keyed artifact cache: the feed is a pure function of the
-    * documents table, and the three store gates (j19/j24/j25) must
-    * replay the SAME bytes against the SAME oracle — that sameness IS
-    * the gate. */
+    * documents table, and the two store gates (j19/j25) must replay
+    * the SAME bytes against the SAME oracle — that sameness IS the
+    * gate. */
   private def stagedReplayFeed(
       s: org.apache.spark.sql.SparkSession, dir: String,
       typed: Boolean = false, limitDocs: Option[Long] = None,
@@ -738,35 +738,6 @@ object JsonDoc {
       Some(replayOracle),
       "full streaming plane: DSv2 changes source -> checkpoint -> rev-guarded merge, final store hash-matched"),
 
-    // ---- The other state store under the same gate: the 100 TB
-    // production regime is high-rate small batches over large state,
-    // which both stores meet with O(batch)-ish writes — MergeSink (the
-    // default) as a size-compacted delta log, BucketedMergeSink as hash
-    // buckets. j24 replays j19's EXACT feed through BucketedMergeSink
-    // (O(touched buckets) write amplification, per-bucket versioned
-    // parquet + atomic manifest swap) and must converge on the SAME
-    // oracle — the write-amplification spectrum is a storage-layout
-    // trade-off, never a semantics change. Reference behavior being
-    // reproduced at scale: lib/index.js:96-181 per-change upserts.
-    QueryDef(
-      "j24_bucketed_store",
-      (s, dir) => {
-        import s.implicits._
-        replayThrough(s, dir, "j24") { (base, feed, cap) =>
-          val store = base.resolve("store").toString
-          graft.streaming.ChangesPipeline.runOnceWith(s, feed,
-            base.resolve("ckpt").toString,
-            name = s"j24-${java.util.UUID.randomUUID()}",
-            sink = graft.streaming.BucketedMergeSink.forBatch(store, buckets = 8),
-            maxChangesPerTrigger = cap)
-          graft.streaming.BucketedMergeSink.readState(s, store)
-            .select($"id", $"rev", $"doc")
-            .orderBy($"id")
-        }
-      },
-      Some(replayOracle),
-      "scale-safe CDC store #1: j19's feed through the hash-bucketed merge sink (O(touched buckets) per batch), same oracle"),
-
     // ---- j25: MergeSink's mid-stream compaction under the gate. j19
     // replays the same feed through the same store in ~3 batches, where
     // the size rule (log >= 2x base weight) need not fire (at sf0.01 it
@@ -800,7 +771,7 @@ object JsonDoc {
         }
       },
       Some(replayOracle),
-      "scale-safe CDC store #2: j19's feed through MergeSink's delta log with a mid-stream size-ruled compaction, same oracle"),
+      "CDC store compaction gated: j19's feed through MergeSink's delta log with a mid-stream size-ruled compaction, same oracle"),
 
     // ---- P8 + P9 under the gate: the j19 replay with the reference's
     // two ingest-side hooks active. excludeTypes (lib/index.js:131-146):
@@ -1207,8 +1178,7 @@ object JsonDoc {
     // float vector as a JSON array), replayed through the DSv2 source →
     // checkpoint → AnnIndexSink in admission-controlled micro-batches —
     // each batch lands ONLY in the bucket partitions its keys sign-hash
-    // into, every other directory untouched (the BucketedMergeSink idea
-    // applied to the vector store). The probe then runs p8b's EXACT
+    // into, every other directory untouched. The probe then runs p8b's EXACT
     // query against the stream-built layout and must hash-match p8b's
     // unchanged oracle: a probe cannot tell which writer (batch or
     // stream) produced the index. Float fidelity note: JSON float text
@@ -2373,10 +2343,11 @@ object JsonDoc {
     // DsirFeatureSink: per micro-batch, rev-guarded winners get their
     // feature rows recomputed by the SAME dsirFeatures expressions the
     // batch builder uses, deletes drop rows, rev-equal echoes keep
-    // stored rows untouched — O(touched buckets) per batch. The builder
-    // REQUIRES the streamed table equals the batch build over the
-    // converged doc states (EXCEPT ALL both ways), and the oracle
-    // re-derives it independently from the source table.
+    // stored rows untouched — one MergeSink row per doc, so each batch
+    // writes an O(batch) delta. The builder REQUIRES the streamed table
+    // equals the batch build over the converged doc states (EXCEPT ALL
+    // both ways), and the oracle re-derives it independently from the
+    // source table.
     QueryDef(
       "j43_streaming_dsir_features",
       (s, dir) => {
@@ -2388,7 +2359,7 @@ object JsonDoc {
             base.resolve("ckpt").toString,
             name = s"j43-${java.util.UUID.randomUUID()}",
             sink = graft.streaming.DsirFeatureSink.forBatch(
-              store, buckets = 8, nBuckets = 64),
+              store, nBuckets = 64),
             maxChangesPerTrigger = cap)
           val streamed = graft.streaming.DsirFeatureSink
             .readFeatures(s, store)
@@ -2421,7 +2392,7 @@ object JsonDoc {
              |SELECT doc_id, is_t, b, CAST(COUNT(*) AS BIGINT) AS n
              |FROM bt GROUP BY doc_id, is_t, b
              |ORDER BY doc_id, b""".stripMargin),
-      "ingest-maintained DSIR feature table: CDC replay through the bucketed feature sink == batch build == oracle, hash-exact")
+      "ingest-maintained DSIR feature table: CDC replay through the MergeSink-backed feature sink == batch build == oracle, hash-exact")
   )
 
   /** A growable window over a staged feed: the stub serves only the

@@ -10,11 +10,11 @@ import org.apache.spark.sql.functions._
 
 import graft.pipeline.Similarity
 
-/** Streaming maintenance for the persisted ANN indexes — the
-  * [[BucketedMergeSink]] idea applied to `Similarity.writeBucketedCorpus`
-  * (`bucket=` sign-LSH layout) and the IVF `cell=` layout: a micro-batch
-  * of NEW vectors lands in exactly the partitions its keys hash/assign
-  * into; every other partition directory is untouched, byte for byte.
+/** Streaming maintenance for the persisted ANN indexes —
+  * `Similarity.writeBucketedCorpus` (`bucket=` sign-LSH layout) and the
+  * IVF `cell=` layout: a micro-batch of NEW vectors lands in exactly the
+  * partitions its keys hash/assign into; every other partition
+  * directory is untouched, byte for byte.
   *
   * Per batch:
   *  1. project the batch into the index row shape (id, quantized
@@ -30,7 +30,7 @@ import graft.pipeline.Similarity
   *
   * Idempotence: a batchId in the log is a NOOP; a crash between step 3
   * and 4 replays into identical file names — the commit is effectively
-  * the last rename, like the manifest swap in [[BucketedMergeSink]].
+  * the last rename, like the `_CURRENT` swap in [[MergeSink]].
   * Vectors are treated as append-only (ids are new) — the standard
   * embedding-store contract; re-keying an existing id needs a bucket
   * rewrite, which is the batch writer's job.

@@ -81,11 +81,9 @@ object ChangesPipeline {
       since, maxChangesPerTrigger, trigger)
 
   /** The store-agnostic core of [[start]]: source + checkpoint plane
-    * wired to ANY foreachBatch sink. The two state stores share one
-    * contract — a replayed batchId is a NOOP — so the same feed drives
-    * [[MergeSink]] (O(batch) delta, size-ruled compaction) or
-    * [[BucketedMergeSink]] (O(touched buckets)) unchanged; which one is
-    * right is a write-amplification trade-off, not a semantics choice. */
+    * wired to ANY foreachBatch sink whose contract is that a replayed
+    * batchId is a NOOP — [[MergeSink]] itself, or a sink that writes
+    * through it ([[DsirFeatureSink]]). */
   def startWith(
       spark: SparkSession,
       feedPath: String,

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StructType}
 
 import graft.cdc.ChangeApply
 import graft.pipeline.Vocab
@@ -14,21 +15,17 @@ import graft.pipeline.Vocab
   * (p87c/p87d) score a standing table that never lags the corpus and
   * never re-reads text.
   *
-  * Storage is [[BucketedMergeSink.applyBucketed]] — the same versioned
-  * hash-bucket manifest as the document store, so a micro-batch
-  * rewrites only the buckets its doc ids hash into (O(touched buckets),
-  * not O(state)) and a replayed batchId is a NOOP. Per batch:
-  *
-  *   1. [[ChangeApply.planActions]] against the touched buckets'
-  *      current (id, rev) pairs decides each id the reference's way:
-  *      INSERT/UPDATE (batch rev wins) -> recompute the doc's feature
-  *      rows from the incoming payload; NOOP (rev-equal echo) -> keep
-  *      the stored rows untouched (zero recompute on replay); DELETE ->
-  *      drop the doc's rows.
-  *   2. Feature rows for the winners come from the SAME
-  *      [[Vocab.dsirFeatures]] expressions the batch builder uses —
-  *      the bucket id is a pure content hash (md5 of the token), no
-  *      corpus-global state, so incremental == batch bit-for-bit.
+  * Storage is a [[MergeSink]] store with one row per doc:
+  * (id, rev, doc = the doc's feature rows as a JSON array of
+  * {is_t, b, n}). Per batch, the changes collapse to the latest per id
+  * ([[ChangeApply.latestPerKey]]); each live row's features come from
+  * the SAME [[Vocab.dsirFeatures]] expressions the batch builder uses —
+  * the bucket id is a pure content hash (md5 of the token), no
+  * corpus-global state, so incremental == batch bit-for-bit — and
+  * deleted rows carry a null doc. [[MergeSink.applyBatch]] then applies
+  * them: its rev guard drops rev-equal echoes (the stored features
+  * stay), deletes become tombstones, a replayed batchId is a NOOP, and
+  * its size rule compacts the log.
   *
   * The j43 gate REQUIRES exactly that: after replaying the shared CDC
   * feed, the stream-maintained table must equal the batch-built table
@@ -37,62 +34,53 @@ import graft.pipeline.Vocab
   */
 object DsirFeatureSink {
 
-  /** Feature-store row schema: the doc's rev rides along so the next
-    * batch can rev-guard without a document store lookup. */
-  val featureSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType.fromDDL(
-      "id STRING, rev STRING, is_t BOOLEAN, b BIGINT, n BIGINT")
+  /** The JSON shape of one doc's stored feature rows. */
+  private val featuresType =
+    ArrayType(StructType.fromDDL("is_t BOOLEAN, b BIGINT, n BIGINT"))
 
   /** The stream-maintained feature table: (id, is_t, b, n). */
   def readFeatures(spark: SparkSession, root: String): DataFrame =
-    BucketedMergeSink.readStateAs(spark, root, featureSchema)
-      .select(col("id"), col("is_t"), col("b"), col("n"))
+    MergeSink.readState(spark, root)
+      .select(col("id"), explode(from_json(col("doc"), featuresType)).as("f"))
+      .select(col("id"), col("f.is_t").as("is_t"), col("f.b").as("b"),
+        col("f.n").as("n"))
 
   /** Merge one micro-batch of changes (seq, id, rev, deleted, doc) into
     * the feature store at `root`. `textPath` extracts the document text
     * from the JSON payload; `isTarget` is the target-distribution
     * predicate over the extracted frame (columns `id`, `rev`, `text`,
-    * plus `doc` with the raw JSON). Returns touched bucket ids. */
+    * plus `doc` with the raw JSON). Returns true if the batch was
+    * applied, false for a replayed batchId. */
   def applyBatch(
       root: String, batch: DataFrame, batchId: Long,
-      buckets: Int = 16, nBuckets: Int = 64,
+      nBuckets: Int = 64,
       textPath: String = "$.text",
       isTarget: Column = get_json_object(col("doc"), "$.lang") === "en")
-      : Seq[Int] =
-    BucketedMergeSink.applyBucketed(
-      root, batch, batchId, buckets, featureSchema) { (state, b) =>
-      // rev-guard against the feature rows' own (id, rev) — one pair
-      // per stored doc; the placeholder doc column is never read back
-      // (NOOP ids keep their stored feature rows, not s_doc)
-      val stateDocs = state.select(col("id"), col("rev")).distinct()
-        .withColumn("doc", lit(null).cast("string"))
-      val plan = ChangeApply.planActions(stateDocs, b)
-      val winners = plan
-        .where(col("action").isin("INSERT", "UPDATE"))
-        .select(col("id"), col("c_rev").as("rev"), col("c_doc").as("doc"))
-      val extracted = winners.select(col("id"), col("rev"), col("doc"),
+      : Boolean = {
+    val latest = ChangeApply.latestPerKey(batch)
+    val live = latest.where(!col("deleted"))
+      .select(col("id"), col("rev"), col("doc"),
         get_json_object(col("doc"), textPath).as("text"))
-        .withColumn("is_t", isTarget)
-      val fresh = Vocab
-        .dsirFeatures(extracted, "id", "text", col("is_t"), nBuckets)
-        .withColumnRenamed("doc", "id")
-        .join(extracted.select(col("id"), col("rev")), "id")
-        .select(col("id"), col("rev"), col("is_t"), col("b"), col("n"))
-      // keep rows only for ids the batch did not win or delete
-      val dropped = plan
-        .where(col("action").isin("INSERT", "UPDATE", "DELETE"))
-        .select(col("id"))
-      state.join(dropped, Seq("id"), "left_anti").unionByName(fresh)
-    }
+      .withColumn("is_t", isTarget)
+    val features = Vocab.dsirFeatures(live, "id", "text", col("is_t"), nBuckets)
+      .groupBy(col("doc").as("id"))
+      .agg(to_json(collect_list(struct(col("is_t"), col("b"), col("n"))))
+        .as("features"))
+    MergeSink.applyBatch(root,
+      latest.join(features, Seq("id"), "left_outer")
+        .select(col("seq"), col("id"), col("rev"), col("deleted"),
+          col("features").as("doc")),
+      batchId)
+  }
 
   /** foreachBatch hook. */
   def forBatch(
-      root: String, buckets: Int = 16, nBuckets: Int = 64,
+      root: String, nBuckets: Int = 64,
       textPath: String = "$.text",
       isTarget: Column = get_json_object(col("doc"), "$.lang") === "en")
       : (DataFrame, Long) => Unit =
     (df, id) => {
-      applyBatch(root, df, id, buckets, nBuckets, textPath, isTarget)
+      applyBatch(root, df, id, nBuckets, textPath, isTarget)
       ()
     }
 }

@@ -78,8 +78,8 @@ import graft.cdc.ChangeApply
   * ("n batchId", the snapshot layout) reads as base n with no deltas.
   *
   * SCALE: the batch's key set and the log's key set are broadcast. A log
-  * too large to broadcast is the point to bucket the base by `id`
-  * ([[BucketedMergeSink]]'s layout), making the anti-join co-partitioned.
+  * too large to broadcast is the point to write the base bucketed by
+  * `id`, making the anti-join co-partitioned.
   */
 object MergeSink {
 
