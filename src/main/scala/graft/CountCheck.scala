@@ -12,8 +12,9 @@ import graft.streaming.{FeedConn, MergeSink}
   * Usage:
   *   runMain graft.CountCheck [--threshold N] <feed>=<storeRoot> ...
   *
-  * `feed` is a JSONL path or an `http(s)://host:port/db` URL (the
-  * nagios script's couch host). Exit codes are nagios-standard:
+  * `feed` is a JSONL path or an `http(s)://[user:pass@]host:port/db` URL
+  * (the nagios script's couch host; credentials become basic auth, as
+  * for the streaming source). Exit codes are nagios-standard:
   * 0 = OK, 1 = WARNING (any mismatch), 2 = ERROR (difference >
   * threshold, default 10 like the script's `difference_threashold`).
   */
@@ -24,12 +25,7 @@ object CountCheck {
   }
 
   def check(spark: SparkSession, feed: String, storeRoot: String): Result = {
-    val conn =
-      if (feed.startsWith("http://") || feed.startsWith("https://")) {
-        val cut = feed.lastIndexOf('/')
-        FeedConn(None, Some(feed.substring(0, cut)),
-          Some(feed.substring(cut + 1)), None, None, 1000, 30000L)
-      } else FeedConn(Some(feed), None, None, None, None, 1000, 30000L)
+    val conn = FeedConn.fromOptions(FeedConn.feedOptions(feed).get)
     Result(feed,
       conn.open().liveDocCount(),
       MergeSink.readState(spark, storeRoot).count())

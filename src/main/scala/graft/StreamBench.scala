@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 
-import graft.streaming.{ChangesPipeline, MergeSink}
+import graft.streaming.{FeedConn, MergeSink}
 
 /** End-to-end CDC ingest benchmark: JSONL `_changes` feed → DataSource
   * V2 source → micro-batches → rev-guarded merge → doc store, through
@@ -62,12 +62,8 @@ object StreamBench {
 
     def runPipeline(name: String, cap: Option[Long], path: String): Unit = {
       var reader = spark.readStream.format("couch-changes")
-      if (path.startsWith("http://")) {
-        val cut = path.lastIndexOf('/')
-        reader = reader.option("url", path.substring(0, cut))
-          .option("db", path.substring(cut + 1))
-          .option("numPartitions", cpus)
-      } else reader = reader.option("path", path)
+        .options(FeedConn.feedOptions(path))
+      if (path.startsWith("http://")) reader = reader.option("numPartitions", cpus)
       cap.foreach(m =>
         reader = reader.option("maxChangesPerTrigger", m.toString))
       val q = reader.load().writeStream

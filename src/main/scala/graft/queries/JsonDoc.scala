@@ -187,7 +187,7 @@ object JsonDoc {
       val feed = stagedReplayFeed(s, dir, typed, limitDocs, withText)
       val base = java.nio.file.Files.createTempDirectory(tag)
       val nLines = new graft.streaming.FileChangesFeed(feed)
-        .latestSeq() / 3 // upper bound is fine for the admission cap
+        .latest().ord / 3 // upper bound is fine for the admission cap
       // admission cap scales with the corpus so the replay is always
       // ~3 admission-controlled micro-batches, at any SF (a fixed cap
       // would mean O(corpus) trigger overhead at bench scale). minCap

@@ -13,62 +13,43 @@ import graft.cdc.ChangeEvent
   * (reference lib/index.js:50-53, 243-290: `follow.Feed({db,
   * include_docs:true})`, resume from `since`, 30 s inactivity timeout).
   * In the Spark source the same contract becomes a pull API keyed by the
-  * monotonic `seq`: "give me changes with seq in (since, until]" — which
-  * is exactly what a micro-batch needs and what CouchDB's
-  * `_changes?since=N&limit=M` endpoint serves.
+  * monotonic `seq`: the driver asks a feed for its high-water mark
+  * ([[latest]]) and for the admission-control cap ([[nthAfter]]); the
+  * executors read the changes in (since, until] themselves. Every seq is
+  * a [[SeqTok]]: a numeric (1.x, file) seq is `SeqTok(n, None)`, a
+  * CouchDB 2/3 seq carries its opaque resume token.
   *
   * Implementations:
   *  - [[FileChangesFeed]] — JSONL file(s) on disk; deterministic test /
   *    replay feed (one line per change, the wire shape FIXTURES.md §1).
-  *    Splittable by byte range, so a large feed file parses in parallel
-  *    across partition readers instead of once per reader.
+  *    Partitions read byte slices ([[ChangesFeed.readSlice]]), so a
+  *    large feed file parses in parallel across partition readers
+  *    instead of once per reader.
   *  - [[HttpChangesFeed]] — the real client: `GET
   *    /db/_changes?include_docs=true&since=N&limit=M` with basic auth
   *    and an inactivity timeout (reference lib/index.js:243-290),
-  *    exercised against a local stub server (zero-egress).
+  *    exercised against a local stub server (zero-egress). Its range
+  *    read [[HttpChangesFeed.changes]] is what HTTP partitions call.
   */
 trait ChangesFeed extends Serializable {
-  /** Highest seq currently available (the feed's `last_seq`). */
-  def latestSeq(): Long
+  /** Highest seq currently available (the feed's `update_seq`), with
+    * its resume token on an opaque-seq feed. */
+  def latest(): SeqTok
 
-  /** Changes with `seq` in (since, until], ordered by seq. */
-  def changes(since: Long, until: Long): Iterator[ChangeEvent]
-
-  // ---- Opaque-seq (CouchDB 2/3) variants. A modern CouchDB emits seqs
-  // as `"N-base64blob"` strings: the numeric prefix is the monotone
-  // ordinal the range logic keys on, but RESUME requires the full token
-  // (`since=<prefix>` is not a valid 2/3 cursor). Numeric feeds (1.x,
-  // file replays) inherit these defaults — ordinals only, no tokens.
-
-  /** Highest seq with its resume token (None on numeric feeds). */
-  def latestSeqTok(): SeqTok = SeqTok(latestSeq(), None)
-
-  /** Token-aware admission control: the nth change after `since`,
-    * ordinal-capped at `capOrd`, with its full resume token. */
-  def nthSeqTokAfter(since: SeqTok, n: Long, capOrd: Long): SeqTok =
-    SeqTok(nthSeqAfter(since.ord, n, capOrd), None)
-
-  /** Changes strictly after `since` up to and including `until` —
-    * token-exact when tokens are present (the server resumes after
-    * since's exact token; the iterator stops at until's exact token),
-    * ordinal-range otherwise. */
-  def changesTok(since: SeqTok, until: SeqTok): Iterator[ChangeEvent] =
-    changes(since.ord, until.ord)
+  /** Admission control (T2): the `n`th change after `since`, not past
+    * ordinal `capOrd` — i.e. the end offset that admits at most `n`
+    * changes into the batch, with its full resume token. Returns the
+    * highest available seq in (since, capOrd] when fewer than `n`
+    * exist, and `since` when none do. Deliberately NOT "all seqs after
+    * X": the driver must never materialize the feed tail (O(feed) heap
+    * per trigger at a 100 M-change feed). */
+  def nthAfter(since: SeqTok, n: Long, capOrd: Long): SeqTok
 
   /** Current live (non-deleted) document count — CouchDB's `doc_count`.
     * Feeds that can't answer cheaply may compute it; the ops
     * count-consistency check ([[graft.CountCheck]]) is the only
     * caller. */
   def liveDocCount(): Long
-
-  /** Admission control (T2): the seq of the `n`th change after `since`,
-    * not exceeding `cap` — i.e. the end offset that admits at most `n`
-    * changes into the batch. Returns the highest available seq in
-    * (since, cap] when fewer than `n` exist, and `since` when none do.
-    * Deliberately NOT "all seqs after X": the driver must never
-    * materialize the feed tail (O(feed) heap per trigger at a
-    * 100 M-change feed). */
-  def nthSeqAfter(since: Long, n: Long, cap: Long): Long
 }
 
 /** A CouchDB sequence cursor: the monotone numeric ordinal plus — for
@@ -209,7 +190,7 @@ object ChangesFeed {
   *
   * SCALE: the driver keeps only a per-file summary (minSeq, maxSeq,
   * count) — O(files) heap, built in one streaming pass and memoized per
-  * (path, mtime, size). Admission control ([[nthSeqAfter]]) resolves
+  * (path, mtime, size). Admission control ([[nthAfter]]) resolves
   * cumulative counts from summaries and scans ONLY the one boundary
   * file whose range straddles the answer; a 638 M-change feed costs the
   * driver a few dozen summary records, not ~5 GB of materialized seqs. */
@@ -255,10 +236,9 @@ final class FileChangesFeed(val path: String) extends ChangesFeed {
     finally src.close()
   }
 
-  override def latestSeq(): Long = {
+  override def latest(): SeqTok = {
     val fs = files()
-    if (fs.isEmpty) 0L
-    else fs.map(f => summaryOf(f).maxSeq).max
+    SeqTok(if (fs.isEmpty) 0L else fs.map(f => summaryOf(f).maxSeq).max, None)
   }
 
   /** Replay latest-per-id over the files (streaming fold, O(ids) map —
@@ -276,18 +256,15 @@ final class FileChangesFeed(val path: String) extends ChangesFeed {
     last.valuesIterator.count(!_._2)
   }
 
-  override def changes(since: Long, until: Long): Iterator[ChangeEvent] =
-    files().iterator.flatMap(f =>
-      ChangesFeed.readSlice(f.getPath, 0L, Long.MaxValue))
-      .filter(e => e.seq > since && e.seq <= until)
-      .toVector.sortBy(_.seq).iterator
-
   /** Files are assumed seq-disjoint (rotated feed logs are; CouchDB
     * seqs are assigned monotonically). Overlapping files still give a
     * correct cap — counts stay exact per file — but the admitted batch
     * may land slightly off `n` inside the overlap window, which is fine:
     * ReadMaxRows is best-effort admission control, not a hard contract. */
-  override def nthSeqAfter(since: Long, n: Long, cap: Long): Long = {
+  override def nthAfter(since: SeqTok, n: Long, capOrd: Long): SeqTok =
+    SeqTok(nthOrdAfter(since.ord, n, capOrd), None)
+
+  private def nthOrdAfter(since: Long, n: Long, cap: Long): Long = {
     if (n <= 0) return since
     val fs = files()
       .map(f => f -> summaryOf(f))

@@ -17,11 +17,14 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   *   GET      /{db}/{docid}    -> 200 stored doc | 404 (stateful mode)
   *   POST     /{db}/_bulk_docs -> 201 [] (accepted, counted)
   *   PUT/POST /{db}/{docid}    -> 201 {"ok":true,...}
-  * with since/limit paging. `lines(i)` must be the change object with
-  * seq == i+1 (dense seqs), so a page is an array slice — O(1) lookup,
-  * no server-side JSON parsing. Writes are swallowed after counting
-  * (request tallies + body bytes via [[writeStats]]) — the point is to
-  * exercise the real HTTP write path end-to-end, not to store.
+  * `_changes` is the normal (buffered) feed with since/limit paging —
+  * the one mode the client speaks; `since` is a bare number, or with
+  * [[opaqueSeqs]] a full `"N-blob"` token. `lines(i)` must be the
+  * change object with seq == i+1 (dense seqs), so a page is an array
+  * slice — O(1) lookup, no server-side JSON parsing. Writes are
+  * swallowed after counting (request tallies + body bytes via
+  * [[writeStats]]) — the point is to exercise the real HTTP write path
+  * end-to-end, not to store.
   *
   * CONFORMANCE FAULTS (round-4 task 3 — the day-one realities of a real
   * CouchDB deployment, emulated so the client paths are provably
@@ -30,6 +33,8 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   * [[slowMs]] delays every response (slow-drip feed — trips the
   * client's inactivity timeout); [[dropChangesRequest]] truncates one
   * `_changes` response mid-body (socket cut mid-batch);
+  * [[requireAuth]] answers 401 to any request without the right basic
+  * credentials (`require_valid_user`);
   * [[conflictIds]] makes `_bulk_docs` return the documented per-doc
   * result array with `"error":"conflict"` entries (README.md:504-530 —
   * modern CouchDB ignores `all_or_nothing` and reports conflicts per
@@ -253,7 +258,7 @@ final class CouchStubServer(
       Option(ex.getRequestHeaders.getFirst("Authorization")).contains(expect)
   }
 
-  /** 401 short-circuit shared by the buffered and continuous paths. */
+  /** 401 short-circuit ahead of every other fault and endpoint. */
   private def maybeReject(ex: HttpExchange): Boolean = {
     if (authorized(ex)) return false
     unauthorized.increment()
@@ -266,6 +271,7 @@ final class CouchStubServer(
     ex.close()
     true
   }
+
   /** CouchDB 2/3 emulation: emit seqs as opaque `"N-<blob>"` strings
     * (and `update_seq`/`last_seq` likewise), and require `since=` to be
     * either 0 or a full token — a bare interior ordinal is REJECTED
@@ -274,8 +280,6 @@ final class CouchStubServer(
   private val changesSeen = new java.util.concurrent.atomic.AtomicLong
   /** `since` parameter of every `_changes` request, in arrival order. */
   val changesSinceLog = new java.util.concurrent.ConcurrentLinkedQueue[Long]
-  /** Raw `since` strings, for asserting full-token resumes. */
-  val changesSinceRaw = new java.util.concurrent.ConcurrentLinkedQueue[String]
 
   /** (bulk _bulk_docs requests, single-doc puts, request-body bytes). */
   def writeStats: (Long, Long, Long) =
@@ -318,17 +322,13 @@ final class CouchStubServer(
         .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }.toMap
       val method = ex.getRequestMethod
       if (slowMs > 0L) Thread.sleep(slowMs)
-      if (maybeReject(ex)) ()
-      else if (maybeServeContinuous(ex, path, params)) ()
-      else serveBuffered(ex, path, params, method)
+      if (!maybeReject(ex)) serve(ex, path, params, method)
     })
     server.start()
     server.getAddress.getPort
   }
 
-  /** The original buffered request/response path (everything except
-    * `feed=continuous`). */
-  private def serveBuffered(
+  private def serve(
       ex: HttpExchange, path: String,
       params: Map[String, String], method: String): Unit = {
       val body: (Int, String) =
@@ -410,7 +410,6 @@ final class CouchStubServer(
           }
         } else if (path == s"/$db/_changes") {
           val sinceRaw = params.getOrElse("since", "0")
-          changesSinceRaw.add(sinceRaw)
           val sinceParsed: Option[Long] =
             if (!opaqueSeqs) Some(sinceRaw.toLong)
             else if (sinceRaw == "0" || sinceRaw == "now") Some(0L)
@@ -430,21 +429,13 @@ final class CouchStubServer(
               val ls = allLines
               val limit =
                 params.getOrElse("limit", Int.MaxValue.toString).toLong
-              val longpoll = params.get("feed").contains("longpoll")
-              if (longpoll && since >= ls.length.toLong)
-                // static change list: nothing will arrive — hold for the
-                // (bounded) timeout as a real server would, then answer
-                // empty. Heartbeats accumulate as leading newlines.
-                Thread.sleep(math.min(
-                  params.getOrElse("timeout", "1000").toLong, 1000L))
               val from =
                 math.min(math.max(since, 0L), ls.length.toLong).toInt
               val until = math.min(from + math.min(limit, Int.MaxValue.toLong),
                 ls.length.toLong).toInt
               val page = ls.slice(from, until).map(seqify)
               val last = if (until > from) until.toLong else since
-              val hb = if (longpoll) "\n\n\n" else ""
-              (200, hb + page.mkString("""{"results":[""", ",",
+              (200, page.mkString("""{"results":[""", ",",
                 s"""],"last_seq":${seqLit(last)}}"""))
           }
         } else if (path == s"/$db") {
@@ -471,81 +462,6 @@ final class CouchStubServer(
         ex.getResponseBody.write(bytes)
         ex.close()
       }
-  }
-
-  /** `feed=continuous` — the reference's socket mode (follow.Feed,
-    * lib/index.js:243-290): every change after `since` streams as one
-    * line of JSON over a chunked response, the connection is then held
-    * open emitting heartbeat BLANK lines until the server `timeout`
-    * elapses, and a `{"last_seq":N}` trailer line closes the feed —
-    * the documented continuous format. [[dropChangesRequest]] cuts the
-    * stream after half the changes with no trailer (socket drop
-    * mid-feed); the client must resume from the last consumed seq. */
-  private def maybeServeContinuous(
-      ex: HttpExchange, path: String,
-      params: Map[String, String]): Boolean = {
-    if (path != s"/$db/_changes" ||
-        !params.get("feed").contains("continuous")) return false
-    // the fault knobs apply exactly as on the buffered path
-    if (reqCount.incrementAndGet() <= rateLimitFirst) {
-      rateLimited.increment()
-      ex.getRequestBody.readAllBytes()
-      ex.getResponseHeaders.add("Retry-After", "0")
-      val b = """{"error":"too_many_requests","reason":"backoff"}"""
-        .getBytes("UTF-8")
-      ex.sendResponseHeaders(429, b.length)
-      ex.getResponseBody.write(b); ex.close()
-      return true
-    }
-    val sinceRaw = params.getOrElse("since", "0")
-    changesSinceRaw.add(sinceRaw)
-    val sinceParsed: Option[Long] =
-      if (sinceRaw == "0" || sinceRaw == "now") Some(0L)
-      else {
-        val i = sinceRaw.indexOf('-')
-        if (i > 0 && sinceRaw.substring(0, i).forall(_.isDigit))
-          Some(sinceRaw.substring(0, i).toLong)
-        else if (!opaqueSeqs) sinceRaw.toLongOption
-        else None // 2/3: a bare interior ordinal is a malformed cursor
-      }
-    if (sinceParsed.isEmpty) {
-      val b = """{"error":"bad_request","reason":"Malformed sequence supplied in 'since' parameter."}"""
-        .getBytes("UTF-8")
-      ex.sendResponseHeaders(400, b.length)
-      ex.getResponseBody.write(b); ex.close()
-      return true
-    }
-    val since = sinceParsed.get
-    changesSinceLog.add(since)
-    val lines = allLines // one snapshot per continuous request
-    val from = math.min(math.max(since, 0L), lines.length.toLong).toInt
-    val cut = dropChangesRequest > 0 && {
-      val hit = changesSeen.incrementAndGet() == dropChangesRequest.toLong
-      if (hit) dropChangesRequest = 0
-      hit
-    }
-    ex.getResponseHeaders.add("Content-Type", "application/json")
-    ex.sendResponseHeaders(200, 0) // length 0 = chunked, held open
-    val os = ex.getResponseBody
-    val rest = lines.drop(from)
-    val emit = if (cut) rest.take(math.max(1, rest.length / 2)) else rest
-    emit.foreach { l =>
-      os.write((seqify(l) + "\n").getBytes("UTF-8")); os.flush()
-    }
-    if (cut) { ex.close(); return true }
-    val timeoutMs =
-      math.min(params.getOrElse("timeout", "500").toLong, 2000L)
-    val hbMs = math.max(10L,
-      math.min(params.getOrElse("heartbeat", "100").toLong, 100L))
-    val deadline = System.currentTimeMillis() + timeoutMs
-    while (System.currentTimeMillis() < deadline) {
-      Thread.sleep(hbMs)
-      os.write('\n'); os.flush() // heartbeat: blank line
-    }
-    os.write(s"""{"last_seq":${seqLit(lines.length.toLong)}}\n"""
-      .getBytes("UTF-8"))
-    ex.close()
-    true
   }
 
   def stop(): Unit = {

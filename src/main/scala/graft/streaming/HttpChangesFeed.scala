@@ -17,8 +17,12 @@ import graft.cdc.ChangeEvent
   * credentials in the db URL (reference lib/index.js:50-53, 243-290).
   * The micro-batch analog pages the same endpoint statelessly:
   *
-  *   GET {base}/{db}/_changes?include_docs=true&since=N&limit=M
+  *   GET {base}/{db}/_changes?include_docs=true&since=S&limit=M
   *   GET {base}/{db}                      -> {"update_seq": ...}
+  *
+  * `S` is [[SeqTok.sinceParam]]: the bare number on a 1.x server, the
+  * full opaque token on CouchDB 2/3 — so one pager and one admission
+  * loop serve both.
   *
   * Every request carries `Authorization: Basic ...` when credentials
   * are configured and a per-request timeout standing in for the feed's
@@ -29,11 +33,11 @@ import graft.cdc.ChangeEvent
   * [[FeedGoneException]], the fatal class the reference stops the feed
   * for (lib/index.js:211-223).
   *
-  * SCALE: the driver only ever asks for bounds ([[latestSeq]]) and the
-  * admission-control cap ([[nthSeqAfter]], one page of bare seqs — no
-  * docs); executors pull their own seq sub-ranges with
-  * `include_docs=true` ([[changes]]), so document payloads never pass
-  * through the driver. State is O(1) per feed.
+  * SCALE: the driver only ever asks for bounds ([[latest]]) and the
+  * admission-control cap ([[nthAfter]], pages of bare seqs — no docs);
+  * executors pull their own seq ranges with `include_docs=true`
+  * ([[changes]]), so document payloads never pass through the driver.
+  * State is O(1) per feed.
   *
   * Zero-egress note: exercised against a local
   * `com.sun.net.httpserver` stub (HttpChangesFeedSpec) — the wire
@@ -46,12 +50,7 @@ final class HttpChangesFeed(
     password: Option[String] = None,
     pageSize: Int = 1000,
     timeoutMs: Long = 30000L,
-    maxRetries: Int = 3,
-    style: Option[String] = None) extends ChangesFeed {
-
-  /** `&style=all_docs` etc. on every _changes request when configured
-    * (conflict-branch visibility; parseNode picks the winning rev). */
-  private def styleParam: String = style.map(s => s"&style=$s").getOrElse("")
+    maxRetries: Int = 3) extends ChangesFeed {
 
   @transient private lazy val mapper = new ObjectMapper()
   @transient private lazy val client: HttpClient =
@@ -71,15 +70,12 @@ final class HttpChangesFeed(
     * transient class the [[Supervisor]] restarts with backoff. 404
     * stays fatal ([[FeedGoneException]]); other 4xx/5xx throw
     * immediately (retrying a 400 can never help). */
-  private def get(pathAndQuery: String): String =
-    get(pathAndQuery, timeoutMs)
-
-  private def get(pathAndQuery: String, reqTimeoutMs: Long): String = {
+  private def get(pathAndQuery: String): String = {
     var attempt = 0
     var result: String = null
     while (result == null) {
       val b = HttpRequest.newBuilder(URI.create(s"$baseUrl$pathAndQuery"))
-        .timeout(Duration.ofMillis(reqTimeoutMs))
+        .timeout(Duration.ofMillis(timeoutMs))
         .GET()
       authHeader.foreach(b.header("Authorization", _))
       val resp = client.send(b.build(), HttpResponse.BodyHandlers.ofString())
@@ -104,115 +100,8 @@ final class HttpChangesFeed(
 
   /** `update_seq` from the db info document — numeric on 1.x, an
     * opaque `"N-blob"` string on 2/3 (ordinal = prefix). */
-  override def latestSeqTok(): SeqTok =
+  override def latest(): SeqTok =
     SeqTok.ofNode(mapper.readTree(get(s"/$db")).path("update_seq"))
-
-  /** Ordinal view of [[latestSeqTok]]. */
-  override def latestSeq(): Long = latestSeqTok().ord
-
-  /** Long-poll wait: `feed=longpoll` holds the request until at least
-    * one change lands after `since` (or the server-side `timeout`
-    * elapses), then answers the normal results JSON — the low-latency
-    * alternative to polling [[latestSeqTok]] between triggers, and the
-    * closest micro-batch analog of the reference's continuous socket
-    * (lib/index.js:243-290). Heartbeat newlines the server emits while
-    * holding the connection arrive as leading whitespace on the body,
-    * which the JSON parse tolerates by construction. Returns the feed's
-    * new high-water (== `since` on timeout with no changes). */
-  def longPoll(since: SeqTok, waitMs: Long): SeqTok = {
-    val body = get(
-      s"/$db/_changes?feed=longpoll&since=${since.sinceParam}" +
-        s"&timeout=$waitMs&heartbeat=5000",
-      reqTimeoutMs = waitMs + timeoutMs)
-    val n = mapper.readTree(body)
-    // unparseable last_seq = no observable progress, keep waiting
-    val last = SeqTok.ofNodeOpt(n.path("last_seq")).getOrElse(since)
-    if (last.ord > since.ord) last else since
-  }
-
-  /** One `feed=continuous` session — the reference's actual socket
-    * mode (follow.Feed with inactivity_ms, lib/index.js:243-290): the
-    * server streams line-delimited change objects over a held-open
-    * chunked response and closes with a `{"last_seq":...}` trailer
-    * after `timeout` ms without changes. NO `heartbeat=` is sent: on a
-    * real CouchDB, heartbeat overrides the timeout and holds the feed
-    * open forever — a bounded session must rely on `timeout` alone.
-    * Blank lines in the stream are still tolerated (proxies and the
-    * stub emit them), and a client-side watchdog force-closes the
-    * stream if the server holds it past `timeout + timeoutMs` anyway
-    * (the inactivity_ms role). Returns (events, resume token) — the
-    * trailer's last_seq, or the last consumed seq if the socket cut
-    * (or was cut) before the trailer, so restart resumes exactly where
-    * the reference's follower would (lib/index.js:247). A line whose
-    * JSON doesn't parse, or whose seq is unorderable, is skipped like
-    * everywhere else in this client. */
-  def changesContinuous(
-      since: SeqTok, serverTimeoutMs: Long = 500L,
-      includeDocs: Boolean = true): (Vector[ChangeEvent], SeqTok) = {
-    val q = s"/$db/_changes?feed=continuous&include_docs=$includeDocs" +
-      s"&since=${since.sinceParam}&timeout=$serverTimeoutMs$styleParam"
-    val b = HttpRequest.newBuilder(URI.create(s"$baseUrl$q"))
-      .timeout(Duration.ofMillis(serverTimeoutMs + timeoutMs))
-      .GET()
-    authHeader.foreach(b.header("Authorization", _))
-    val resp = client.send(b.build(),
-      HttpResponse.BodyHandlers.ofInputStream())
-    if (resp.statusCode() == 404)
-      throw new FeedGoneException(s"$baseUrl/$db not found (no_db_file)")
-    if (resp.statusCode() >= 400)
-      throw new java.io.IOException(
-        s"GET /$db/_changes feed=continuous -> HTTP ${resp.statusCode()}")
-    val out = Vector.newBuilder[ChangeEvent]
-    var last = since
-    val body = resp.body()
-    // watchdog: the HttpRequest timeout covers headers only, not a
-    // streaming body — a server that ignores timeout= (or heartbeats
-    // forever) would otherwise block readLine() indefinitely
-    val watchdog = new java.util.Timer("changes-continuous-watchdog", true)
-    watchdog.schedule(new java.util.TimerTask {
-      override def run(): Unit =
-        try body.close() catch { case _: java.io.IOException => () }
-    }, serverTimeoutMs + timeoutMs)
-    val rdr = new java.io.BufferedReader(
-      new java.io.InputStreamReader(body, StandardCharsets.UTF_8))
-    try {
-      var done = false
-      var line = rdr.readLine()
-      while (line != null && !done) {
-        val t = line.trim // blank keep-alive lines are ignored
-        if (t.nonEmpty) {
-          // per-line guard: one malformed line must not end the
-          // session (JsonProcessingException IS an IOException — the
-          // outer socket-cut catch would silently wedge the follower
-          // at that line forever)
-          val parsed =
-            try Some(mapper.readTree(t))
-            catch {
-              case _: com.fasterxml.jackson.core.JsonProcessingException =>
-                None
-            }
-          parsed.foreach { n =>
-            if (n.has("last_seq")) {
-              SeqTok.ofNodeOpt(n.get("last_seq"))
-                .foreach(lt => if (lt.ord > last.ord) last = lt)
-              done = true
-            } else {
-              ChangesFeed.parseNode(mapper, n).foreach(out += _)
-              SeqTok.ofNodeOpt(n.path("seq"))
-                .foreach(tok => if (tok.ord > last.ord) last = tok)
-            }
-          }
-        }
-        if (!done) line = rdr.readLine()
-      }
-    } catch {
-      // mid-stream socket cut (incl. the watchdog's forced close):
-      // keep what was consumed; `last` is the exact resume point
-      // (at-least-once, like the paged path)
-      case _: java.io.IOException => ()
-    } finally { watchdog.cancel(); rdr.close() }
-    (out.result(), last)
-  }
 
   /** `doc_count` from the db info document — exactly what the
     * reference's nagios check reads (nagios-check_couch_postgres_count:
@@ -222,55 +111,16 @@ final class HttpChangesFeed(
     n.path("doc_count").asLong(0L)
   }
 
-  /** Page through `_changes` with `include_docs=true` until `until` is
-    * passed. Each page resumes from the previous page's last seq, so a
-    * slow consumer never re-downloads — the stateless analog of the
-    * reference's socket backpressure. */
-  override def changes(since: Long, until: Long): Iterator[ChangeEvent] =
-    new Iterator[ChangeEvent] {
-      private var buf: Iterator[ChangeEvent] = Iterator.empty
-      private var cursor = since
-      private var exhausted = false
-
-      private def fill(): Unit = {
-        while (!buf.hasNext && !exhausted) {
-          val body = get(
-            s"/$db/_changes?include_docs=true&since=$cursor&limit=$pageSize$styleParam")
-          val n = mapper.readTree(body)
-          val results = n.path("results")
-          if (!results.isArray || results.size() == 0) exhausted = true
-          else {
-            val events = (0 until results.size()).iterator
-              .flatMap(i => ChangesFeed.parseNode(mapper, results.get(i)))
-              .toVector
-            if (events.isEmpty) exhausted = true
-            else {
-              val maxSeq = events.map(_.seq).max
-              // a well-behaved server only returns seq > since; a stuck
-              // cursor would otherwise loop forever
-              if (maxSeq <= cursor) exhausted = true
-              else cursor = maxSeq
-              val inRange = events.filter(e => e.seq > since && e.seq <= until)
-              if (events.exists(_.seq > until)) exhausted = true
-              buf = inRange.sortBy(_.seq).iterator
-            }
-          }
-        }
-      }
-
-      override def hasNext: Boolean = { fill(); buf.hasNext }
-      override def next(): ChangeEvent = { fill(); buf.next() }
-    }
-
-  /** Token-exact paging for opaque-seq (CouchDB 2/3) feeds: the server
-    * resumes AFTER `since`'s exact token, and the iterator stops once
-    * it has emitted the change whose token equals `until`'s (with an
-    * ordinal safety stop should that token never appear — e.g. the end
-    * bound was an `update_seq` rather than a change's seq). Falls back
-    * to the numeric ordinal path when neither bound carries a token. */
-  override def changesTok(since: SeqTok, until: SeqTok): Iterator[ChangeEvent] = {
-    if (since.token.isEmpty && until.token.isEmpty)
-      return changes(since.ord, until.ord)
+  /** Changes strictly after `since` up to and including `until`, paged
+    * through `_changes` with `include_docs=true`. Each page resumes from
+    * the previous page's last seq (by its full token when it has one),
+    * so a slow consumer never re-downloads — the stateless analog of the
+    * reference's socket backpressure. The iterator stops at the first
+    * seq past `until`'s ordinal, or right after the change whose token
+    * equals `until`'s (the exact stop on a 2/3 feed). A row with an
+    * unorderable seq is skipped like [[ChangesFeed.parseNode]] skips it;
+    * a row without `id` emits nothing but still advances the cursor. */
+  def changes(since: SeqTok, until: SeqTok): Iterator[ChangeEvent] =
     new Iterator[ChangeEvent] {
       private var buf: Iterator[ChangeEvent] = Iterator.empty
       private var cursor = since
@@ -279,9 +129,8 @@ final class HttpChangesFeed(
       private def fill(): Unit = {
         while (!buf.hasNext && !exhausted) {
           val body = get(s"/$db/_changes?include_docs=true" +
-            s"&since=${cursor.sinceParam}&limit=$pageSize$styleParam")
-          val n = mapper.readTree(body)
-          val results = n.path("results")
+            s"&since=${cursor.sinceParam}&limit=$pageSize")
+          val results = mapper.readTree(body).path("results")
           if (!results.isArray || results.size() == 0) exhausted = true
           else {
             val out = Vector.newBuilder[ChangeEvent]
@@ -290,8 +139,6 @@ final class HttpChangesFeed(
             var sawTok = false
             while (i < results.size() && !exhausted) {
               val node = results.get(i)
-              // unparseable seq: skip the row without advancing the
-              // cursor, exactly like parseNode skips the change
               SeqTok.ofNodeOpt(node.path("seq")).foreach { tok =>
                 sawTok = true
                 if (tok.ord > until.ord) exhausted = true
@@ -304,10 +151,9 @@ final class HttpChangesFeed(
               i += 1
             }
             // an entire page of unorderable seqs is not "exhausted" —
-            // treating it so would wedge the feed silently (the cursor
-            // never advances, every trigger re-reads the same page).
-            // Fail loudly as the transient class so the Supervisor's
-            // watchdog/backoff sees it, like the pre-skip behavior.
+            // treating it so would end the range early and commit the
+            // batch past changes never read. Fail loudly as the
+            // transient class so the Supervisor's backoff sees it.
             if (!sawTok)
               throw new java.io.IOException(
                 s"/$db/_changes page after since=${cursor.sinceParam}: " +
@@ -324,11 +170,11 @@ final class HttpChangesFeed(
       override def hasNext: Boolean = { fill(); buf.hasNext }
       override def next(): ChangeEvent = { fill(); buf.next() }
     }
-  }
 
-  /** Token-aware admission control: bare pages (no docs), cursoring by
-    * full token so a 2/3 server accepts every resume. */
-  override def nthSeqTokAfter(since: SeqTok, n: Long, capOrd: Long): SeqTok = {
+  /** Admission control from bare pages (no docs): `_changes?since=X&
+    * limit=n` returns the next n seqs in feed order, cursoring by full
+    * token so a 2/3 server accepts every resume. */
+  override def nthAfter(since: SeqTok, n: Long, capOrd: Long): SeqTok = {
     if (n <= 0) return since
     var last = since
     var remaining = n
@@ -337,15 +183,14 @@ final class HttpChangesFeed(
     while (!done && remaining > 0) {
       val page = math.min(remaining, pageSize.toLong)
       val body = get(s"/$db/_changes?since=${cursor.sinceParam}&limit=$page")
-      val node = mapper.readTree(body)
-      val results = node.path("results")
+      val results = mapper.readTree(body).path("results")
       if (!results.isArray || results.size() == 0) done = true
       else {
         val prevCursor = cursor
         var i = 0
         var sawTok = false
         while (i < results.size() && remaining > 0) {
-          // unparseable seq: skip the row (see changesTok)
+          // unparseable seq: skip the row (see changes)
           SeqTok.ofNodeOpt(results.get(i).path("seq")).foreach { tok =>
             sawTok = true
             if (tok.ord > cursor.ord ||
@@ -357,43 +202,13 @@ final class HttpChangesFeed(
           }
           i += 1
         }
-        // full page of unorderable seqs: fail loudly (see changesTok)
+        // full page of unorderable seqs: fail loudly (see changes)
         if (!sawTok && remaining > 0)
           throw new java.io.IOException(
             s"/$db/_changes page after since=${prevCursor.sinceParam}: " +
               s"all ${results.size()} seqs unparseable")
         if (results.size() < page ||
             cursor.sinceParam == prevCursor.sinceParam) done = true
-      }
-    }
-    last
-  }
-
-  /** One bare page (no docs) answers admission control exactly:
-    * `_changes?since=X&limit=n` returns the next n seqs in feed order. */
-  override def nthSeqAfter(since: Long, n: Long, cap: Long): Long = {
-    if (n <= 0) return since
-    var last = since
-    var remaining = n
-    var cursor = since
-    var done = false
-    while (!done && remaining > 0) {
-      val page = math.min(remaining, pageSize.toLong)
-      val body = get(s"/$db/_changes?since=$cursor&limit=$page")
-      val node = mapper.readTree(body)
-      val results = node.path("results")
-      if (!results.isArray || results.size() == 0) done = true
-      else {
-        val prevCursor = cursor
-        var i = 0
-        while (i < results.size() && remaining > 0) {
-          val seq = results.get(i).path("seq").asLong(Long.MinValue)
-          if (seq > cursor) cursor = seq
-          if (seq > since && seq <= cap) { last = seq; remaining -= 1 }
-          else if (seq > cap) { remaining = 0 }
-          i += 1
-        }
-        if (results.size() < page || cursor == prevCursor) done = true
       }
     }
     last

@@ -15,9 +15,9 @@ import graft.SparkSpec
   * real server — the client code under test is the production
   * [[HttpChangesFeed]], unchanged. */
 final class StubCouch(db: String) {
-  /** `conflictRevs`: open conflict branches surfaced only under
-    * `style=all_docs`, listed BEFORE `rev` so a client that naively
-    * takes changes[0] gets caught. */
+  /** `conflictRevs`: open conflict branches, listed BEFORE `rev` so a
+    * client that naively takes changes[0] gets caught. A null `id`
+    * emits a row without the `id` field. */
   final case class Chg(seq: Long, id: String, rev: String,
       deleted: Boolean = false, doc: String = null,
       conflictRevs: Seq[String] = Nil)
@@ -29,26 +29,24 @@ final class StubCouch(db: String) {
   /** CouchDB 2/3 emulation: seqs as opaque `"N-tok"` strings; `since`
     * must be 0 or a full token — a bare interior ordinal gets 400. */
   @volatile var opaque = false
-  /** Fault injection: the change with this seq is emitted with the
+  /** Fault injection: the changes with these seqs are emitted with the
     * unorderable seq literal `"now"` (neither numeric nor `N-blob`). */
-  @volatile var malformedSeqAt = -1L
+  @volatile var malformedSeqs = Set.empty[Long]
   @volatile var requests = 0
 
   private var server: HttpServer = _
 
   def tokenOf(n: Long): String = s"$n-g1AA$n"
   private def seqLit(n: Long): String =
-    if (n == malformedSeqAt) "\"now\""
+    if (malformedSeqs.contains(n)) "\"now\""
     else if (opaque) "\"" + tokenOf(n) + "\"" else n.toString
 
-  private def chgJson(c: Chg, includeDocs: Boolean, allDocs: Boolean): String = {
+  private def chgJson(c: Chg, includeDocs: Boolean): String = {
+    val id = if (c.id == null) "" else s""","id":"${c.id}""""
     val del = if (c.deleted) ""","deleted":true""" else ""
     val d = if (includeDocs && c.doc != null) s""","doc":${c.doc}""" else ""
-    val revs =
-      if (allDocs && c.conflictRevs.nonEmpty) c.conflictRevs :+ c.rev
-      else Seq(c.rev)
-    val chgs = revs.map(r => s"""{"rev":"$r"}""").mkString(",")
-    s"""{"seq":${seqLit(c.seq)},"id":"${c.id}","changes":[$chgs]$del$d}"""
+    val chgs = (c.conflictRevs :+ c.rev).map(r => s"""{"rev":"$r"}""").mkString(",")
+    s"""{"seq":${seqLit(c.seq)}$id,"changes":[$chgs]$del$d}"""
   }
 
   def start(): Int = {
@@ -80,23 +78,10 @@ final class StubCouch(db: String) {
             case Some(since) =>
               val limit = params.getOrElse("limit", "1000000").toLong
               val includeDocs = params.get("include_docs").contains("true")
-              val allDocs = params.get("style").contains("all_docs")
-              val longpoll = params.get("feed").contains("longpoll")
-              if (longpoll) {
-                // hold until a change after since lands or timeout, a la
-                // real CouchDB; heartbeats accumulate as leading newlines
-                val waitMs = math.min(
-                  params.getOrElse("timeout", "1000").toLong, 5000L)
-                val deadline = System.nanoTime() + waitMs * 1000000L
-                while (!changes.exists(_.seq > since) &&
-                    System.nanoTime() < deadline)
-                  Thread.sleep(20)
-              }
               val page = changes.filter(_.seq > since).sortBy(_.seq).take(
                 math.min(limit, Int.MaxValue.toLong).toInt)
               val last = page.lastOption.map(_.seq).getOrElse(since)
-              val hb = if (longpoll) "\n\n\n" else ""
-              (200, hb + page.map(chgJson(_, includeDocs, allDocs))
+              (200, page.map(chgJson(_, includeDocs))
                 .mkString("""{"results":[""", ",",
                   s"""],"last_seq":${seqLit(last)}}"""))
           }
@@ -131,11 +116,14 @@ class HttpChangesFeedSpec extends SparkSpec {
     (1 to n).foreach(i => c.changes +=
       c.Chg(i, s"d$i", "1-a", doc = s"""{"n":$i}"""))
 
+  /** A numeric (1.x) seq: ordinal only, no resume token. */
+  private def ord(n: Long): SeqTok = SeqTok(n, None)
+
   test("latestSeq reads update_seq from the db info document") {
     withCouch() { (couch, url) =>
       seed(couch, 7)
       val feed = new HttpChangesFeed(url, "testdb")
-      assert(feed.latestSeq() == 7L)
+      assert(feed.latest() == ord(7L))
     }
   }
 
@@ -143,7 +131,7 @@ class HttpChangesFeedSpec extends SparkSpec {
     withCouch() { (couch, url) =>
       seed(couch, 25)
       val feed = new HttpChangesFeed(url, "testdb", pageSize = 10)
-      val got = feed.changes(0, 25).toVector
+      val got = feed.changes(SeqTok.Zero, ord(25)).toVector
       assert(got.map(_.seq) == (1L to 25L).toVector)
       assert(got.head.doc == """{"n":1}""")
       assert(got.head.rev == "1-a")
@@ -155,7 +143,8 @@ class HttpChangesFeedSpec extends SparkSpec {
     withCouch() { (couch, url) =>
       seed(couch, 20)
       val feed = new HttpChangesFeed(url, "testdb", pageSize = 6)
-      assert(feed.changes(5, 12).map(_.seq).toVector == (6L to 12L).toVector)
+      assert(feed.changes(ord(5), ord(12)).map(_.seq).toVector ==
+        (6L to 12L).toVector)
     }
   }
 
@@ -163,32 +152,54 @@ class HttpChangesFeedSpec extends SparkSpec {
     withCouch() { (couch, url) =>
       seed(couch, 30)
       val feed = new HttpChangesFeed(url, "testdb", pageSize = 8)
-      assert(feed.nthSeqAfter(0, 10, Long.MaxValue) == 10L)
-      assert(feed.nthSeqAfter(25, 100, Long.MaxValue) == 30L) // fewer than n
-      assert(feed.nthSeqAfter(0, 100, 17L) == 17L)            // cap wins
-      assert(feed.nthSeqAfter(30, 5, Long.MaxValue) == 30L)   // nothing new
+      assert(feed.nthAfter(SeqTok.Zero, 10, Long.MaxValue) == ord(10))
+      assert(feed.nthAfter(ord(25), 100, Long.MaxValue) == ord(30)) // fewer than n
+      assert(feed.nthAfter(SeqTok.Zero, 100, 17L) == ord(17))       // cap wins
+      assert(feed.nthAfter(ord(30), 5, Long.MaxValue) == ord(30))   // nothing new
     }
   }
 
   test("a malformed seq is skipped, not fatal — paging and admission survive") {
     withCouch() { (couch, url) =>
       seed(couch, 10)
-      couch.malformedSeqAt = 5L // row 5's seq arrives as "now"
+      couch.malformedSeqs = Set(5L) // row 5's seq arrives as "now"
       val feed = new HttpChangesFeed(url, "testdb", pageSize = 4)
       // the row with the unorderable seq is dropped (parseNode skip
       // semantics); everything around it pages through
-      val got = feed.changesTok(SeqTok.Zero, SeqTok(10L, None)).toVector
+      val got = feed.changes(SeqTok.Zero, ord(10)).toVector
       assert(got.map(_.seq) == Vector(1L, 2L, 3L, 4L, 6L, 7L, 8L, 9L, 10L))
       // admission control counts the well-formed rows and never throws
-      val t = feed.nthSeqTokAfter(SeqTok.Zero, 9, Long.MaxValue)
+      val t = feed.nthAfter(SeqTok.Zero, 9, Long.MaxValue)
       assert(t.ord == 10L)
+    }
+  }
+
+  test("a page of only unorderable seqs fails the range read instead of ending it") {
+    withCouch() { (couch, url) =>
+      seed(couch, 12)
+      couch.malformedSeqs = (5L to 8L).toSet // the whole second page
+      val feed = new HttpChangesFeed(url, "testdb", pageSize = 4)
+      // ending at seq 4 would let the batch commit (0, 12] with 5-12
+      // never read; the transient class makes the Supervisor retry
+      intercept[java.io.IOException](
+        feed.changes(SeqTok.Zero, ord(12)).toVector)
+    }
+  }
+
+  test("a page of id-less rows advances the cursor and does not end the range") {
+    withCouch() { (couch, url) =>
+      seed(couch, 12)
+      (5 to 8).foreach(i => couch.changes(i - 1) = couch.changes(i - 1).copy(id = null))
+      val feed = new HttpChangesFeed(url, "testdb", pageSize = 4)
+      val got = feed.changes(SeqTok.Zero, ord(12)).map(_.seq).toVector
+      assert(got == (1L to 4L).toVector ++ (9L to 12L))
     }
   }
 
   test("missing db raises the fatal no_db_file class (lib/index.js:211-223)") {
     withCouch() { (_, url) =>
       val feed = new HttpChangesFeed(url, "nope")
-      intercept[FeedGoneException](feed.latestSeq())
+      intercept[FeedGoneException](feed.latest())
     }
   }
 
@@ -197,7 +208,7 @@ class HttpChangesFeedSpec extends SparkSpec {
       seed(couch, 2)
       val feed = new HttpChangesFeed(url, "testdb",
         user = Some("admin"), password = Some("s3cret"))
-      feed.latestSeq()
+      feed.latest()
       val expected = "Basic " + java.util.Base64.getEncoder
         .encodeToString("admin:s3cret".getBytes("UTF-8"))
       assert(couch.authHeaders.nonEmpty && couch.authHeaders.forall(_ == expected))
@@ -220,56 +231,11 @@ class HttpChangesFeedSpec extends SparkSpec {
     finally stub.stop()
   }
 
-  test("continuous feed: line-delimited events, heartbeats, trailer token") {
-    withFaultCouch(12) { (_, url) =>
-      val feed = new HttpChangesFeed(url, "fdb")
-      val (evs, tok) = feed.changesContinuous(SeqTok.Zero,
-        serverTimeoutMs = 300L)
-      assert(evs.map(_.seq) == (1L to 12L).toVector)
-      assert(evs.forall(_.doc != null)) // include_docs rode the stream
-      assert(tok.ord == 12L)
-      // a quiet follow-up session: only heartbeats, trailer returns the
-      // same high-water, no events
-      val (more, tok2) = feed.changesContinuous(tok, serverTimeoutMs = 300L)
-      assert(more.isEmpty && tok2.ord == 12L)
-    }
-  }
-
-  test("continuous feed: mid-stream cut resumes from the last consumed seq") {
-    withFaultCouch(12) { (stub, url) =>
-      stub.dropChangesRequest = 1 // cut the first session after half
-      val feed = new HttpChangesFeed(url, "fdb")
-      val (first, tok) = feed.changesContinuous(SeqTok.Zero,
-        serverTimeoutMs = 300L)
-      assert(first.nonEmpty && first.length < 12)
-      assert(tok.ord == first.last.seq) // resume point = last consumed
-      val (rest, tok2) = feed.changesContinuous(tok, serverTimeoutMs = 300L)
-      assert((first ++ rest).map(_.seq) == (1L to 12L).toVector,
-        "resume must lose nothing and repeat nothing")
-      assert(tok2.ord == 12L)
-    }
-  }
-
-  test("continuous feed on an opaque-seq server carries full tokens") {
-    withFaultCouch(8) { (stub, url) =>
-      stub.opaqueSeqs = true
-      val feed = new HttpChangesFeed(url, "fdb")
-      val (evs, tok) = feed.changesContinuous(SeqTok.Zero,
-        serverTimeoutMs = 300L)
-      assert(evs.map(_.seq) == (1L to 8L).toVector)
-      assert(tok.ord == 8L && tok.token.exists(_.contains("-g1AA")))
-      // resuming hands the server the FULL token, not a bare ordinal
-      val (_, _) = feed.changesContinuous(tok, serverTimeoutMs = 300L)
-      val raws = stub.changesSinceRaw.toArray(Array.empty[String]).toSeq
-      assert(raws.last.contains("-g1AA"), s"bare ordinal leaked: $raws")
-    }
-  }
-
   test("429 with Retry-After is retried in-client and recovers transparently") {
     withFaultCouch(5) { (stub, url) =>
       stub.rateLimitFirst = 2
       val feed = new HttpChangesFeed(url, "fdb")
-      assert(feed.latestSeq() == 5L) // succeeded despite two 429s
+      assert(feed.latest() == ord(5)) // succeeded despite two 429s
       assert(stub.rateLimitedCount == 2L)
     }
   }
@@ -280,7 +246,7 @@ class HttpChangesFeedSpec extends SparkSpec {
       val feed = new HttpChangesFeed(url, "fdb", maxRetries = 2)
       // IOException (FeedGone is NOT an IOException): Supervisor backs
       // off instead of halting the feed
-      intercept[java.io.IOException](feed.latestSeq())
+      intercept[java.io.IOException](feed.latest())
       assert(stub.rateLimitedCount == 3L) // initial try + 2 retries
     }
   }
@@ -289,7 +255,7 @@ class HttpChangesFeedSpec extends SparkSpec {
     withFaultCouch(3) { (stub, url) =>
       stub.slowMs = 2000L
       val feed = new HttpChangesFeed(url, "fdb", timeoutMs = 200L)
-      val e = intercept[Exception](feed.latestSeq())
+      val e = intercept[Exception](feed.latest())
       assert(e.isInstanceOf[java.net.http.HttpTimeoutException])
       assert(!e.isInstanceOf[FeedGoneException])
     }
@@ -299,13 +265,13 @@ class HttpChangesFeedSpec extends SparkSpec {
     withFaultCouch(20) { (stub, url) =>
       stub.dropChangesRequest = 2 // cut the SECOND _changes page mid-body
       val feed = new HttpChangesFeed(url, "fdb", pageSize = 5)
-      val it = feed.changes(0, 20)
+      val it = feed.changes(SeqTok.Zero, ord(20))
       val first = it.take(5).toVector // page 1 intact
       assert(first.map(_.seq) == (1L to 5L).toVector)
       intercept[java.io.IOException](it.hasNext) // page 2 truncated
       // the consumer committed through seq 5; a restarted reader asks
       // for since=5 and the fault (one-shot, like a real blip) is gone
-      val resumed = feed.changes(5, 20).map(_.seq).toVector
+      val resumed = feed.changes(ord(5), ord(20)).map(_.seq).toVector
       assert(resumed == (6L to 20L).toVector)
       assert(stub.changesSinceLog.toArray.toSeq.contains(5L))
     }
@@ -385,9 +351,8 @@ class HttpChangesFeedSpec extends SparkSpec {
     withOpaqueCouch { (couch, url) =>
       seed(couch, 7)
       val feed = new HttpChangesFeed(url, "testdb")
-      val t = feed.latestSeqTok()
+      val t = feed.latest()
       assert(t.ord == 7L && t.token.contains(couch.tokenOf(7)))
-      assert(feed.latestSeq() == 7L) // ordinal view unchanged
     }
   }
 
@@ -396,7 +361,7 @@ class HttpChangesFeedSpec extends SparkSpec {
       seed(couch, 25)
       val feed = new HttpChangesFeed(url, "testdb", pageSize = 10)
       val until = SeqTok(18L, Some(couch.tokenOf(18)))
-      val got = feed.changesTok(SeqTok.Zero, until).toVector
+      val got = feed.changes(SeqTok.Zero, until).toVector
       assert(got.map(_.seq) == (1L to 18L).toVector)
       assert(got.forall(_.doc != null))
       // every non-initial cursor the server saw was a full token
@@ -405,7 +370,7 @@ class HttpChangesFeedSpec extends SparkSpec {
       assert(raws.nonEmpty && raws.forall(_.contains("-g1AA")),
         s"bare ordinal leaked: $raws")
       // resume from a token boundary: strictly after, nothing repeated
-      val rest = feed.changesTok(
+      val rest = feed.changes(
         SeqTok(18L, Some(couch.tokenOf(18))),
         SeqTok(25L, Some(couch.tokenOf(25)))).toVector
       assert(rest.map(_.seq) == (19L to 25L).toVector)
@@ -416,13 +381,13 @@ class HttpChangesFeedSpec extends SparkSpec {
     withOpaqueCouch { (couch, url) =>
       seed(couch, 30)
       val feed = new HttpChangesFeed(url, "testdb", pageSize = 10)
-      val t10 = feed.nthSeqTokAfter(SeqTok.Zero, 10, Long.MaxValue)
+      val t10 = feed.nthAfter(SeqTok.Zero, 10, Long.MaxValue)
       assert(t10.ord == 10L && t10.token.contains(couch.tokenOf(10)))
-      val more = feed.nthSeqTokAfter(t10, 100, Long.MaxValue)
+      val more = feed.nthAfter(t10, 100, Long.MaxValue)
       assert(more.ord == 30L) // fewer than n available
-      val capped = feed.nthSeqTokAfter(SeqTok.Zero, 100, 17L)
+      val capped = feed.nthAfter(SeqTok.Zero, 100, 17L)
       assert(capped.ord == 17L && capped.token.contains(couch.tokenOf(17)))
-      val none = feed.nthSeqTokAfter(more, 5, Long.MaxValue)
+      val none = feed.nthAfter(more, 5, Long.MaxValue)
       assert(none == more) // nothing new: cursor unchanged
     }
   }
@@ -464,57 +429,17 @@ class HttpChangesFeedSpec extends SparkSpec {
     }
   }
 
-  test("style=all_docs: multi-rev changes parse to the winning rev, not changes[0]") {
+  test("multi-rev changes parse to the winning rev, not changes[0]") {
     withCouch() { (couch, url) =>
       // conflict branches listed BEFORE the winner in the changes array;
       // winner = highest ordinal, tie broken by highest suffix
       couch.changes += couch.Chg(1, "a", "3-zzz", doc = """{"v":1}""",
         conflictRevs = Seq("3-aaa", "2-old"))
       couch.changes += couch.Chg(2, "b", "1-only", doc = """{"v":2}""")
-      val feed = new HttpChangesFeed(url, "testdb", style = Some("all_docs"))
-      val got = feed.changes(0, 2).toVector
+      val feed = new HttpChangesFeed(url, "testdb")
+      val got = feed.changes(SeqTok.Zero, ord(2)).toVector
       assert(got.map(e => (e.id, e.rev)) ==
         Vector(("a", "3-zzz"), ("b", "1-only")))
-      // the style parameter actually reached the server
-      assert(couch.requests > 0)
-    }
-  }
-
-  test("long-poll: returns when a change lands; heartbeat newlines tolerated") {
-    withCouch() { (couch, url) =>
-      seed(couch, 3)
-      val feed = new HttpChangesFeed(url, "testdb")
-      // no new changes yet: a poll with a short wait times out at since
-      val t0 = feed.longPoll(SeqTok(3L, None), waitMs = 200L)
-      assert(t0.ord == 3L)
-      // a writer lands a change while the next poll is held
-      val writer = new Thread(() => {
-        Thread.sleep(150)
-        couch.changes += couch.Chg(4, "d4", "1-d", doc = """{"n":4}""")
-      })
-      writer.start()
-      val t1 = feed.longPoll(SeqTok(3L, None), waitMs = 3000L)
-      writer.join()
-      assert(t1.ord == 4L, s"long-poll missed the arrival: $t1")
-    }
-  }
-
-  test("long-poll on an opaque-seq server resumes by token") {
-    withOpaqueCouch { (couch, url) =>
-      seed(couch, 5)
-      val feed = new HttpChangesFeed(url, "testdb")
-      val cur = feed.latestSeqTok()
-      assert(cur.ord == 5L)
-      val timedOut = feed.longPoll(cur, waitMs = 200L)
-      assert(timedOut == cur)
-      val writer = new Thread(() => {
-        Thread.sleep(150)
-        couch.changes += couch.Chg(6, "d6", "1-f", doc = """{"n":6}""")
-      })
-      writer.start()
-      val t = feed.longPoll(cur, waitMs = 3000L)
-      writer.join()
-      assert(t.ord == 6L && t.token.contains(couch.tokenOf(6)))
     }
   }
 
@@ -522,8 +447,39 @@ class HttpChangesFeedSpec extends SparkSpec {
     withOpaqueCouch { (couch, url) =>
       seed(couch, 5)
       val feed = new HttpChangesFeed(url, "testdb", maxRetries = 0)
-      // the legacy numeric path would send since=3 — the 2/3 server 400s
-      intercept[java.io.IOException](feed.changes(3, 5).toVector)
+      // ordinal bounds send since=3 — the 2/3 server 400s
+      intercept[java.io.IOException](feed.changes(ord(3), ord(5)).toVector)
+    }
+  }
+
+  test("seeded property: changes and nthAfter agree with the feed on numeric and opaque seqs") {
+    val rnd = new scala.util.Random(20261017L)
+    for (opaque <- Seq(false, true)) withCouch() { (couch, url) =>
+      couch.opaque = opaque
+      // sparse seqs: gaps in the ordinals must not shift any answer
+      val seqs = Iterator.iterate(0L)(_ + 1 + rnd.nextInt(3)).drop(1)
+        .take(40).toVector
+      seqs.foreach(q => couch.changes += couch.Chg(q, s"d$q", "1-a",
+        doc = s"""{"n":$q}"""))
+      def tok(q: Long): SeqTok =
+        if (q == 0L) SeqTok.Zero
+        else SeqTok(q, if (opaque) Some(couch.tokenOf(q)) else None)
+      val bounds = 0L +: seqs
+      for (_ <- 1 to 25) {
+        val feed = new HttpChangesFeed(url, "testdb", pageSize = 1 + rnd.nextInt(12))
+        val i = rnd.nextInt(bounds.length)
+        val j = i + rnd.nextInt(bounds.length - i)
+        val (since, until) = (bounds(i), bounds(j))
+        val got = feed.changes(tok(since), tok(until)).map(_.seq).toVector
+        assert(got == seqs.filter(q => q > since && q <= until),
+          s"opaque=$opaque ($since, $until]")
+        val n = rnd.nextInt(20).toLong
+        val cap = bounds(rnd.nextInt(bounds.length))
+        val expect = seqs.filter(q => q > since && q <= cap).take(n.toInt)
+          .lastOption.getOrElse(since)
+        assert(feed.nthAfter(tok(since), n, cap) == tok(expect),
+          s"opaque=$opaque since=$since n=$n cap=$cap")
+      }
     }
   }
 }
@@ -538,27 +494,32 @@ class FileFeedSummarySpec extends SparkSpec {
       s"""{"seq":$s,"id":"d$s","changes":[{"rev":"1-a"}],"doc":{"n":$s}}""")
       .mkString("\n").getBytes("UTF-8"))
 
+  /** The ordinal of the `n`th change after `since` (file seqs carry no
+    * token). */
+  private def nth(feed: FileChangesFeed, since: Long, n: Long, cap: Long): Long =
+    feed.nthAfter(SeqTok(since, None), n, cap).ord
+
   test("nthSeqAfter walks file summaries and scans only the boundary file") {
     val dir = Files.createTempDirectory("ffs")
     writeFeed(dir, "a.jsonl", 1L to 10L)
     writeFeed(dir, "b.jsonl", 11L to 20L)
     writeFeed(dir, "c.jsonl", 21L to 30L)
     val feed = new FileChangesFeed(dir.toString)
-    assert(feed.latestSeq() == 30L)
-    assert(feed.nthSeqAfter(0, 10, Long.MaxValue) == 10L)  // whole file a
-    assert(feed.nthSeqAfter(0, 15, Long.MaxValue) == 15L)  // boundary in b
-    assert(feed.nthSeqAfter(12, 5, Long.MaxValue) == 17L)  // since inside b
-    assert(feed.nthSeqAfter(0, 100, 23L) == 23L)           // cap inside c
-    assert(feed.nthSeqAfter(30, 5, Long.MaxValue) == 30L)  // nothing new
-    assert(feed.nthSeqAfter(5, 0, Long.MaxValue) == 5L)    // n=0 no-op
+    assert(feed.latest() == SeqTok(30L, None))
+    assert(nth(feed, 0, 10, Long.MaxValue) == 10L)  // whole file a
+    assert(nth(feed, 0, 15, Long.MaxValue) == 15L)  // boundary in b
+    assert(nth(feed, 12, 5, Long.MaxValue) == 17L)  // since inside b
+    assert(nth(feed, 0, 100, 23L) == 23L)           // cap inside c
+    assert(nth(feed, 30, 5, Long.MaxValue) == 30L)  // nothing new
+    assert(nth(feed, 5, 0, Long.MaxValue) == 5L)    // n=0 no-op
   }
 
   test("unsorted seqs within a file still answer exactly") {
     val dir = Files.createTempDirectory("ffs2")
     writeFeed(dir, "a.jsonl", Seq(3L, 1L, 5L, 2L, 4L))
     val feed = new FileChangesFeed(dir.toString)
-    assert(feed.latestSeq() == 5L)
-    assert(feed.nthSeqAfter(0, 3, Long.MaxValue) == 3L)
-    assert(feed.nthSeqAfter(2, 2, Long.MaxValue) == 4L)
+    assert(feed.latest() == SeqTok(5L, None))
+    assert(nth(feed, 0, 3, Long.MaxValue) == 3L)
+    assert(nth(feed, 2, 2, Long.MaxValue) == 4L)
   }
 }
