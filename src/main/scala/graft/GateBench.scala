@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.streaming.SegmentLog
+
 /** Isolated live-cost baseline for the artifact-backed streaming gates
   * (VERDICT r12 task 1, third part): for each gate, delete its cached
   * result artifact, time the LIVE rebuild (stubs, feeds, supervised
@@ -34,13 +36,6 @@ object GateBench {
     * a local filesystem), so a concurrent reader either keeps the old
     * handle's data or sees a clean missing-dir rebuild — never a
     * half-deleted parquet tree. */
-  private def deleteTree(root: java.io.File): Unit =
-    scala.util.Using.resource(java.nio.file.Files.walk(root.toPath)) { st =>
-      import scala.jdk.CollectionConverters._
-      st.sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.toList
-    }.foreach(java.nio.file.Files.deleteIfExists(_))
-
   private def dropArtifacts(key: String): Unit = {
     val tmp = new java.io.File(sys.props("java.io.tmpdir"))
     val all = Option(tmp.listFiles()).getOrElse(Array.empty)
@@ -52,14 +47,14 @@ object GateBench {
     // rounds (ADVICE r14)
     all.filter(f => f.getName.startsWith(".graft-") &&
         f.getName.contains(".dropped-"))
-      .foreach(d => try deleteTree(d)
+      .foreach(d => try SegmentLog.deleteTree(d.toPath)
         catch { case _: java.io.IOException => () })
     all.filter(_.getName.startsWith(s"graft-$key-"))
       .foreach { d =>
         val aside = new java.io.File(tmp,
           s".${d.getName}.dropped-${System.nanoTime()}")
         val gone = if (d.renameTo(aside)) aside else d
-        deleteTree(gone)
+        SegmentLog.deleteTree(gone.toPath)
       }
   }
 

@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -211,53 +209,6 @@ object Retrieval {
       .coalesce(1).write.mode("overwrite").parquet(s"$path/segstats")
     docs.select(col(idCol).cast("long").as("doc")).distinct()
       .coalesce(1).write.mode("overwrite").parquet(s"$path/docids")
-  }
-
-  /** Compact a segmented index in place — the LSM maintenance step
-    * for an index grown by [[graft.streaming.InvertedIndexSink]]: one
-    * small file per (bucket, batch) collapses to one file per bucket,
-    * the per-segment stats to one row, and the docids sidecar to one
-    * file, WITHOUT the original corpus (postings are self-contained).
-    * The `_idx_batches` log is preserved, so a replayed stream batch
-    * from before the compaction still NOOPs.
-    *
-    * Offline contract: run with no concurrent merges or probes (the
-    * directory swap is two renames, not atomic). Probes before and
-    * after answer identically — compaction only re-layouts bytes.
-    */
-  def compact(spark: SparkSession, path: String): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    def swapIn(sub: String, write: String => Unit): Unit = {
-      val live = Paths.get(path, sub)
-      val next = Paths.get(path, s"_compact_$sub")
-      val old = Paths.get(path, s"_old_$sub")
-      write(next.toString)
-      if (Files.exists(old)) {
-        scala.util.Using.resource(Files.walk(old)) { st =>
-          st.sorted(java.util.Comparator.reverseOrder())
-            .iterator().asScala.toList
-        }.foreach(Files.deleteIfExists(_))
-      }
-      if (Files.exists(live))
-        Files.move(live, old, StandardCopyOption.ATOMIC_MOVE)
-      Files.move(next, live, StandardCopyOption.ATOMIC_MOVE)
-      scala.util.Using.resource(Files.walk(old)) { st =>
-        st.sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.toList
-      }.foreach(Files.deleteIfExists(_))
-    }
-    val post = spark.read.parquet(s"$path/postings")
-      .select("token", "doc", "tf", "dl", "tb")
-    swapIn("postings", out => post.repartition(col("tb"))
-      .write.mode("overwrite").partitionBy("tb").parquet(out))
-    val stats = spark.read.parquet(s"$path/segstats")
-      .agg(sum(col("n_docs")).cast("long").as("n_docs"),
-        sum(col("tt")).cast("long").as("tt"))
-    swapIn("segstats", out =>
-      stats.coalesce(1).write.mode("overwrite").parquet(out))
-    val ids = spark.read.parquet(s"$path/docids").distinct()
-    swapIn("docids", out =>
-      ids.coalesce(1).write.mode("overwrite").parquet(out))
   }
 
   /** BM25 top-k over the standing index. `nBuckets` must match the

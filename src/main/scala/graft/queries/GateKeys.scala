@@ -34,7 +34,7 @@ object GateKeys {
     "j37_bootstrap" -> "j37gate-v1",
     "j42_repopulate" -> "j42repop-v2",
     "j43_streaming_dsir_features" -> "j43dsir-v2",
-    "j20_streaming_index" -> "j20idx-c1",
+    "j20_streaming_index" -> "j20idx-c2",
     "j27_streaming_ann_index" -> s"j27annidx-p$j27Planes-c1",
     "j28_streaming_lsh_dedup" -> "j28lsh-v2",
     "j33_event_bus" -> "j33events-v2",

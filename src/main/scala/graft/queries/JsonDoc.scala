@@ -8,6 +8,7 @@ import org.apache.spark.sql.types.{MapType, StringType}
 
 import graft.Tables
 import graft.functions.Json
+import graft.streaming.SegmentLog.deleteTree
 
 /** JSON / schemaless-document plane — SURVEY.md §2.2 P1-P6, §2.8 F-class,
   * §2.9 G1-G3, §2.4 A4/A5/A7 — over `events.props` (raw JSON string
@@ -27,15 +28,6 @@ object JsonDoc {
 
   private def T(s: org.apache.spark.sql.SparkSession, dir: String, n: String) =
     Tables.load(s, dir, n)
-
-  /** Recursively delete a per-run scaffolding tree (feeds, checkpoints,
-    * stores) — each bench round otherwise leaves O(corpus) trees in
-    * /tmp until the disk fills. */
-  private def deleteTree(base: java.nio.file.Path): Unit =
-    scala.util.Using.resource(java.nio.file.Files.walk(base)) { st =>
-      st.sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.toList
-    }.foreach(java.nio.file.Files.deleteIfExists(_))
 
   /** Pin `df`'s rows into storage blocks (ONE evaluation of its plan),
     * then delete the scaffolding under `base`; the returned plan reads
@@ -861,11 +853,12 @@ object JsonDoc {
             name = s"j20-${java.util.UUID.randomUUID()}", nBuckets = 16,
             maxChangesPerTrigger = Some(math.max(251L, nDocs / 2L + 1L)))
           // LSM maintenance under the same gate: fold the per-batch
-          // segments into one file per bucket (Retrieval.compact) and
+          // segments into one file per bucket, segstats and docids
+          // (InvertedIndexSink.compact, through IndexCompact) and
           // require the COMPACTED index to keep answering bit-identically
           // — build -> compact -> probe is the full maintenance cycle a
           // standing 100 TB index lives through, not just the build
-          graft.pipeline.Retrieval.compact(s, o.toString)
+          graft.streaming.InvertedIndexSink.compact(s, o.toString)
           // marker AFTER a fully-committed build (the sink's staged
           // moves never write a parquet _SUCCESS at the root)
           java.nio.file.Files.write(o.toPath.resolve("_complete"),

@@ -1,10 +1,5 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -27,7 +22,8 @@ import graft.pipeline.Pca
   *
   * State is ~2 145 longs + a batch id, written atomically as
   * `state-<batchId>` (tmp + move, newest wins, older states compacted
-  * away) — the same durability contract as [[StreamingKMeansSink]].
+  * away) through [[SegmentLog.writeState]], shared with
+  * [[StreamingKMeansSink]].
   * Idempotence: a batchId at or below the newest applied id is a NOOP,
   * so foreachBatch replays are safe.
   *
@@ -39,42 +35,13 @@ object GramSink {
   final case class State(applied: Long, dim: Int, tri: IndexedSeq[Long])
 
   /** Newest persisted state under `root`, if any. */
-  def loadState(root: String): Option[State] = {
-    val dir = Paths.get(root)
-    if (!Files.exists(dir)) return None
-    val newest = scala.util.Using.resource(Files.list(dir)) { s =>
-      s.iterator().asScala
-        .filter(_.getFileName.toString.startsWith("state-"))
-        .maxByOption(_.getFileName.toString.stripPrefix("state-").toLong)
-    }
-    newest.map(read)
-  }
+  def loadState(root: String): Option[State] =
+    SegmentLog.readState(root).map(lines => State(lines.head.toLong,
+      lines(1).toInt, lines(2).split(',').map(_.toLong).toIndexedSeq))
 
-  private def read(p: Path): State = {
-    val lines = Files.readAllLines(p, StandardCharsets.UTF_8).asScala
-    State(lines.head.toLong, lines(1).toInt,
-      lines(2).split(',').map(_.toLong).toIndexedSeq)
-  }
-
-  private def write(root: String, s: State): Unit = {
-    val dir = Paths.get(root)
-    Files.createDirectories(dir)
-    val body = Seq(s.applied.toString, s.dim.toString,
-      s.tri.mkString(",")).mkString("\n")
-    val tmp = dir.resolve(s"_tmp-state-${s.applied}")
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, dir.resolve(s"state-${s.applied}"),
-      StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
-    scala.util.Using.resource(Files.list(dir)) { st =>
-      st.iterator().asScala
-        .filter { p =>
-          val n = p.getFileName.toString
-          n.startsWith("state-") && n.stripPrefix("state-").toLong < s.applied
-        }
-        .toList
-    }.foreach(Files.deleteIfExists(_))
-  }
+  private def write(root: String, s: State): Unit =
+    SegmentLog.writeState(root, s.applied, Seq(s.applied.toString,
+      s.dim.toString, s.tri.mkString(",")).mkString("\n"))
 
   /** Fold one micro-batch's augmented Gram into the state. Returns true
     * if applied, false for a replayed/old batchId (NOOP). */

@@ -9,29 +9,39 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StringType
 
-/** Shared LSM-style maintenance for the streaming index sinks
-  * ([[LshDedupSink]], [[AnnIndexSink]]): fold the one-file-per-batch
-  * accumulation inside every `<partCol>=` directory back to ONE file per
-  * partition, answer-preserving — the same fold [[graft.pipeline
-  * .Retrieval.compact]] runs for the inverted index and
-  * [[MergeSink]]'s size-ruled compaction for the doc store. Without it a
-  * standing 100 TB ingest accumulates a small file per touched
-  * partition per micro-batch forever; with it the file count is bounded
-  * by the partition fanout between compactions.
+import SegmentLog.{deleteTree, parquetFiles}
+
+/** The one LSM-style compaction of the streaming index sinks
+  * ([[AnnIndexSink]], [[InvertedIndexSink]], [[LshDedupSink]]): fold
+  * the one-file-per-batch accumulation of an index directory back to
+  * ONE file per unit, answer-preserving, as [[MergeSink]]'s size-ruled
+  * compaction does for the doc store. Without it a standing ingest
+  * accumulates a small file per touched partition per micro-batch
+  * forever; with it the file count is bounded by the partition fanout
+  * between compactions.
   *
-  * Mechanics: snapshot each partition's parquet file names, fold
-  * EXACTLY those files (explicit file list + basePath, so a sink batch
-  * landing mid-fold can never be both folded and kept) into a hidden
-  * `_compact_tree` via `repartition(part)` + `partitionBy(part)` (one
-  * task per key -> one file per partition, renamed to deterministic
-  * `compact-<i>.parquet` while still staged), write the snapshot into
-  * each staged dir as a `_folded` manifest, then swap each partition in
-  * with two directory renames: live -> `_old_`, staged -> live. Batch
-  * logs, verdicts, and checkpoints are untouched, so replay idempotence
-  * and batch-id continuation survive compaction.
+  * The shape is read from the layout, with no flag:
+  *  - PARTITIONED — `root` holds `<col>=<v>` dirs (ANN `bucket=`/`cell=`,
+  *    LSH `bk=`, inverted `postings/tb=`): each partition dir is a unit,
+  *    folded with `repartition(col)` + `partitionBy(col)`;
+  *  - FLAT — `root` holds parquet files itself (inverted `segstats/`,
+  *    `docids/`): `root` is the one unit, folded to one file. Folding
+  *    `segstats` rows without summing them is answer-preserving because
+  *    probes already SUM the segments.
+  *
+  * Mechanics: snapshot each unit's parquet file names, fold EXACTLY
+  * those files (explicit file list + basePath, so a sink batch landing
+  * mid-fold can never be both folded and kept) into a hidden staged dir
+  * (`root/_compact_tree` for partitions, `_compact_<root>` beside a flat
+  * root), rename the output to deterministic `compact-<i>.parquet`
+  * while still staged, write the snapshot into each staged dir as a
+  * `_folded` manifest, then swap each unit in with two directory
+  * renames: live -> `_old_<unit>`, staged -> live. Batch logs, verdicts
+  * and checkpoints are untouched, so replay idempotence and batch-id
+  * continuation survive compaction.
   *
   * Durability: every run starts with a recovery scan over leftover
-  * `_old_<part>` dirs, and the `_folded` manifest makes each crash
+  * `_old_<unit>` dirs, and the `_folded` manifest makes each crash
   * point distinguishable — no path discards rows:
   *  - live has NO manifest (missing, empty, or recreated by post-crash
   *    sink batches): the swap never completed, so `_old_` holds the
@@ -48,70 +58,36 @@ object IndexCompact {
 
   private val ManifestName = "_folded"
 
-  def compactPartitions(
-      spark: SparkSession, root: String, partCol: String): Unit =
-    compactPartitions(spark, root, partCol, () => ())
-
-  private[streaming] def compactPartitions(
-      spark: SparkSession, root: String, partCol: String,
-      afterFold: () => Unit): Unit =
-    compactPartitions(spark, root, partCol, afterFold, _ => ())
+  /** Fold the index directory `root`, partitioned or flat. */
+  def compact(spark: SparkSession, root: String): Unit =
+    compact(spark, root, () => (), _ => ())
 
   /** `afterFold` fires between the fold's materialization and the first
-    * directory swap; `beforeSwapIn` fires per partition between the
+    * directory swap; `beforeSwapIn` fires per unit between the
     * live->_old_ rename and the staged move-in — the two race windows a
-    * concurrent sink batch can land in. Specs use them to pin the
-    * extras-preserving swap and the abandon-fold fallback; production
-    * callers take the no-op overload above. */
-  private[streaming] def compactPartitions(
-      spark: SparkSession, root: String, partCol: String,
+    * concurrent sink batch can land in, and the crash window a throw
+    * there simulates. Specs use them; production callers take the
+    * no-op overload above. */
+  private[streaming] def compact(
+      spark: SparkSession, root: String,
       afterFold: () => Unit, beforeSwapIn: Path => Unit): Unit = {
-    val rootP = Paths.get(root)
-    if (!Files.exists(rootP)) return
-    def partDirs(base: Path): Seq[Path] =
-      scala.util.Using.resource(Files.list(base)) { st =>
-        st.iterator().asScala
-          .filter(p => Files.isDirectory(p) &&
-            p.getFileName.toString.startsWith(s"$partCol="))
-          .toSeq.sortBy(_.getFileName.toString)
-      }
-    // Recovery (see scaladoc): fold leftover _old_ dirs back in, using
-    // the live manifest to tell a completed swap from an interrupted one.
-    scala.util.Using.resource(Files.list(rootP)) { st =>
-      st.iterator().asScala
-        .filter(p => Files.isDirectory(p) &&
-          p.getFileName.toString.startsWith(s"_old_$partCol="))
-        .toList
-    }.foreach { old =>
-      val live = rootP.resolve(old.getFileName.toString.stripPrefix("_old_"))
-      readManifest(live) match {
-        case None if parquetFiles(live).isEmpty =>
-          deleteTree(live)
-          Files.move(old, live, StandardCopyOption.ATOMIC_MOVE)
-        case None => // interrupted swap + post-crash sink batches in live
-          mergeInto(old, live, keep = _ => true)
-          deleteTree(old)
-        case Some(folded) => // completed swap; restore mid-run extras only
-          mergeInto(old, live, keep = n => !folded(n))
-          deleteTree(old)
-      }
-    }
-    val liveDirs = partDirs(rootP)
-    if (liveDirs.isEmpty) return
-    val next = rootP.resolve("_compact_tree")
-    deleteTree(next)
-    // Snapshot of the fold's input files, per partition dir: the read
-    // below consumes EXACTLY these files, so anything a concurrent sink
-    // batch adds later is in neither the fold nor the manifest and must
+    val rootP = Paths.get(root).toAbsolutePath
+    recover(rootP)
+    if (!Files.isDirectory(rootP)) return
+    val partCol = partitionColumn(rootP)
+    val units = partCol.fold(Seq(rootP))(c => partDirs(rootP, c))
+    // Snapshot of the fold's input files, per unit: the read below
+    // consumes EXACTLY these files, so anything a concurrent sink batch
+    // adds later is in neither the fold nor the manifest and must
     // survive the swap.
-    val snapshot: Map[String, Seq[String]] = liveDirs.map { d =>
-      d.getFileName.toString ->
-        parquetFiles(d).map(_.getFileName.toString)
-    }.toMap
-    val snapFiles = liveDirs.flatMap { d =>
-      snapshot(d.getFileName.toString).map(n => d.resolve(n).toString)
-    }
+    val snapshot: Map[Path, Seq[String]] =
+      units.map(u => u -> parquetFiles(u).map(_.getFileName.toString)).toMap
+    val snapFiles = units.flatMap(u => snapshot(u).map(u.resolve(_).toString))
     if (snapFiles.isEmpty) return
+    val next = partCol.fold(
+      rootP.resolveSibling(s"_compact_${rootP.getFileName}"))(
+      _ => rootP.resolve("_compact_tree"))
+    deleteTree(next)
     // The read supplies an explicit schema with the partition column as
     // STRING, which (a) skips partition TYPE INFERENCE — the ANN
     // sign-bucket values are strings like "0101" that inference folds
@@ -122,13 +98,21 @@ object IndexCompact {
     // value round-trips verbatim through partitionBy (int-valued
     // partitions like bk=5 write the same name either way).
     val dataSchema = spark.read.parquet(snapFiles.head).schema
-    spark.read.schema(dataSchema.add(partCol, StringType))
-      .option("basePath", root)
+    val read = spark.read
+      .schema(partCol.fold(dataSchema)(dataSchema.add(_, StringType)))
+      .option("basePath", rootP.toString)
       .parquet(snapFiles: _*)
-      .repartition(col(partCol))
-      .write.mode("overwrite").partitionBy(partCol).parquet(next.toString)
+    val staged: Seq[(Path, Path)] = partCol match {
+      case Some(c) =>
+        read.repartition(col(c))
+          .write.mode("overwrite").partitionBy(c).parquet(next.toString)
+        partDirs(next, c).map(d => d -> rootP.resolve(d.getFileName.toString))
+      case None =>
+        read.coalesce(1).write.mode("overwrite").parquet(next.toString)
+        Seq(next -> rootP)
+    }
     afterFold()
-    partDirs(next).foreach { dir =>
+    staged.foreach { case (dir, live) =>
       // deterministic names, renamed while still staged (no visibility
       // window); the manifest rides in the staged dir so the swap below
       // is one directory rename carrying data + provenance together
@@ -136,11 +120,10 @@ object IndexCompact {
         Files.move(f, dir.resolve(s"compact-$i.parquet"),
           StandardCopyOption.REPLACE_EXISTING)
       }
-      val folded = snapshot.getOrElse(dir.getFileName.toString, Seq.empty)
+      val folded = snapshot.getOrElse(live, Seq.empty)
       Files.write(dir.resolve(ManifestName),
         folded.mkString("\n").getBytes(StandardCharsets.UTF_8))
-      val live = rootP.resolve(dir.getFileName.toString)
-      val old = rootP.resolve(s"_old_${dir.getFileName.toString}")
+      val old = oldOf(live)
       deleteTree(old)
       if (Files.exists(live))
         Files.move(live, old, StandardCopyOption.ATOMIC_MOVE)
@@ -151,10 +134,10 @@ object IndexCompact {
           // A concurrent sink batch recreated `live` in the window
           // between the two renames (ATOMIC_MOVE onto a non-empty dir
           // throws). The fold is only a file-count optimization, so
-          // abandon THIS partition's fold: restore every pre-fold file
+          // abandon THIS unit's fold: restore every pre-fold file
           // from _old_ beside the new batch — the exact merge the
           // recovery scan would run after a crash at this point — and
-          // let the next compaction run fold the partition again.
+          // let the next compaction run fold the unit again.
           case _: java.nio.file.FileSystemException if Files.exists(live) =>
             mergeInto(old, live, keep = _ => true)
             deleteTree(old)
@@ -172,16 +155,71 @@ object IndexCompact {
     deleteTree(next)
   }
 
-  private def parquetFiles(dir: Path): Seq[Path] =
-    if (!Files.exists(dir)) Seq.empty
-    else scala.util.Using.resource(Files.list(dir)) { st =>
-      st.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
+  private def oldOf(live: Path): Path =
+    live.resolveSibling(s"_old_${live.getFileName}")
+
+  /** The recovery scan (see scaladoc) over the index directory `root`:
+    * a flat root's own `_old_` copy sits beside it, a partition's inside
+    * it. Every [[compact]] starts with it; a reader that must see every
+    * committed row before the next compaction runs calls it too. */
+  private[streaming] def recover(root: Path): Unit = {
+    recoverUnit(root)
+    if (Files.isDirectory(root))
+      children(root).filter(_.getFileName.toString.startsWith("_old_"))
+        .foreach(old => recoverUnit(
+          root.resolve(old.getFileName.toString.stripPrefix("_old_"))))
+  }
+
+  /** Fold a leftover `_old_` copy of `live` back in, using the live
+    * manifest to tell a completed swap from an interrupted one. */
+  private def recoverUnit(live: Path): Unit = {
+    val old = oldOf(live)
+    if (Files.isDirectory(old)) {
+      readManifest(live) match {
+        case None if dataFiles(live).isEmpty =>
+          deleteTree(live)
+          Files.move(old, live, StandardCopyOption.ATOMIC_MOVE)
+        case None => // interrupted swap + post-crash sink batches in live
+          mergeInto(old, live, keep = _ => true)
+          deleteTree(old)
+        case Some(folded) => // completed swap; restore mid-run extras only
+          mergeInto(old, live, keep = n => !folded(n))
+          deleteTree(old)
+      }
+    }
+  }
+
+  private def children(dir: Path): Seq[Path] =
+    scala.util.Using.resource(Files.list(dir)) { st =>
+      st.iterator().asScala.filter(Files.isDirectory(_))
         .toSeq.sortBy(_.getFileName.toString)
     }
 
+  private def partDirs(base: Path, partCol: String): Seq[Path] =
+    children(base).filter(_.getFileName.toString.startsWith(s"$partCol="))
+
+  /** The partition column of a `<col>=<v>` layout; None = flat. Hidden
+    * dirs (`_old_…`, `_compact_tree`, staging) are not partitions. */
+  private def partitionColumn(root: Path): Option[String] = {
+    val cols = children(root).map(_.getFileName.toString)
+      .filter(n => !n.startsWith("_") && !n.startsWith(".") && n.contains('='))
+      .map(_.takeWhile(_ != '=')).distinct
+    require(cols.size <= 1, s"$root mixes partition columns ${cols.mkString(", ")}")
+    cols.headOption
+  }
+
+  /** Every parquet file under `dir`, by path relative to it. */
+  private def dataFiles(dir: Path): Seq[String] =
+    if (!Files.exists(dir)) Seq.empty
+    else scala.util.Using.resource(Files.walk(dir)) { st =>
+      st.iterator().asScala
+        .filter(p => Files.isRegularFile(p) &&
+          p.getFileName.toString.endsWith(".parquet"))
+        .map(dir.relativize(_).toString).toList
+    }
+
   /** The `_folded` manifest of a completed swap: the file names whose
-    * rows the partition's compact files contain. None = no manifest
+    * rows the unit's compact files contain. None = no manifest
     * (pre-swap dir, or a dir recreated by sink batches post-crash). */
   private def readManifest(dir: Path): Option[Set[String]] = {
     val p = dir.resolve(ManifestName)
@@ -191,23 +229,16 @@ object IndexCompact {
   }
 
   /** Move `from`'s parquet files selected by `keep` into `to`, skipping
-    * names already present there (a same-name batch file is the same
-    * batch replayed — identical content). */
+    * paths already present there (a same-name batch file is the same
+    * batch replayed — identical content). Nested files keep their
+    * relative path, so a whole-index `_old_` copy merges back too. */
   private def mergeInto(
-      from: Path, to: Path, keep: String => Boolean): Unit = {
-    Files.createDirectories(to)
-    parquetFiles(from).filter(f => keep(f.getFileName.toString))
-      .foreach { f =>
-        val dst = to.resolve(f.getFileName.toString)
-        if (!Files.exists(dst))
-          Files.move(f, dst, StandardCopyOption.ATOMIC_MOVE)
+      from: Path, to: Path, keep: String => Boolean): Unit =
+    dataFiles(from).filter(keep).foreach { rel =>
+      val dst = to.resolve(rel)
+      if (!Files.exists(dst)) {
+        Files.createDirectories(dst.getParent)
+        Files.move(from.resolve(rel), dst, StandardCopyOption.ATOMIC_MOVE)
       }
-  }
-
-  private def deleteTree(d: Path): Unit =
-    if (Files.exists(d))
-      scala.util.Using.resource(Files.walk(d)) { st =>
-        st.sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.toList
-      }.foreach(Files.deleteIfExists(_))
+    }
 }

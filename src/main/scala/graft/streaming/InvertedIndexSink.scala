@@ -1,9 +1,6 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.Paths
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -11,25 +8,23 @@ import org.apache.spark.sql.functions._
 import graft.pipeline.Retrieval
 
 /** Streaming maintenance for the BM25 inverted index
-  * ([[graft.pipeline.Retrieval]]) — the [[AnnIndexSink]] staged-move
-  * recipe applied to the `tb=` posting layout: a micro-batch of NEW
-  * documents explodes into posting rows that land in exactly the token
-  * buckets they hash into, plus ONE `segstats` segment row; every
-  * other partition directory is untouched, byte for byte.
+  * ([[graft.pipeline.Retrieval]]) — the [[AnnIndexSink]] recipe applied
+  * to the `tb=` posting layout: a micro-batch of NEW documents explodes
+  * into posting rows that land in exactly the token buckets they hash
+  * into, plus ONE `segstats` segment row; every other partition
+  * directory is untouched, byte for byte.
   *
-  * Per batch:
+  * Per batch, under [[SegmentLog]]'s commit protocol (staged writes
+  * moved to deterministic names, the id appended to `_idx_batches`
+  * last):
   *  1. project the batch into posting rows (token, doc, tf, dl, tb) —
   *     the same expressions the batch writer uses, so probes cannot
-  *     tell old rows from new;
-  *  2. repartition by `tb` and write to `_staging_batch_<id>`; move
-  *     each staged file to `postings/tb=<b>/batch-<id>.parquet` —
-  *     deterministic names, so a replayed move overwrites its own
-  *     previous attempt;
-  *  3. stage the batch's (n_docs, tt) row the same way and move it to
+  *     tell old rows from new — and move them to
+  *     `postings/tb=<b>/batch-<id>.parquet`;
+  *  2. move the batch's (n_docs, tt) row to
   *     `segstats/batch-<id>.parquet` — probes SUM segments, so the
   *     global avgdl and doc count stay exact after every append;
-  *  4. record the batch id in `_idx_batches` (the replay
-  *     short-circuit).
+  *  3. move the batch's id sidecar to `docids/batch-<id>.parquet`.
   *
   * Idempotence: a logged batchId is a NOOP; a crash between the moves
   * and the log append replays into identical file names. Because no
@@ -50,11 +45,22 @@ import graft.pipeline.Retrieval
   * ([[graft.pipeline.Retrieval.writeIndex]]).
   *
   * SCALE: cost per batch is O(|batch postings| + touched buckets); the
-  * index grows one small file per touched bucket per batch — compact
-  * with [[graft.pipeline.Retrieval.writeIndex]] when file counts
-  * matter (the LSM tradeoff, same as [[AnnIndexSink]]).
+  * index grows one small file per touched bucket per batch — [[compact]]
+  * folds each `tb=` directory, `segstats/` and `docids/` back to one
+  * file through [[IndexCompact]] (the LSM tradeoff, same as
+  * [[AnnIndexSink]]).
   */
 object InvertedIndexSink {
+
+  /** Fold every `postings/tb=` partition, `segstats/` and `docids/` to
+    * one file each (see [[IndexCompact]]). Answer-preserving: probes
+    * SUM the segment rows, so folding them into one file without
+    * summing changes nothing, and the `_idx_batches` log is untouched,
+    * so a replayed pre-compaction batch still NOOPs. A crash mid-swap
+    * is recovered by the next run, also after later batches landed. */
+  def compact(spark: org.apache.spark.sql.SparkSession, path: String): Unit =
+    Seq("postings", "segstats", "docids")
+      .foreach(sub => IndexCompact.compact(spark, s"$path/$sub"))
 
   /** Merge a micro-batch of (idCol, textCol) documents into the index
     * at `path`. Returns true if applied, false for a replayed batchId
@@ -69,111 +75,47 @@ object InvertedIndexSink {
   def mergeBatch(
       batch: DataFrame, path: String, batchId: Long, nBuckets: Int = 64,
       idCol: String = "doc_id", textCol: String = "text",
-      orderCol: Option[String] = None): Boolean = {
-    if (appliedBatches(path).contains(batchId)) return false
-    val inBatch = orderCol match {
-      case None => batch.dropDuplicates(idCol)
-      case Some(oc) =>
-        batch.groupBy(col(idCol))
-          .agg(min_by(struct(batch.columns.map(col): _*), col(oc)).as("__r"))
-          .select(col("__r.*"))
-    }
-    // first-write-wins: drop ids already indexed by PRIOR segments
-    // (this batch's own sidecar excluded — crash-replay must not
-    // anti-join itself to empty)
-    val priorIds = {
-      val dir = Paths.get(path, "docids")
-      if (!Files.exists(dir)) Seq.empty[String]
-      else scala.util.Using.resource(Files.list(dir)) { st =>
-        st.iterator().asScala
-          .filter { p =>
-            val n = p.getFileName.toString
-            n.endsWith(".parquet") && n != s"batch-$batchId.parquet"
-          }
-          .map(_.toString).toSeq.sorted
+      orderCol: Option[String] = None): Boolean =
+    SegmentLog.commit(path, Log, batchId) { stage =>
+      val inBatch = orderCol match {
+        case None => batch.dropDuplicates(idCol)
+        case Some(oc) =>
+          batch.groupBy(col(idCol))
+            .agg(min_by(struct(batch.columns.map(col): _*), col(oc)).as("__r"))
+            .select(col("__r.*"))
       }
+      // first-write-wins: drop ids already indexed by PRIOR segments
+      // (this batch's own sidecar excluded — crash-replay must not
+      // anti-join itself to empty). A compaction that crashed mid-swap
+      // leaves the sidecar under `_old_docids`; recovering it first
+      // keeps those ids visible, or a redelivered id would be indexed
+      // twice before the next compaction could repair anything.
+      val docids = Paths.get(path, "docids")
+      IndexCompact.recover(docids)
+      val priorIds = SegmentLog.parquetFiles(docids)
+        .filter(_.getFileName.toString != s"batch-$batchId.parquet")
+        .map(_.toString)
+      // persisted: the postings, segstats and docids writes below are
+      // three separate actions over this (small, batch-sized) frame —
+      // without the cache each re-runs the anti-join and any upstream
+      // extraction
+      val docs = (
+        if (priorIds.isEmpty) inBatch
+        else {
+          val known = batch.sparkSession.read.parquet(priorIds: _*)
+            .withColumnRenamed("doc", "__known")
+          inBatch.join(known,
+            inBatch(idCol).cast("long") === col("__known"), "left_anti")
+        }).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        stage.partitioned(
+          Retrieval.postingRows(docs, nBuckets, idCol, textCol), "tb",
+          "postings")
+        stage.single(Retrieval.segStats(docs, idCol, textCol), "segstats")
+        // the segment's id sidecar: the set future batches anti-join on
+        stage.single(docs.select(col(idCol).cast("long").as("doc")), "docids")
+      } finally { docs.unpersist(blocking = false) }
     }
-    // persisted: the postings, segstats and docids writes below are
-    // three separate actions over this (small, batch-sized) frame —
-    // without the cache each re-runs the anti-join and any upstream
-    // extraction
-    val docs = (
-      if (priorIds.isEmpty) inBatch
-      else {
-        val known = batch.sparkSession.read.parquet(priorIds: _*)
-          .withColumnRenamed("doc", "__known")
-        inBatch.join(known,
-          inBatch(idCol).cast("long") === col("__known"), "left_anti")
-      }).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-    val rows = Retrieval.postingRows(docs, nBuckets, idCol, textCol)
-    val staging = s"$path/_staging_batch_$batchId"
-    rows.repartition(col("tb"))
-      .write.mode("overwrite").partitionBy("tb").parquet(staging)
-    val stagingDir = Paths.get(staging)
-    val touched = scala.util.Using.resource(Files.list(stagingDir)) { st =>
-      st.iterator().asScala
-        .filter(p => Files.isDirectory(p) &&
-          p.getFileName.toString.startsWith("tb="))
-        .toSeq.sortBy(_.getFileName.toString)
-    }
-    touched.foreach { dir =>
-      val dest = Paths.get(path, "postings", dir.getFileName.toString)
-      Files.createDirectories(dest)
-      val parts = scala.util.Using.resource(Files.list(dir)) { st =>
-        st.iterator().asScala
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-          .toSeq.sortBy(_.getFileName.toString)
-      }
-      parts.zipWithIndex.foreach { case (f, i) =>
-        val name = if (i == 0) s"batch-$batchId.parquet"
-          else s"batch-$batchId-$i.parquet"
-        Files.move(f, dest.resolve(name),
-          StandardCopyOption.REPLACE_EXISTING)
-      }
-    }
-    // the batch's segment statistics: one staged file, one move
-    val statStaging = s"$path/_staging_stats_$batchId"
-    Retrieval.segStats(docs, idCol, textCol)
-      .coalesce(1).write.mode("overwrite").parquet(statStaging)
-    val statDir = Paths.get(statStaging)
-    val statFile = scala.util.Using.resource(Files.list(statDir)) { st =>
-      st.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .toSeq.sortBy(_.getFileName.toString).head
-    }
-    val segDest = Paths.get(path, "segstats")
-    Files.createDirectories(segDest)
-    Files.move(statFile, segDest.resolve(s"batch-$batchId.parquet"),
-      StandardCopyOption.REPLACE_EXISTING)
-    // the segment's id sidecar: the set future batches anti-join on
-    val idStaging = s"$path/_staging_ids_$batchId"
-    docs.select(col(idCol).cast("long").as("doc"))
-      .coalesce(1).write.mode("overwrite").parquet(idStaging)
-    val idDir = Paths.get(idStaging)
-    val idFile = scala.util.Using.resource(Files.list(idDir)) { st =>
-      st.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .toSeq.sortBy(_.getFileName.toString).head
-    }
-    val idDest = Paths.get(path, "docids")
-    Files.createDirectories(idDest)
-    Files.move(idFile, idDest.resolve(s"batch-$batchId.parquet"),
-      StandardCopyOption.REPLACE_EXISTING)
-    // commit marker AFTER the moves; then clean the staging trees
-    Files.createDirectories(Paths.get(path))
-    Files.write(logPath(path), s"$batchId\n".getBytes(StandardCharsets.UTF_8),
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
-    Seq(stagingDir, statDir, idDir).foreach { d =>
-      scala.util.Using.resource(Files.walk(d)) { st =>
-        st.sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.toList
-      }.foreach(Files.deleteIfExists(_))
-    }
-    true
-    } finally { docs.unpersist(blocking = false) }
-  }
 
   /** foreachBatch adapter:
     * `writeStream.foreachBatch(InvertedIndexSink.sink(path))`. */
@@ -181,13 +123,8 @@ object InvertedIndexSink {
       textCol: String = "text"): (DataFrame, Long) => Unit =
     (batch, id) => { mergeBatch(batch, path, id, nBuckets, idCol, textCol); () }
 
-  private def logPath(root: String): Path = Paths.get(root, "_idx_batches")
+  private val Log = "_idx_batches"
 
   /** Batch ids already merged into the index at `root`. */
-  def appliedBatches(root: String): Set[Long] = {
-    val p = logPath(root)
-    if (!Files.exists(p)) Set.empty
-    else Files.readAllLines(p, StandardCharsets.UTF_8).asScala
-      .filter(_.nonEmpty).map(_.toLong).toSet
-  }
+  def appliedBatches(root: String): Set[Long] = SegmentLog.applied(root, Log)
 }

@@ -1,9 +1,6 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -14,7 +11,7 @@ import graft.pipeline.{Dedup, TextOps}
   * the standing corpus's persisted MinHash band index, gets a verdict
   * (novel / near-dup-of), and only NOVEL docs are appended to the index —
   * the continuous form of [[graft.pipeline.Dedup.minhashNewVsCorpus]],
-  * maintained with the [[AnnIndexSink]] staged-move mechanics.
+  * committed through [[SegmentLog]] like the other index sinks.
   *
   * Index layout: `path/bk=<0..fanout)/batch-<id>.parquet` with rows
   * (doc, band, bkey, shingle_set) — the band rows ARE the index, and
@@ -38,10 +35,10 @@ import graft.pipeline.{Dedup, TextOps}
   * needs the "exists an admitted-first mate" predicate, which needs no
   * iteration.
   *
-  * Idempotence: batchId log short-circuits replays; staged files move to
-  * deterministic `bk=N/batch-<id>.parquet` names so a crash mid-move
-  * replays onto itself. Verdicts land at `_verdicts/batch-<id>.parquet`
-  * under the same contract.
+  * Idempotence ([[SegmentLog]]): the `_lsh_batches` log short-circuits
+  * replays; staged files move to deterministic `bk=N/batch-<id>.parquet`
+  * names so a crash mid-move replays onto itself. Verdicts land at
+  * `_verdicts/batch-<id>.parquet` in the same commit.
   *
   * SCALE: per batch the probe is a (band, bkey) equi-join against only
   * the touched bk partitions; the quadratic risk lives in band-bucket
@@ -57,22 +54,17 @@ object LshDedupSink {
     * Safe between batches: admission state is the admitted band rows
     * themselves plus the `_lsh_batches` log, both preserved. */
   def compact(spark: org.apache.spark.sql.SparkSession, root: String): Unit =
-    IndexCompact.compactPartitions(spark, root, "bk")
+    IndexCompact.compact(spark, root)
 
   /** Partition fanout for the band-key hash directories. */
   val Fanout = 64
 
   private def bk(bkey: Column): Column = pmod(hash(bkey), lit(Fanout))
 
-  private def logPath(root: String): Path = Paths.get(root, "_lsh_batches")
+  private val Log = "_lsh_batches"
 
   /** Batch ids already merged. */
-  def appliedBatches(root: String): Set[Long] = {
-    val p = logPath(root)
-    if (!Files.exists(p)) Set.empty
-    else Files.readAllLines(p, StandardCharsets.UTF_8).asScala
-      .filter(_.nonEmpty).map(_.toLong).toSet
-  }
+  def appliedBatches(root: String): Set[Long] = SegmentLog.applied(root, Log)
 
   /** All verdicts so far: (batch_id, new_doc, dup_of, jaccard). */
   def verdicts(spark: org.apache.spark.sql.SparkSession, root: String): DataFrame = {
@@ -97,111 +89,65 @@ object LshDedupSink {
   def mergeBatch(
       batch: DataFrame, path: String, batchId: Long,
       nGram: Int = 3, k: Int = 6, bands: Int = 3, threshold: Double = 0.2,
-      idCol: String = "doc_id", textCol: String = "text"): Boolean = {
-    if (appliedBatches(path).contains(batchId)) return false
-    val spark = batch.sparkSession
+      idCol: String = "doc_id", textCol: String = "text"): Boolean =
+    SegmentLog.commit(path, Log, batchId) { stage =>
+      val spark = batch.sparkSession
 
-    val (sh, buckets) = Dedup.minhashBuckets(
-      batch.dropDuplicates(idCol), idCol, textCol, nGram, k, bands)
-    // batch index rows: (doc, band, bkey, shingle_set, bk) —
-    // checkpointed so the minhash stage runs once for probe + admit
-    val rows = buckets.join(sh, "doc").withColumn("bk", bk(col("bkey")))
-      .localCheckpoint(true)
+      val (sh, buckets) = Dedup.minhashBuckets(
+        batch.dropDuplicates(idCol), idCol, textCol, nGram, k, bands)
+      // batch index rows: (doc, band, bkey, shingle_set, bk) —
+      // checkpointed so the minhash stage runs once for probe + admit
+      val rows = buckets.join(sh, "doc").withColumn("bk", bk(col("bkey")))
+        .localCheckpoint(true)
 
-    // ---- probe the standing index (only the batch's bk partitions)
-    val touched = rows.select(col("bk")).distinct()
-      .collect().map(_.getInt(0)).sorted // <= Fanout ints
-    val hasIndex = Files.exists(Paths.get(path)) && touched.exists(b =>
-      Files.exists(Paths.get(path, s"bk=$b")))
-    val corpusVerdict: DataFrame = if (!hasIndex) {
-      import spark.implicits._
-      Seq.empty[(Long, Long, Double)].toDF("new_doc", "dup_of", "jaccard")
-    } else {
-      val idx = spark.read.parquet(path)
-        .where(col("bk").isin(touched.map(Integer.valueOf): _*))
-      // a.doc =!= b.doc: crash-replay (bk= moves done, batch-log append
-      // not) and cross-batch redelivery put THIS doc's band rows in the
-      // standing index — without the guard the doc matches itself at
-      // jaccard 1.0, gets a bogus self-verdict, and a novel doc is lost
-      // while its stale partial band rows corrupt the index.
-      rows.as("a").join(idx.as("b"),
+      // ---- probe the standing index (only the batch's bk partitions)
+      val touched = rows.select(col("bk")).distinct()
+        .collect().map(_.getInt(0)).sorted // <= Fanout ints
+      val hasIndex = Files.exists(Paths.get(path)) && touched.exists(b =>
+        Files.exists(Paths.get(path, s"bk=$b")))
+      val corpusVerdict: DataFrame = if (!hasIndex) {
+        import spark.implicits._
+        Seq.empty[(Long, Long, Double)].toDF("new_doc", "dup_of", "jaccard")
+      } else {
+        val idx = spark.read.parquet(path)
+          .where(col("bk").isin(touched.map(Integer.valueOf): _*))
+        // a.doc =!= b.doc: crash-replay (bk= moves done, batch-log append
+        // not) and cross-batch redelivery put THIS doc's band rows in the
+        // standing index — without the guard the doc matches itself at
+        // jaccard 1.0, gets a bogus self-verdict, and a novel doc is lost
+        // while its stale partial band rows corrupt the index.
+        rows.as("a").join(idx.as("b"),
+          col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
+            col("a.doc") =!= col("b.doc"))
+          .select(col("a.doc").as("new_doc"), col("b.doc").as("dup_of"),
+            col("a.shingle_set").as("ss_a"), col("b.shingle_set").as("ss_b"))
+          .distinct()
+          .select(col("new_doc"), col("dup_of"),
+            TextOps.jaccard(col("ss_a"), col("ss_b")).as("jaccard"))
+          .where(col("jaccard") >= threshold)
+      }
+      // ---- within-batch lower-id near-dups (same band machinery)
+      val selfVerdict = rows.as("a").join(rows.as("b"),
         col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-          col("a.doc") =!= col("b.doc"))
+          col("a.doc") > col("b.doc"))
         .select(col("a.doc").as("new_doc"), col("b.doc").as("dup_of"),
           col("a.shingle_set").as("ss_a"), col("b.shingle_set").as("ss_b"))
         .distinct()
         .select(col("new_doc"), col("dup_of"),
           TextOps.jaccard(col("ss_a"), col("ss_b")).as("jaccard"))
         .where(col("jaccard") >= threshold)
-    }
-    // ---- within-batch lower-id near-dups (same band machinery)
-    val selfVerdict = rows.as("a").join(rows.as("b"),
-      col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-        col("a.doc") > col("b.doc"))
-      .select(col("a.doc").as("new_doc"), col("b.doc").as("dup_of"),
-        col("a.shingle_set").as("ss_a"), col("b.shingle_set").as("ss_b"))
-      .distinct()
-      .select(col("new_doc"), col("dup_of"),
-        TextOps.jaccard(col("ss_a"), col("ss_b")).as("jaccard"))
-      .where(col("jaccard") >= threshold)
 
-    val flagged = corpusVerdict.unionAll(selfVerdict)
-      .groupBy(col("new_doc"))
-      .agg(min(struct(col("dup_of"), col("jaccard"))).as("m"))
-      .select(lit(batchId).as("batch_id"), col("new_doc"),
-        col("m.dup_of").as("dup_of"), col("m.jaccard").as("jaccard"))
-      .localCheckpoint(true) // verdict read twice below
+      val flagged = corpusVerdict.unionAll(selfVerdict)
+        .groupBy(col("new_doc"))
+        .agg(min(struct(col("dup_of"), col("jaccard"))).as("m"))
+        .select(lit(batchId).as("batch_id"), col("new_doc"),
+          col("m.dup_of").as("dup_of"), col("m.jaccard").as("jaccard"))
+        .localCheckpoint(true) // verdict read twice below
 
-    // ---- admit novel docs into the index via staged deterministic moves
-    val admitted = rows.join(
-      flagged.select(col("new_doc").as("doc")), Seq("doc"), "left_anti")
-    val staging = s"$path/_staging_batch_$batchId"
-    admitted.repartition(col("bk"))
-      .write.mode("overwrite").partitionBy("bk").parquet(staging)
-    val stagingDir = Paths.get(staging)
-    val stagedParts = scala.util.Using.resource(Files.list(stagingDir)) { st =>
-      st.iterator().asScala
-        .filter(p => Files.isDirectory(p) &&
-          p.getFileName.toString.startsWith("bk="))
-        .toSeq.sortBy(_.getFileName.toString)
+      // ---- admit novel docs into the index; verdicts as one file
+      stage.partitioned(rows.join(
+        flagged.select(col("new_doc").as("doc")), Seq("doc"), "left_anti"),
+        "bk")
+      stage.single(flagged, "_verdicts")
     }
-    stagedParts.foreach { dir =>
-      val dest = Paths.get(path, dir.getFileName.toString)
-      Files.createDirectories(dest)
-      val parts = scala.util.Using.resource(Files.list(dir)) { st =>
-        st.iterator().asScala
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-          .toSeq.sortBy(_.getFileName.toString)
-      }
-      parts.zipWithIndex.foreach { case (f, i) =>
-        val name = if (i == 0) s"batch-$batchId.parquet"
-          else s"batch-$batchId-$i.parquet"
-        Files.move(f, dest.resolve(name), StandardCopyOption.REPLACE_EXISTING)
-      }
-    }
-    // verdicts: deterministic single file per batch
-    val vDir = Paths.get(path, "_verdicts")
-    Files.createDirectories(vDir)
-    val vStaging = s"$path/_staging_verdicts_$batchId"
-    flagged.coalesce(1).write.mode("overwrite").parquet(vStaging)
-    val vFile = scala.util.Using.resource(Files.list(Paths.get(vStaging))) { st =>
-      st.iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet"))
-    }
-    vFile.foreach(f => Files.move(f, vDir.resolve(s"batch-$batchId.parquet"),
-      StandardCopyOption.REPLACE_EXISTING))
-
-    Files.createDirectories(Paths.get(path))
-    Files.write(logPath(path), s"$batchId\n".getBytes(StandardCharsets.UTF_8),
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
-    Seq(stagingDir, Paths.get(vStaging)).foreach { d =>
-      if (Files.exists(d))
-        scala.util.Using.resource(Files.walk(d)) { st =>
-          st.sorted(java.util.Comparator.reverseOrder())
-            .iterator().asScala.toList
-        }.foreach(Files.deleteIfExists(_))
-    }
-    true
-  }
 }

@@ -1,10 +1,5 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -28,8 +23,8 @@ import graft.pipeline.KMeans
   *  3. fold into the cumulative state, recompute centroids, persist.
   *
   * State is k x dim sums + k counts + the k seed vectors — kilobytes,
-  * written atomically as `state-<batchId>` (tmp + move) under `root`,
-  * newest file wins on reload. Idempotence: a batchId at or below the
+  * written atomically as `state-<batchId>` (tmp + move) under `root`
+  * through [[SegmentLog.writeState]], newest file wins on reload. Idempotence: a batchId at or below the
   * newest applied id is a NOOP (replay-safe); a crash between compute
   * and persist replays into the same deterministic state because
   * assignment depends only on the PREVIOUS state and the batch rows.
@@ -67,54 +62,20 @@ object StreamingKMeansSink {
     loadState(root).map(s => KMeans.Model(s.centroids))
 
   /** Newest persisted state under `root`, if any. */
-  def loadState(root: String): Option[State] = {
-    val dir = Paths.get(root)
-    if (!Files.exists(dir)) return None
-    val newest = scala.util.Using.resource(Files.list(dir)) { s =>
-      s.iterator().asScala
-        .filter(_.getFileName.toString.startsWith("state-"))
-        .maxByOption(_.getFileName.toString.stripPrefix("state-").toLong)
+  def loadState(root: String): Option[State] =
+    SegmentLog.readState(root).map { lines =>
+      val k = lines(1).toInt
+      def row(i: Int) = lines(i).split(',').map(_.toLong).toIndexedSeq
+      State(lines.head.toLong, (0 until k).map(j => row(2 + j)),
+        (0 until k).map(j => row(2 + k + j)), row(2 + 2 * k))
     }
-    newest.map(read)
-  }
 
-  private def read(p: Path): State = {
-    val lines = Files.readAllLines(p, StandardCharsets.UTF_8).asScala
-    val applied = lines.head.toLong
-    val k = lines(1).toInt
-    val seeds = (0 until k)
-      .map(j => lines(2 + j).split(',').map(_.toLong).toIndexedSeq)
-    val sums = (0 until k)
-      .map(j => lines(2 + k + j).split(',').map(_.toLong).toIndexedSeq)
-    val counts = lines(2 + 2 * k).split(',').map(_.toLong).toIndexedSeq
-    State(applied, seeds, sums, counts)
-  }
-
-  private def write(root: String, s: State): Unit = {
-    val dir = Paths.get(root)
-    Files.createDirectories(dir)
-    val body = (Seq(s.applied.toString, s.seeds.size.toString) ++
-      s.seeds.map(_.mkString(",")) ++
-      s.sums.map(_.mkString(",")) ++
-      Seq(s.counts.mkString(","))).mkString("\n")
-    val tmp = dir.resolve(s"_tmp-state-${s.applied}")
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, dir.resolve(s"state-${s.applied}"),
-      StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
-    // compact: strictly-older states are dead once the new one is
-    // durable (newest-wins on reload) — without this a long-running
-    // stream accumulates one file per batch forever and every reload
-    // lists all of them
-    scala.util.Using.resource(Files.list(dir)) { st =>
-      st.iterator().asScala
-        .filter { p =>
-          val n = p.getFileName.toString
-          n.startsWith("state-") && n.stripPrefix("state-").toLong < s.applied
-        }
-        .toList
-    }.foreach(Files.deleteIfExists(_))
-  }
+  private def write(root: String, s: State): Unit =
+    SegmentLog.writeState(root, s.applied,
+      (Seq(s.applied.toString, s.seeds.size.toString) ++
+        s.seeds.map(_.mkString(",")) ++
+        s.sums.map(_.mkString(",")) ++
+        Seq(s.counts.mkString(","))).mkString("\n"))
 
   /** Fold one micro-batch into the model. Returns true if applied,
     * false for a replayed/old batchId (NOOP). */

@@ -92,7 +92,7 @@ class AnnIndexSinkSpec extends SparkSpec {
       .select($"neighbor_id").as[Long].collect().toSet
     val probeBefore = Similarity.probeIvfTopK(spark, embDf(Seq(300L)),
       path, 5, nProbe = 4).orderBy($"rank").collect().toSeq
-    AnnIndexSink.compact(spark, path, partCol = "cell")
+    AnnIndexSink.compact(spark, path)
     val perDir = Files.walk(Paths.get(path)).iterator().asScala
       .filter(p => Files.isRegularFile(p) &&
         p.getFileName.toString.endsWith(".parquet"))
@@ -171,11 +171,17 @@ class AnnIndexSinkSpec extends SparkSpec {
   test("replayed batchId is a NOOP; file set unchanged") {
     val path = Files.createTempDirectory("ann-sink3").toString + "/idx"
     Similarity.writeBucketedCorpus(embDf(1L to 20L), path, planes = 3)
+    val corpus = fileFingerprint(path).keySet
     assert(AnnIndexSink.mergeBatch(embDf(Seq(60L, 61L)), path, 5L, planes = 3))
     val once = fileFingerprint(path)
     assert(!AnnIndexSink.mergeBatch(embDf(Seq(60L, 61L)), path, 5L, planes = 3))
     assert(fileFingerprint(path) == once)
     assert(AnnIndexSink.appliedBatches(path) == Set(5L))
+    // the on-disk names a resumed stream depends on
+    assert(once.keySet -- corpus ==
+      Set("bucket=101/batch-5.parquet", "bucket=110/batch-5.parquet"))
+    assert(new String(Files.readAllBytes(Paths.get(path, "_ann_batches")),
+      "UTF-8") == "5\n")
     // and the data did not duplicate: the id appears once
     val n = spark.read.parquet(path)
       .where(org.apache.spark.sql.functions.col("neighbor_id") === 60L).count()

@@ -119,7 +119,7 @@ class HttpChangesFeedSpec extends SparkSpec {
   /** A numeric (1.x) seq: ordinal only, no resume token. */
   private def ord(n: Long): SeqTok = SeqTok(n, None)
 
-  test("latestSeq reads update_seq from the db info document") {
+  test("latest reads update_seq from the db info document") {
     withCouch() { (couch, url) =>
       seed(couch, 7)
       val feed = new HttpChangesFeed(url, "testdb")
@@ -148,7 +148,7 @@ class HttpChangesFeedSpec extends SparkSpec {
     }
   }
 
-  test("nthSeqAfter answers admission control from bare pages") {
+  test("nthAfter answers admission control from bare pages") {
     withCouch() { (couch, url) =>
       seed(couch, 30)
       val feed = new HttpChangesFeed(url, "testdb", pageSize = 8)
@@ -347,7 +347,7 @@ class HttpChangesFeedSpec extends SparkSpec {
   private def withOpaqueCouch(f: (StubCouch, String) => Unit): Unit =
     withCouch() { (couch, url) => couch.opaque = true; f(couch, url) }
 
-  test("opaque seqs: latestSeqTok parses the ordinal and keeps the token") {
+  test("opaque seqs: latest parses the ordinal and keeps the token") {
     withOpaqueCouch { (couch, url) =>
       seed(couch, 7)
       val feed = new HttpChangesFeed(url, "testdb")
@@ -356,7 +356,7 @@ class HttpChangesFeedSpec extends SparkSpec {
     }
   }
 
-  test("opaque seqs: changesTok pages with full-token cursors, token-exact stop") {
+  test("opaque seqs: changes pages with full-token cursors, token-exact stop") {
     withOpaqueCouch { (couch, url) =>
       seed(couch, 25)
       val feed = new HttpChangesFeed(url, "testdb", pageSize = 10)
@@ -377,7 +377,7 @@ class HttpChangesFeedSpec extends SparkSpec {
     }
   }
 
-  test("opaque seqs: nthSeqTokAfter pages bare tokens for admission control") {
+  test("opaque seqs: nthAfter pages bare tokens for admission control") {
     withOpaqueCouch { (couch, url) =>
       seed(couch, 30)
       val feed = new HttpChangesFeed(url, "testdb", pageSize = 10)
@@ -499,7 +499,7 @@ class FileFeedSummarySpec extends SparkSpec {
   private def nth(feed: FileChangesFeed, since: Long, n: Long, cap: Long): Long =
     feed.nthAfter(SeqTok(since, None), n, cap).ord
 
-  test("nthSeqAfter walks file summaries and scans only the boundary file") {
+  test("nthAfter walks file summaries and scans only the boundary file") {
     val dir = Files.createTempDirectory("ffs")
     writeFeed(dir, "a.jsonl", 1L to 10L)
     writeFeed(dir, "b.jsonl", 11L to 20L)

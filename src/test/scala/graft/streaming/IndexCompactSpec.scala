@@ -51,7 +51,7 @@ class IndexCompactSpec extends SparkSpec {
       StandardCopyOption.ATOMIC_MOVE)
     assert(!Files.exists(live))
     // the documented remedy — re-run the compaction — must recover
-    IndexCompact.compactPartitions(spark, root, "pk")
+    IndexCompact.compact(spark, root)
     assert(readIds(root) == expected(parts), "partition lost after crash")
     assert(!Files.exists(Paths.get(root, "_old_pk=0101")))
     assert(parquetsUnder(live).size == 1, "recovered partition not folded")
@@ -65,7 +65,7 @@ class IndexCompactSpec extends SparkSpec {
     val old = Paths.get(root, "_old_pk=x")
     Files.move(live, old, StandardCopyOption.ATOMIC_MOVE)
     Files.createDirectories(live) // crash after createDirectories variant
-    IndexCompact.compactPartitions(spark, root, "pk")
+    IndexCompact.compact(spark, root)
     assert(readIds(root) == expected(parts))
     assert(!Files.exists(old))
   }
@@ -74,13 +74,13 @@ class IndexCompactSpec extends SparkSpec {
     val root = Files.createTempDirectory("ic-leftover").toString + "/idx"
     val parts = Map("z" -> Seq(1L, 2L, 3L, 4L))
     writeTree(root, parts)
-    IndexCompact.compactPartitions(spark, root, "pk")
+    IndexCompact.compact(spark, root)
     // fabricate the crash-after-move-in: stale originals under _old_
     val old = Paths.get(root, "_old_pk=z")
     Files.createDirectories(old)
     Files.copy(parquetsUnder(Paths.get(root, "pk=z")).head,
       old.resolve("compact-0.parquet"))
-    IndexCompact.compactPartitions(spark, root, "pk")
+    IndexCompact.compact(spark, root)
     assert(readIds(root) == expected(parts), "stale originals duplicated")
     assert(!Files.exists(old))
   }
@@ -93,7 +93,7 @@ class IndexCompactSpec extends SparkSpec {
     // int 101 and rewrites under pk=101, duplicating the partition
     val parts = Map("0101" -> Seq(1L, 2L), "7" -> Seq(3L))
     writeTree(root, parts)
-    IndexCompact.compactPartitions(spark, root, "pk")
+    IndexCompact.compact(spark, root)
     assert(spark.conf.get(inferKey, "true") == before, "conf mutated")
     assert(Files.exists(Paths.get(root, "pk=0101")))
     assert(!Files.exists(Paths.get(root, "pk=101")))
@@ -105,7 +105,7 @@ class IndexCompactSpec extends SparkSpec {
     val root = Files.createTempDirectory("ic-crash3").toString + "/idx"
     val parts = Map("m" -> Seq(1L, 2L, 3L), "n" -> Seq(4L))
     writeTree(root, parts)
-    IndexCompact.compactPartitions(spark, root, "pk") // manifests now exist
+    IndexCompact.compact(spark, root) // manifests now exist
     // crash between the two swap renames of a LATER compaction...
     val live = Paths.get(root, "pk=m")
     val old = Paths.get(root, "_old_pk=m")
@@ -114,7 +114,7 @@ class IndexCompactSpec extends SparkSpec {
     // recreated live dir before any compaction re-runs
     Seq(99L).toDF("id").coalesce(1).write.mode("append")
       .parquet(live.toString)
-    IndexCompact.compactPartitions(spark, root, "pk")
+    IndexCompact.compact(spark, root)
     assert(readIds(root) == expected(parts) + (("m", 99L)),
       "pre-crash partition contents lost or post-crash batch dropped")
     assert(!Files.exists(old))
@@ -129,7 +129,7 @@ class IndexCompactSpec extends SparkSpec {
     // AFTER live->_old_ but BEFORE the staged move-in: the ATOMIC_MOVE
     // onto the non-empty dir throws and the fallback must restore the
     // pre-fold files beside the new batch instead of propagating
-    IndexCompact.compactPartitions(spark, root, "pk", () => (), live =>
+    IndexCompact.compact(spark, root, () => (), live =>
       if (live.getFileName.toString == "pk=a")
         Seq(99L).toDF("id").coalesce(1).write.mode("append")
           .parquet(live.toString))
@@ -139,7 +139,7 @@ class IndexCompactSpec extends SparkSpec {
     // partition b (no interference) still folded to one file
     assert(parquetsUnder(Paths.get(root, "pk=b")).size == 1)
     // a later UNCONTENDED run folds partition a too
-    IndexCompact.compactPartitions(spark, root, "pk")
+    IndexCompact.compact(spark, root)
     assert(readIds(root) == expected(parts) + (("a", 99L)))
     assert(parquetsUnder(Paths.get(root, "pk=a")).size == 1)
   }
@@ -149,12 +149,12 @@ class IndexCompactSpec extends SparkSpec {
     val root = Files.createTempDirectory("ic-race").toString + "/idx"
     val parts = Map("a" -> Seq(1L, 2L), "b" -> Seq(3L))
     writeTree(root, parts)
-    IndexCompact.compactPartitions(spark, root, "pk", () => {
+    IndexCompact.compact(spark, root, () => {
       // the mid-compaction sink batch: a new file in a live dir AFTER
       // the fold read — its rows are not in the compacted output
       Seq(99L).toDF("id").coalesce(1).write.mode("append")
         .parquet(Paths.get(root, "pk=a").toString)
-    })
+    }, _ => ())
     assert(readIds(root) == expected(parts) + (("a", 99L)),
       "mid-compaction batch rows lost")
     assert(!Files.exists(Paths.get(root, "_old_pk=a")))

@@ -143,7 +143,7 @@ class InvertedIndexSinkSpec extends SparkSpec {
         .count(_.getFileName.toString.endsWith(".parquet"))
     val before = probe()
     val filesBefore = parquetCount("postings")
-    Retrieval.compact(spark, path)
+    InvertedIndexSink.compact(spark, path)
     assert(probe() == before, "compaction must not change any answer")
     assert(parquetCount("postings") < filesBefore,
       s"expected fewer posting files than $filesBefore")
@@ -160,6 +160,42 @@ class InvertedIndexSinkSpec extends SparkSpec {
         "doc_id", "text", queries, k = 8)
       .orderBy("query_id", "rank").collect().map(_.toString).toSeq
     assert(probe() == adhoc)
+  }
+
+  test("compact: a crash mid-swap of postings, segstats or docids loses nothing") {
+    import org.apache.spark.sql.functions.sum
+    val path = Files.createTempDirectory("inv-idx7").toString + "/idx"
+    assert(InvertedIndexSink.mergeBatch(docs(corpusA), path, 0L, nBuckets = 8))
+    assert(InvertedIndexSink.mergeBatch(docs(corpusB), path, 1L, nBuckets = 8))
+    // "spark" is in every doc, so the next batch recreates its bucket
+    val tb = docs(Seq((0L, "spark"))).select(Retrieval.tokenBucket(col("text"), 8))
+      .collect().head.getLong(0)
+    val crash = new IllegalStateException("crash between the swap renames")
+    // crash after live -> _old_, before the staged fold moves in
+    intercept[IllegalStateException](IndexCompact.compact(spark,
+      s"$path/postings", () => (),
+      live => if (live.getFileName.toString == s"tb=$tb") throw crash))
+    Seq("segstats", "docids").foreach(sub =>
+      intercept[IllegalStateException](IndexCompact.compact(spark,
+        s"$path/$sub", () => (), _ => throw crash)))
+    assert(Files.exists(Paths.get(path, "postings", s"_old_tb=$tb")))
+    assert(!Files.exists(Paths.get(path, "segstats")) &&
+      !Files.exists(Paths.get(path, "docids")))
+    // the restarted stream lands a batch (one new doc, one redelivered
+    // id) in the recreated live dirs before compaction runs again
+    val extra = Seq((99L, "spark merge omega"), (5L, "spark spark zebra"))
+    assert(InvertedIndexSink.mergeBatch(docs(extra), path, 2L, nBuckets = 8))
+    InvertedIndexSink.compact(spark, path)
+    val all = corpusA ++ corpusB :+ (99L -> "spark merge omega")
+    val probed = Retrieval.probeTopK(spark, path, queries, k = 8, nBuckets = 8)
+      .orderBy("query_id", "rank").collect().map(_.toString).toSeq
+    val adhoc = Vocab.bm25TopK(docs(all), "doc_id", "text", queries, k = 8)
+      .orderBy("query_id", "rank").collect().map(_.toString).toSeq
+    assert(probed == adhoc)
+    assert(spark.read.parquet(s"$path/segstats").agg(sum("n_docs"))
+      .head().getLong(0) == all.size.toLong)
+    assert(Seq(s"postings/_old_tb=$tb", "_old_segstats", "_old_docids")
+      .forall(d => !Files.exists(Paths.get(path, d))))
   }
 
   test("a batch's postings land only in the buckets its tokens hash into") {

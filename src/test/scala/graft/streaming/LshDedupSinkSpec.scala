@@ -50,6 +50,12 @@ class LshDedupSinkSpec extends SparkSpec {
     val before = fileNames(path)
     assert(!LshDedupSink.mergeBatch(docs((1L, tA), (2L, tB)), path, 0L))
     assert(fileNames(path) == before)
+    // the on-disk names a resumed stream depends on
+    assert(before == Set("_verdicts/batch-0.parquet",
+      "bk=14/batch-0.parquet", "bk=16/batch-0.parquet", "bk=19/batch-0.parquet",
+      "bk=35/batch-0.parquet", "bk=59/batch-0.parquet", "bk=61/batch-0.parquet"))
+    assert(new String(Files.readAllBytes(Paths.get(path, "_lsh_batches")),
+      "UTF-8") == "0\n")
     // a flagged doc never reaches the index
     assert(LshDedupSink.mergeBatch(docs((5L, tA)), path, 1L))
     assert(spark.read.parquet(path).where($"doc" === 5L).isEmpty)
