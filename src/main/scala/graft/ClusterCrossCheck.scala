@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.Dedup
@@ -22,13 +21,7 @@ import graft.pipeline.Dedup
 object ClusterCrossCheck {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master(s"local[${SparkEntry.localCpus}]")
-      .config("spark.sql.shuffle.partitions", SparkEntry.localCpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.session()
     import spark.implicits._
 
     val d = Tables.load(spark, dir, "documents")

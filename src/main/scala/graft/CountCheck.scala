@@ -56,11 +56,7 @@ object CountCheck {
         "usage: CountCheck [--threshold N] <feed>=<storeRoot> ...")
       sys.exit(3)
     }
-    val spark = SparkSession.builder()
-      .master(s"local[${SparkEntry.localCpus}]")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
     var exitcode = 0
     pairs.foreach { case (feed, store) =>
       val r = check(spark, feed, store)

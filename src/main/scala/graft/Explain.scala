@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspector: print the formatted physical plan and wall time for
   * one or more catalog queries. Usage:
   *   runMain graft.Explain <sfDir> <queryName> [queryName ...]
@@ -12,14 +10,7 @@ object Explain {
     val sfDir = args.head
     val (timeOnly, names) =
       if (args(1) == "-t") (true, args.drop(2)) else (false, args.tail)
-    val cpus = SparkEntry.localCpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
     names.foreach { name =>
       // time builder + action together: iterative operators (p16) run
       // jobs inside the builder, and Bench measures them — so must we

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.streaming.SegmentLog
 
 /** Isolated live-cost baseline for the artifact-backed streaming gates
@@ -60,17 +58,7 @@ object GateBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = SparkEntry.localCpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val spark = SparkEntry.session()
     // TOTAL registry→catalog mapping (VERDICT r14 task 6): a silent
     // .filter here once meant a typo'd GateKeys name just vanished from
     // the sweep — and from the gate-regression baseline — with no error.
@@ -79,16 +67,13 @@ object GateBench {
       SparkEntry.queries.keySet
     require(unknown.isEmpty,
       s"GateKeys entries with no catalog query (typo?): $unknown")
-    val names = gateKeys.keys.toSeq.sorted
-      .filterNot(graft.queries.GateKeys.pending)
-      .filter(n => only.forall(_.exists(n.startsWith)))
+    val names = SparkEntry.selected(gateKeys.keys.toSeq.sorted
+      .filterNot(graft.queries.GateKeys.pending))
     def time(name: String): Double = {
       val t0 = System.nanoTime()
       SparkEntry.queries(name)(spark, sfDir).count()
       val t = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      SparkEntry.release(spark)
       t
     }
     def ms(v: Double): String =

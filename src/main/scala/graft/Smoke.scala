@@ -1,17 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local smoke: the driver's entry check (rows>0 at sf0.001). */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
     val n = SparkEntry.entry(spark).count()
     println(s"FLAGSHIP_ROWS=$n")
     spark.stop()

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.streaming.{FeedConn, MergeSink}
 
 /** End-to-end CDC ingest benchmark: JSONL `_changes` feed → DataSource
@@ -33,13 +31,7 @@ object StreamBench {
     val maxPerTrigger = args.lift(1).map(_.toLong).filter(_ > 0)
     val seedDocs = args.lift(2).map(_.toInt).getOrElse(0)
     val transport = args.lift(3).getOrElse("file")
-    val cpus = SparkEntry.localCpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
 
     val dir = Files.createTempDirectory("streambench")
     val feed = dir.resolve("feed")
@@ -63,7 +55,8 @@ object StreamBench {
     def runPipeline(name: String, cap: Option[Long], path: String): Unit = {
       var reader = spark.readStream.format("couch-changes")
         .options(FeedConn.feedOptions(path))
-      if (path.startsWith("http://")) reader = reader.option("numPartitions", cpus)
+      if (path.startsWith("http://"))
+        reader = reader.option("numPartitions", SparkEntry.localCpus)
       cap.foreach(m =>
         reader = reader.option("maxChangesPerTrigger", m.toString))
       val q = reader.load().writeStream

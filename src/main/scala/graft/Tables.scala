@@ -63,8 +63,7 @@ object Tables {
 
   /** Plan cache: re-listing the parquet footer/file index per query adds
     * fixed latency to every catalog entry; the logical plan is immutable,
-    * so one instance per (session, dir, table) is shared. When
-    * [[pinHot]] has been called the cached entry is also persisted. */
+    * so one instance per (session, dir, table) is shared. */
   private val cache =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
 
@@ -96,13 +95,6 @@ object Tables {
     * fails ONE loud test instead of N downstream analysis errors). */
   def canonicalSchema(name: String): StructType =
     StructType(canonical(name).map { case (c, t) => StructField(c, t) })
-
-  /** Pin every testdata table in executor memory (deserialized columnar
-    * cache) — the hot-working-set posture a resident engine runs with;
-    * used by Bench so repeated queries measure compute, not parquet
-    * decode. */
-  def pinHot(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => load(spark, dir, n).persist().count())
 
   /** Register every table as a temp view so spark.sql(...) works too. */
   def registerAll(spark: SparkSession, dir: String): Unit =

@@ -1,41 +1,22 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = SparkEntry.localCpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // keep high-cardinality typed aggregates (TopK per query id)
-      // hash-based; see the matching note in Bench.scala
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "1000000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
     new java.io.File(outDir).mkdirs()
-    // local-iteration filter: GRAFT_ONLY=p50,p51 runs just those queries
-    // (prefix match); unset = the driver's full-catalog run
-    val only = sys.env.get("GRAFT_ONLY").map(_.split(",").toSeq)
-    def selected(name: String) =
-      only.forall(_.exists(name.startsWith))
-    SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    // GRAFT_ONLY=p50,p51 runs just those queries (local iteration);
+    // unset = the driver's full-catalog run
+    val queries = SparkEntry.queries
+    SparkEntry.selected(queries.keys.toSeq.sorted).foreach { name =>
+      try queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // drop localCheckpoint blocks AND cache entries left behind by
-      // operators that persist within a query (KMeans.train,
-      // Contamination.bloomShingleHits — see Bench)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      SparkEntry.release(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

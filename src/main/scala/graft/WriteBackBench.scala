@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.streaming.{BulkDocsSink, CouchStubServer, JdkHttpPoster}
@@ -26,13 +25,7 @@ object WriteBackBench {
     val n = args.headOption.map(_.toInt).getOrElse(63840)
     val mode = args.lift(1).getOrElse("bulk")
     val chunkSize = args.lift(2).map(_.toInt).getOrElse(50)
-    val cpus = SparkEntry.localCpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
 
     val stub = new CouchStubServer("wb", IndexedSeq.empty)
     val port = stub.start()

@@ -58,10 +58,6 @@ object Rev {
   def ordinalCol(rev: Column): Column =
     split(rev, "-").getItem(0).cast(LongType)
 
-  /** Full-string equality is the idempotence predicate (NOT ordinal
-    * comparison) — an echo of the same rev must NOOP. */
-  def sameRev(a: Column, b: Column): Column = a === b
-
   /** The winning leaf among a change's rev list (`style=all_docs`
     * emits every open conflict branch, in no guaranteed order):
     * CouchDB's deterministic winner is the highest ordinal, ties broken

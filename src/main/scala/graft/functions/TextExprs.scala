@@ -31,7 +31,8 @@ object TextStats {
     s
   }
 
-  /** Tiny per-language stopword lists (TextAnalysis.stopwords). */
+  /** Tiny per-language stopword lists for TextAnalysis.qualityScore and
+    * TextAnalysis.predictLang. */
   val EN: java.util.HashSet[UTF8String] =
     set("the", "a", "of", "and", "to", "in", "is", "it")
   val DE: java.util.HashSet[UTF8String] =

@@ -43,7 +43,7 @@ import org.apache.spark.sql.types._
   * factor). Since each group's buffer is bounded at k entries, raising
   * the threshold to ~1e6 costs only megabytes per task; every session
   * that groups by a high-cardinality key through this aggregate should
-  * set it (Bench/Verify do).
+  * set it ([[graft.SparkEntry.session]] does, for every main).
   */
 object TopK {
 

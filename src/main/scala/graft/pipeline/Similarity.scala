@@ -806,110 +806,6 @@ object Similarity {
     * shuffle is [[topKPerQuery]]'s bounded per-partition top-k buffers.
     * Compose with IVF cells (IVF-PQ) by bucketing the codes table on
     * cell like [[writeIvfCorpus]]. */
-  /** IVF-PQ persisted index (the FAISS IVFPQ shape, Jégou et al. 2011
-    * §V): corpus rows land in Voronoi `cell=` partitions carrying ONLY
-    * (id, m codes, reconstruction norm) — the compressed form of
-    * [[writeIvfCorpus]], pairing IVF's partition pruning with PQ's
-    * 4-ints-per-vector payload. Pivots + codebook persist as bounded
-    * metadata under `_model/` (underscore-hidden from table scans).
-    *
-    * SCALE: at 1e9+ vectors the raw-vector IVF index is the storage
-    * bottleneck (256 B/vector); this one is m bytes-ish per vector, so
-    * the probed cells fit executor memory orders of magnitude longer.
-    * Recall levers: nProbe (cells), trainIters (codebook fit), m/nCode
-    * (code resolution) — all audited by [[recallAtK]] /
-    * [[pqQuantizationError]]. */
-  def writeIvfPqIndex(
-      corpus: DataFrame, path: String, nPivots: Int = 8,
-      m: Int = 4, nCode: Int = 16, trainIters: Int = 0,
-      idCol: String = "vec_id", embCol: String = "embedding"): Unit = {
-    val c = corpusSide(corpus, idCol, embCol)
-    val piv = c.orderBy(col("neighbor_id")).limit(nPivots).collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toIndexedSeq, r.getLong(2)))
-      .toIndexedSeq
-    val cb = pqCodebookTrained(c, m, nCode, trainIters)
-    val affs = piv.map { case (pid, pemb, pnrm) => struct(
-      cosinePrenormed(col("c_emb"), typedLit(pemb), col("c_nrm"),
-        lit(pnrm)).as("cos"),
-      lit(-pid).as("tb")) }
-    val reconNrm = (0 until m).map(s =>
-      element_at(typedLit(cb(s).map(_._3)), col(s"code_$s") + 1)).reduce(_ + _)
-    pqEncodeWith(c, cb)
-      .withColumn("cell", -greatest(affs: _*).getField("tb"))
-      .withColumn("r_nrm", reconNrm)
-      .select(col("neighbor_id") +: col("cell") +: col("r_nrm") +:
-        (0 until m).map(s => col(s"code_$s")): _*)
-      .write.mode("overwrite").partitionBy("cell").parquet(path)
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    piv.map { case (pid, v, n) => (pid, v.toArray, n) }
-      .toDF("pid", "pv", "pn")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_model/pivots")
-    cb.zipWithIndex.flatMap { case (cw, s) =>
-      cw.map { case (code, w, ww) => (s, code, w.toArray, ww) } }
-      .toDF("s", "code", "w", "ww")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_model/codebook")
-  }
-
-  /** ADC probe of the IVF-PQ index: queries pick their nProbe best cells
-    * from the persisted pivots, the codes scan prunes to those `cell=`
-    * partitions, and scoring is per-query LUT lookups exactly as in
-    * [[pqAdcTopK]] — the index's raw vectors were never stored. */
-  def probeIvfPqTopK(
-      spark: org.apache.spark.sql.SparkSession,
-      queries: DataFrame, indexPath: String, k: Int, nProbe: Int = 2,
-      idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    val piv = spark.read.parquet(s"$indexPath/_model/pivots").collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toIndexedSeq, r.getLong(2)))
-      .sortBy(_._1).toIndexedSeq
-    val cbRows = spark.read.parquet(s"$indexPath/_model/codebook").collect()
-    require(piv.nonEmpty && cbRows.nonEmpty,
-      s"IVF-PQ probe: no model at $indexPath/_model — index not built " +
-        "(or built from an empty corpus)")
-    val m = cbRows.map(_.getInt(0)).max + 1
-    val cb: PqCodebook = IndexedSeq.tabulate(m) { s =>
-      cbRows.filter(_.getInt(0) == s).sortBy(_.getInt(1))
-        .map(r => (r.getInt(1), r.getSeq[Long](2).toIndexedSeq, r.getLong(3)))
-        .toIndexedSeq
-    }
-    val sub = cb.head.head._2.size
-    val q0 = queries.select(
-      col(idCol).as("query_id"), quantize(col(embCol)).as("q_emb"))
-      .withColumn("q_nrm", graft.functions.Vectors.dotCol(col("q_emb"), col("q_emb")))
-    val withLut = (0 until m).foldLeft(q0) { (df, s) =>
-      val qs = slice(col("q_emb"), s * sub + 1, sub)
-      df.withColumn(s"lut_$s", array(cb(s).map { case (_, w, _) =>
-        graft.functions.Vectors.dotCol(qs, typedLit(w)) }: _*))
-    }
-    val paffs = piv.map { case (pid, pemb, pnrm) => struct(
-      cosinePrenormed(col("q_emb"), typedLit(pemb), col("q_nrm"),
-        lit(pnrm)).as("cos"),
-      lit(pid).as("tb")) }
-    val wq = Window.partitionBy(col("query_id"))
-      .orderBy(col("paff.cos").desc, col("paff.tb"))
-    val probes = withLut
-      .withColumn("paff", explode(array(paffs: _*)))
-      .withColumn("prn", row_number().over(wq))
-      .where(col("prn") <= nProbe)
-      .select(col("query_id") +: col("q_nrm") +:
-        col("paff.tb").as("probe_cell") +:
-        (0 until m).map(s => col(s"lut_$s")): _*)
-    val cells = probes.select("probe_cell").distinct()
-      .collect().map(_.getLong(0)).toSeq // bounded: <= nPivots cells
-    val idx = spark.read.parquet(indexPath)
-      .where(col("cell").isin(cells: _*)) // partition pruning
-    val adc = (0 until m).map(s =>
-      element_at(col(s"lut_$s"), col(s"code_$s") + 1)).reduce(_ + _)
-    val scored = broadcast(probes).join(idx,
-      col("probe_cell") === col("cell")
-        && col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        (adc.cast("double") /
-          sqrt(col("q_nrm").cast("double") * col("r_nrm").cast("double")))
-          .as("cos"))
-    topKPerQuery(scored, k)
-  }
-
   def pqAdcTopK(
       queries: DataFrame, corpus: DataFrame, k: Int,
       m: Int = 4, nCode: Int = 16, trainIters: Int = 0,

@@ -9,23 +9,7 @@ import org.apache.spark.sql.functions._
   */
 object TextAnalysis {
 
-  /** Tiny per-language stopword lists for the n-gram/stopword language
-    * heuristic. Real pipelines plug in fastText-style models via the
-    * multimodal UDF path; the heuristic is the engine-native fallback. */
-  val stopwords: Map[String, Seq[String]] = Map(
-    "en" -> Seq("the", "a", "of", "and", "to", "in", "is", "it"),
-    "de" -> Seq("der", "die", "das", "und", "ist", "ein", "zu"),
-    "fr" -> Seq("le", "la", "les", "et", "est", "un", "une"),
-    "es" -> Seq("el", "la", "los", "y", "es", "un", "una"))
-
   def tokenCount(words: Column): Column = size(words)
-
-  /** Fraction of tokens found in `list`. (HOF formulation — kept for
-    * ad-hoc lists; the fixed-list hot paths below use the codegen'd
-    * kernels in graft.functions.TextStats.) */
-  def listRatio(words: Column, list: Seq[String]): Column =
-    size(filter(words, w => w.isin(list: _*))).cast("double") /
-      size(words).cast("double")
 
   /** Heuristic quality score in [0,1]:
     * 0.4 * distinct-token ratio (repetition penalty)
@@ -38,14 +22,13 @@ object TextAnalysis {
   def qualityScore(words: Column): Column =
     graft.functions.Text.qualityScore(words)
 
-  /** Stopword-overlap language scores; predicted language = argmax with
-    * a minimum evidence floor, else "und" (undetermined). */
-  def langScores(words: Column): Map[String, Column] =
-    stopwords.map { case (lang, list) => lang -> listRatio(words, list) }
-
-  /** Codegen'd one-pass argmax (graft.functions.PredictLangExpr):
-    * per-language stopword ratios, lexicographic first-wins tiebreak,
-    * `floor` evidence minimum (passed through bit-exactly). */
+  /** Stopword-overlap language guess: the argmax of per-language
+    * stopword ratios (lists in graft.functions.TextStats), lexicographic
+    * first-wins tiebreak, else "und" (undetermined) below the `floor`
+    * evidence minimum (passed through bit-exactly). Codegen'd one pass
+    * (graft.functions.PredictLangExpr). Real pipelines plug in
+    * fastText-style models via the multimodal UDF path; the heuristic is
+    * the engine-native fallback. */
   def predictLang(words: Column, floor: Double = 0.05): Column =
     graft.functions.Text.predictLang(words, floor)
 

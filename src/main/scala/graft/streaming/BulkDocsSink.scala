@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.StructType
@@ -50,52 +49,28 @@ trait DocPoster extends Serializable {
 
 object BulkDocsSink {
 
-  /** [[chunkedByPartition]]'s output: the columns [[chunked]] yields. */
+  /** [[chunkedByPartition]]'s output columns. */
   private val chunkSchema =
     StructType.fromDDL("chunk_no BIGINT, n_docs BIGINT, docs_json STRING")
 
-  /** The reference's chunk arithmetic, verbatim semantics (README.md:518):
-    * `((ROW_NUMBER() OVER (ORDER BY id) - 1) / chunkSize) + 1`.
+  /** Chunk the docs for `_bulk_docs`: one pass over each input
+    * partition, emitting a (chunk_no, n_docs, docs_json) row for every
+    * `chunkSize` rows (a partition's last chunk may be shorter). No
+    * sort, window, aggregate or exchange: read → chunk → POST runs as
+    * ONE stage, the first POST leaves after `chunkSize` rows, and a task
+    * holds one chunk in memory. A task retry re-reads its input
+    * partition.
     *
-    * SCALE NOTE: a global ROW_NUMBER is a single-partition sort plus a
-    * shuffle of every doc into its chunk — faithful to the reference
-    * but a bottleneck at scale. [[chunkedByPartition]] is the scale
-    * path: it chunks each partition as it streams, with no sort and no
-    * shuffle; chunk NUMBERS and contents differ, which an
-    * order-insensitive bulk API does not see. */
-  def chunked(df: DataFrame, idCol: String, docCol: String,
-      chunkSize: Int = 50): DataFrame = {
-    require(chunkSize > 0, s"chunkSize must be positive, got $chunkSize")
-    val w = Window.orderBy(col(idCol))
-    df.withColumn("__rn", row_number().over(w))
-      .withColumn("chunk_no",
-        (floor((col("__rn") - 1) / chunkSize.toDouble) + 1).cast("long"))
-      .groupBy(col("chunk_no"))
-      .agg(
-        count(lit(1)).as("n_docs"),
-        // json_agg with deterministic order (SURVEY §7 hard-part (d)):
-        // collect (rn, doc), sort by rn, project docs
-        concat(lit("["),
-          array_join(transform(
-            array_sort(collect_list(struct(col("__rn"), col(docCol)))),
-            s => s.getField(docCol)), ","),
-          lit("]")).as("docs_json"))
-  }
-
-  /** Scale path: one pass over each input partition, emitting a
-    * (chunk_no, n_docs, docs_json) row for every `chunkSize` rows (a
-    * partition's last chunk may be shorter). No sort, window, aggregate
-    * or exchange: read → chunk → POST runs as ONE stage, the first POST
-    * leaves after `chunkSize` rows, and a task holds one chunk in
-    * memory. A task retry re-reads its input partition.
-    *
-    * Chunks follow the partition's row order, not `idCol` (kept for
-    * symmetry with [[chunked]]). `chunk_no` is the partition index in
-    * the high 32 bits and the chunk's index within its partition in the
-    * low 32, so keys never collide. A null doc counts in `n_docs` and is
-    * left out of `docs_json` (`array_join`'s rule, as in [[chunked]]).
-    * Doc bytes are copied once, UTF-8 into the chunk's buffer, with no
-    * String round trip. */
+    * The reference numbers chunks with a global sort,
+    * `((ROW_NUMBER() OVER (ORDER BY id) - 1) / chunkSize) + 1`
+    * (README.md:518); the Relational entry `q8_bulk_chunks` keeps that
+    * arithmetic under its DuckDB oracle. Here chunks follow the partition's row order and
+    * `idCol` is not read, which an order-insensitive bulk API does not
+    * see. `chunk_no` is the partition index in the high 32 bits and the
+    * chunk's index within its partition in the low 32, so keys never
+    * collide. A null doc counts in `n_docs` and is left out of
+    * `docs_json`. Doc bytes are copied once, UTF-8 into the chunk's
+    * buffer, with no String round trip. */
   def chunkedByPartition(df: DataFrame, idCol: String, docCol: String,
       chunkSize: Int = 50): DataFrame = {
     require(chunkSize > 0, s"chunkSize must be positive, got $chunkSize")

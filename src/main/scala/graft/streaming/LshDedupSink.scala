@@ -66,14 +66,17 @@ object LshDedupSink {
   /** Batch ids already merged. */
   def appliedBatches(root: String): Set[Long] = SegmentLog.applied(root, Log)
 
-  /** All verdicts so far: (batch_id, new_doc, dup_of, jaccard). */
+  /** All verdicts so far: (batch_id, new_doc, dup_of, jaccard). The
+    * committed `_verdicts/batch-<id>.parquet` files are listed by name:
+    * Spark's file index skips a `_`-prefixed root, and a directory with
+    * no batch file yet (a crash before the first move) reads empty. */
   def verdicts(spark: org.apache.spark.sql.SparkSession, root: String): DataFrame = {
-    val dir = Paths.get(root, "_verdicts")
-    if (!Files.exists(dir)) {
+    val files = SegmentLog.parquetFiles(Paths.get(root, "_verdicts"))
+    if (files.isEmpty) {
       import spark.implicits._
       Seq.empty[(Long, Long, Long, Double)]
         .toDF("batch_id", "new_doc", "dup_of", "jaccard")
-    } else spark.read.parquet(dir.toString)
+    } else spark.read.parquet(files.map(_.toString): _*)
   }
 
   /** foreachBatch adapter:

@@ -137,6 +137,18 @@ class LshDedupSinkSpec extends SparkSpec {
     assert(LshDedupSink.verdicts(spark, path).isEmpty)
   }
 
+  test("a _verdicts directory with no batch file reads back empty") {
+    // the state a crash leaves between the commit's createDirectories
+    // and its first move; a stray non-parquet file must not be read
+    val path = Files.createTempDirectory("lsh-sink").toString + "/idx"
+    val dir = Files.createDirectories(Paths.get(path, "_verdicts"))
+    assert(LshDedupSink.verdicts(spark, path).isEmpty)
+    Files.writeString(dir.resolve("stray.tmp"), "not parquet")
+    val v = LshDedupSink.verdicts(spark, path)
+    assert(v.isEmpty)
+    assert(v.columns.toSeq == Seq("batch_id", "new_doc", "dup_of", "jaccard"))
+  }
+
   test("drives from a real Structured Streaming query via foreachBatch") {
     val path = Files.createTempDirectory("lsh-sink").toString + "/idx"
     implicit val sq = spark.sqlContext

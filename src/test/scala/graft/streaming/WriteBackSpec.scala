@@ -22,15 +22,20 @@ class WriteBackSpec extends SparkSpec {
     val stub = new CouchStubServer("wb", IndexedSeq.empty)
     val port = stub.start()
     try {
+      val in = docs(120)
+      // each input partition chunks on its own: ceil(rows / 50) apiece
+      val chunks = in.rdd.mapPartitions(it => Iterator((it.size + 49) / 50))
+        .collect().sum
+      assert(in.rdd.getNumPartitions > 1)
       val out = BulkDocsSink.post(
-        BulkDocsSink.chunked(docs(120), "id", "doc", chunkSize = 50),
+        BulkDocsSink.chunkedByPartition(in, "id", "doc", chunkSize = 50),
         s"http://127.0.0.1:$port/wb", new JdkHttpPoster())
         .collect()
-      assert(out.length == 3) // 120 docs / 50 per chunk
+      assert(out.length == chunks)
       assert(out.forall(_.getInt(2) == 201))
       assert(out.map(_.getLong(1)).sum == 120L)
       val (bulk, puts, bytes) = stub.writeStats
-      assert(bulk == 3 && puts == 0 && bytes > 0)
+      assert(bulk == chunks && puts == 0 && bytes > 0)
     } finally stub.stop()
   }
 
@@ -43,7 +48,8 @@ class WriteBackSpec extends SparkSpec {
       // one 501-doc chunk (chunkSize > corpus => a single POST): the
       // stub enforces the reference's ceiling and the sink surfaces it
       val oversized = BulkDocsSink.post(
-        BulkDocsSink.chunked(docs(501), "id", "doc", chunkSize = 1000),
+        BulkDocsSink.chunkedByPartition(docs(501).coalesce(1), "id", "doc",
+          chunkSize = 1000),
         url, new JdkHttpPoster()).collect()
       assert(oversized.length == 1 && oversized.head.getInt(2) == 413)
       assert(stub.bulkRejectedCount == 1L)
@@ -51,14 +57,16 @@ class WriteBackSpec extends SparkSpec {
       // as zero conflicts)
       val thrown = intercept[org.apache.spark.SparkException] {
         BulkDocsSink.postPerDoc(
-          BulkDocsSink.chunked(docs(501), "id", "doc", chunkSize = 1000),
+          BulkDocsSink.chunkedByPartition(docs(501).coalesce(1), "id", "doc",
+            chunkSize = 1000),
           url, new JdkHttpPoster()).collect()
       }
       assert(thrown.getMessage.contains("413") ||
         Option(thrown.getCause).exists(_.getMessage.contains("413")))
       // the same corpus in compliant 50-doc chunks sails through
       val ok = BulkDocsSink.post(
-        BulkDocsSink.chunked(docs(501), "id", "doc", chunkSize = 50),
+        BulkDocsSink.chunkedByPartition(docs(501).coalesce(1), "id", "doc",
+          chunkSize = 50),
         url, new JdkHttpPoster()).collect()
       assert(ok.length == 11 && ok.forall(_.getInt(2) == 201))
       assert(stub.bulkRejectedCount == 2L)
@@ -88,7 +96,8 @@ class WriteBackSpec extends SparkSpec {
     val port = stub.start()
     try {
       val out = BulkDocsSink.postPerDoc(
-        BulkDocsSink.chunked(docs(10), "id", "doc", chunkSize = 4),
+        BulkDocsSink.chunkedByPartition(docs(10).coalesce(1), "id", "doc",
+          chunkSize = 4),
         s"http://127.0.0.1:$port/wb", new JdkHttpPoster())
         .collect()
       assert(out.length == 10) // one row per doc, batch did NOT fail
@@ -449,15 +458,12 @@ class WriteBackSpec extends SparkSpec {
     assert(r.getInt(4) == 2) // all-null chunks are "[]"
   }
 
-  test("chunkSize <= 0 fails clearly in both chunkers") {
+  test("chunkSize <= 0 fails clearly") {
     for (n <- Seq(0, -5)) {
-      val a = intercept[IllegalArgumentException] {
+      val e = intercept[IllegalArgumentException] {
         BulkDocsSink.chunkedByPartition(docs(10), "id", "doc", n)
       }
-      val b = intercept[IllegalArgumentException] {
-        BulkDocsSink.chunked(docs(10), "id", "doc", n)
-      }
-      assert(a.getMessage.contains("chunkSize") && b.getMessage.contains("chunkSize"))
+      assert(e.getMessage.contains("chunkSize"))
     }
   }
 

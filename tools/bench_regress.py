@@ -1,19 +1,18 @@
 #!/usr/bin/env python3
-"""Full-catalog per-entry bench regression gate (VERDICT r14 task 1).
+"""Full-catalog per-entry bench regression gate.
 
 Usage: python3 tools/bench_regress.py <detail_prev.json> <detail_cur.json> [ratio=1.5] [floor=0.25]
 
 Compares two Bench detail files (per-query Spark seconds) and reports
 every entry whose wall grew by more than `ratio` over the prior
-round — the query-plane twin of gate_regress.py, covering the ~174
-entries the j-gate baseline does not (61 of them slid >1.5x in r14's
-degraded driver sweep with no alarm). Entries where BOTH sides are
+round — the query-plane twin of gate_regress.py, covering the catalog
+entries the j-gate baseline does not. Entries where BOTH sides are
 under `floor` seconds are ignored: sub-250 ms walls are scheduler
-noise, not plan properties. Flagged entries get an isolated re-measure
-(SPARK_GRAFT_BENCH_ONLY=<name>) against the prior round's committed
-detail before bisecting — box drift runs ~1.1-1.3x JVM-side between
-sessions. Exits 1 on violations; every one needs a fix or a recorded
-adjudication in the round's bench notes.
+noise, not plan properties. Bench has no retries, so a flagged entry
+gets an isolated re-measure on the same box
+(GRAFT_ONLY=<name> sbt "runMain graft.Bench", several runs) before
+bisecting; sweeps on one box drift 10-30% between runs. Compare detail
+files from the same box only. Exits 1 on violations.
 """
 import sys, json
 

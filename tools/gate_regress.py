@@ -1,15 +1,16 @@
 #!/usr/bin/env python3
-"""Gate-machinery regression gate (VERDICT r13 task 6).
+"""Gate-machinery regression gate.
 
 Usage: python3 tools/gate_regress.py <jgate_prev.json> <jgate_cur.json> [ratio=1.5]
 
 Compares two graft.GateBench outputs (per-gate isolated LIVE rebuild
 cost) and reports every gate whose live cost grew by more than `ratio`
 over the prior round — the streaming-machinery twin of the query
-plane's isolated-remeasure protocol. Box drift runs ~1.1-1.3x JVM-side
-between sessions; a flagged gate gets an isolated re-measure
-(SPARK_GRAFT_BENCH_ONLY on GateBench) before bisecting. Exits 1 on
-violations; new gates (no baseline) are listed informationally.
+plane's isolated-remeasure protocol. Runs on one box drift 10-30%; a
+flagged gate gets an isolated re-measure on the same box
+(GRAFT_ONLY=<name> sbt "runMain graft.GateBench") before bisecting.
+Exits 1 on violations; new gates (no baseline) are listed
+informationally.
 """
 import sys, json
 
