@@ -62,13 +62,10 @@ object GateBench {
     // TOTAL registry→catalog mapping (VERDICT r14 task 6): a silent
     // .filter here once meant a typo'd GateKeys name just vanished from
     // the sweep — and from the gate-regression baseline — with no error.
-    // Entries that deliberately lead the catalog go in GateKeys.pending.
-    val unknown = gateKeys.keySet -- graft.queries.GateKeys.pending --
-      SparkEntry.queries.keySet
+    val unknown = gateKeys.keySet -- SparkEntry.queries.keySet
     require(unknown.isEmpty,
       s"GateKeys entries with no catalog query (typo?): $unknown")
-    val names = SparkEntry.selected(gateKeys.keys.toSeq.sorted
-      .filterNot(graft.queries.GateKeys.pending))
+    val names = SparkEntry.selected(gateKeys.keys.toSeq.sorted)
     def time(name: String): Double = {
       val t0 = System.nanoTime()
       SparkEntry.queries(name)(spark, sfDir).count()

@@ -1,6 +1,6 @@
 package graft.cdc
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -25,9 +25,11 @@ import org.apache.spark.sql.expressions.Window
   * SCALE: both sides shuffle-partition on `id`; at 100 TB the state table
   * should be bucketed by id so only the (much smaller) batch moves.
   * `planActions` additionally exposes the per-row decision, and
-  * [[effectiveChanges]] is the same grid in delta form: only the rows a
-  * batch changes, decided against the state's (id, rev) without
-  * shuffling the state (write amplification = changed rows only).
+  * [[delta]] is the same grid in delta form: only the rows a batch
+  * changes, decided on the driver against a live id -> rev index, so
+  * the state is neither joined nor scanned (write amplification =
+  * changed rows only). Its driver side holds one key row per change of
+  * the batch, on top of the caller's index.
   */
 object ChangeApply {
 
@@ -84,7 +86,7 @@ object ChangeApply {
 
   /** The T4 grid for one incoming change against its stored row
     * (`sId` null when the id is absent from the state) — the rev guard
-    * [[planActions]] and [[effectiveChanges]] share. */
+    * of [[planActions]]; [[delta]] runs it on the driver. */
   private def revGuard(sId: Column, sRev: Column, cRev: Column,
       cDeleted: Column, excluded: Column): Column =
     when(cDeleted && sId.isNotNull, lit("DELETE"))
@@ -101,46 +103,79 @@ object ChangeApply {
     if (excludeTypes.isEmpty) lit(false)
     else get_json_object(doc, "$.type").isin(excludeTypes.toSeq: _*)
 
-  /** Delta form of [[applyChanges]]: only the rows the batch changes —
-    * (id, rev, doc, deleted) for every INSERT and UPDATE, and a
-    * tombstone (doc null, deleted true) for every DELETE; NOOP,
-    * DELETE_NOOP and IGNORE rows are dropped. Folding these rows over
-    * the state (replace by id, drop tombstones) equals
-    * `applyChanges(state, changes, ...)` row for row.
+  /** The T4 grid of [[revGuard]] for one change on the driver: `stored`
+    * is the id's stored rev, None when the id is absent. The rev compare
+    * is full-string and a null rev never equals (SQL `===`). */
+  private def decide(stored: Option[String], rev: String, deleted: Boolean,
+      excluded: Boolean): String =
+    stored match {
+      case Some(_) if deleted => "DELETE"
+      case None if deleted => "DELETE_NOOP"
+      case None if excluded => "IGNORE"
+      case None => "INSERT"
+      case Some(s) if s != null && s == rev => "NOOP"
+      case Some(_) => "UPDATE"
+    }
+
+  /** One change's keys, as [[delta]] collects them. */
+  private[cdc] final case class Key(row: Long, id: String, seq: Long, rev: String,
+      deleted: Boolean, excluded: Boolean, len: Int)
+
+  /** One batch's effective changes: `rows` are (id, rev, doc, deleted)
+    * for every INSERT and UPDATE plus a tombstone (doc null, deleted
+    * true) for every DELETE, one row per id; NOOP, DELETE_NOOP and
+    * IGNORE rows are dropped. `changed` is what they do to the live
+    * id -> rev (Some(rev) upserts, None deletes), and `bytes` the docs'
+    * size, to size the write by. */
+  final case class Delta(rows: DataFrame, changed: Map[String, Option[String]],
+      bytes: Long)
+
+  /** Delta form of [[applyChanges]], decided on the driver against the
+    * state's live id -> rev (`stored`): folding `rows` over the state
+    * (replace by id, drop tombstones) equals `applyChanges` row for row.
     *
-    * `stored` is the state as versioned rows (id, rev, deleted, v): an
-    * id's current row is its highest-`v` row, and the id is absent when
-    * that row is a tombstone (`deleted`; null reads as false). Only the
-    * rows of the batch's ids are read: the batch's key set is broadcast
-    * into the `stored` scan (semi-join), the matching rows come back as
-    * a broadcast too, and the newest of them is picked inside the
-    * batch's own `id` partitioning — the state is scanned, never
-    * shuffled, and both broadcasts are O(batch). */
-  def effectiveChanges(
-      stored: DataFrame,
+    * `changes` is read twice and should be cached, so its source runs
+    * once. The first read collects only the keys (row, id, seq, rev,
+    * deleted, excluded on the `mapDoc`-mapped doc, doc length); the
+    * driver folds them with [[latestPerKey]]'s order and runs the T4
+    * grid per id. `rows` is the second read, filtered to the winning
+    * rows by their `monotonically_increasing_id`, which the cache makes
+    * stable across the two reads — so exact duplicates of a winner
+    * never both pass, and no join or shuffle touches the state. */
+  def delta(
+      stored: String => Option[String],
       changes: DataFrame,
       excludeTypes: Set[String] = Set.empty,
-      mapDoc: Option[Column => Column] = None): DataFrame = {
-    val latest = latestPerKey(withMapDoc(changes, mapDoc))
-    val candidates = stored
-      .join(broadcast(changes.select(col("id").as("c_id"))),
-        col("id") === col("c_id"), "left_semi")
-      .select(col("id").as("s_id"), struct(col("v"), col("rev"),
-        coalesce(col("deleted"), lit(false)).as("deleted")).as("s"))
-    latest.join(broadcast(candidates), col("id") === col("s_id"), "left_outer")
-      // newest stored version (struct order: `v` first); `latest` is
-      // already partitioned by id, so this adds no shuffle
-      .groupBy(col("id"))
-      .agg(any_value(col("rev")).as("rev"), any_value(col("deleted")).as("deleted"),
-        any_value(col("doc")).as("doc"), max(col("s")).as("s"))
-      .select(col("id"), col("rev"), col("doc"),
-        revGuard(when(!col("s.deleted"), col("id")), col("s.rev"),
-          col("rev"), col("deleted"), excluded(col("doc"), excludeTypes))
-          .as("action"))
-      .where(col("action").isin("INSERT", "UPDATE", "DELETE"))
-      .select(col("id"), col("rev"),
-        when(col("action") =!= "DELETE", col("doc")).as("doc"),
-        (col("action") === "DELETE").as("deleted"))
+      mapDoc: Option[Column => Column] = None): Delta = {
+    val keyed = withMapDoc(changes
+      .withColumn("__row", monotonically_increasing_id())
+      .withColumn("__len", coalesce(octet_length(col("doc")), lit(0)))
+      .withColumn("deleted", coalesce(col("deleted"), lit(false))), mapDoc)
+    val keys = keyed.select(col("__row").as("row"), col("id"),
+        col("seq").cast("long").as("seq"), col("rev"), col("deleted"),
+        coalesce(excluded(col("doc"), excludeTypes), lit(false)).as("excluded"),
+        col("__len").as("len"))
+      .as(Encoders.product[Key]).collect()
+    // latestPerKey's order: max seq, a seq tie to the delete
+    val top = scala.collection.mutable.HashMap.empty[String, Key]
+    keys.foreach { k =>
+      top.get(k.id) match {
+        case Some(t) if t.seq > k.seq || (t.seq == k.seq && (t.deleted || !k.deleted)) =>
+        case _ => top(k.id) = k
+      }
+    }
+    val won = top.valuesIterator.filter(k =>
+      decide(stored(k.id), k.rev, k.deleted, k.excluded) match {
+        case "INSERT" | "UPDATE" | "DELETE" => true
+        case _ => false
+      }).toSeq
+    val rowIds = won.map(_.row).sorted.toArray
+    val winner = udf((r: Long) => java.util.Arrays.binarySearch(rowIds, r) >= 0)
+    Delta(
+      keyed.where(winner(col("__row"))).select(col("id"), col("rev"),
+        when(!col("deleted"), col("doc")).as("doc"), col("deleted")),
+      won.map(k => k.id -> Option.when(!k.deleted)(k.rev)).toMap,
+      won.map(_.len.toLong).sum)
   }
 
   private def withMapDoc(changes: DataFrame,

@@ -42,14 +42,6 @@ object GateKeys {
     "j40_stream_interval_join" -> "j40join-v3",
     "j41_stream_sliding_counts" -> "j41slide-v2")
 
-  /** Registry entries that deliberately LEAD the catalog (gate key
-    * reserved, catalog entry not yet shipped). Everything in [[byQuery]]
-    * but not here must resolve to a real `SparkEntry.queries` name —
-    * [[graft.GateBench]] refuses to run otherwise and ArtifactCacheSpec
-    * pins the totality, so a typo'd key can no longer silently drop a
-    * gate from the regression baseline (VERDICT r14 task 6). */
-  val pending: Set[String] = Set.empty
-
   /** Key for the unique gated entry whose name starts with `tag` —
     * lets the definition sites keep their short "j19"-style tags. */
   def forTag(tag: String): String = {

@@ -1,8 +1,10 @@
 package graft.streaming
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import scala.collection.concurrent.TrieMap
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -29,11 +31,22 @@ import graft.cdc.ChangeApply
   * Each applied batch writes a new version v=n+1 and swaps the pointer:
   *  - first batch (no store, or only the [[bootstrap]]-empty v=0): a
   *    base, [[ChangeApply.initialState]] — O(batch), no join;
-  *  - otherwise a delta: the rows [[ChangeApply.effectiveChanges]] keeps
-  *    (INSERT/UPDATE rows plus DELETE tombstones), decided by the rev
-  *    guard against the stored (id, rev) of the batch's ids only —
-  *    O(batch) written, the base's and deltas' id/rev columns scanned
-  *    once, never shuffled.
+  *  - otherwise a delta: the rows [[ChangeApply.delta]] keeps
+  *    (INSERT/UPDATE rows plus DELETE tombstones, one row per id) —
+  *    O(batch) written, in one file per `spark.sql.files.maxPartitionBytes`
+  *    of docs, so a small delta is one file.
+  * The rev guard of a delta runs in two jobs and never reads the store:
+  * the cached batch's keys are collected, the driver decides the T4
+  * grid against the rev index (the store's live id -> rev), and the
+  * batch's winning rows are written.
+  *
+  * The rev index lives with the batch's session (per store root), and a
+  * streaming query runs its batches in its own cloned session, so an
+  * index lives as long as its query. It is tagged with the pointer it
+  * reflects; on a mismatch (a query's first delta batch, a restart, another
+  * writer) it is rebuilt by one scan of the base and deltas' (id, rev,
+  * deleted) columns. It advances only after a delta's pointer swap, and
+  * a compaction (same live rows) only re-tags it.
   * When the log then weighs twice the base, the same batch compacts:
   * [[readState]] is written as a new base v=n+2 and the pointer swaps
   * again, retiring the log. Both swaps leave a complete state, so a
@@ -62,9 +75,9 @@ import graft.cdc.ChangeApply
   * A multiple c bounds the scan at 1 + c and the writes at 2 + 1/c.
   * Raising c from 1 to 2 cuts the write bound by 1/2 for one more base
   * in the scan bound, from 2 to 3 by only 1/6. The write bound is paid
-  * on whole docs by every batch; the scan a batch pays is its rev
-  * guard's id/rev columns, a small part of a doc store's bytes — so the
-  * rule takes the knee, c = 2.
+  * on whole docs by every batch; the scan bound by readers of the state
+  * and by an index rebuild, once per query — so the rule takes the
+  * knee, c = 2.
   *
   * Reader window: after a swap, the versions older than the PREVIOUS
   * pointer's base are deleted; everything that pointer names stays, so
@@ -77,9 +90,15 @@ import graft.cdc.ChangeApply
   * converges under at-least-once redelivery. A two-token pointer
   * ("n batchId", the snapshot layout) reads as base n with no deltas.
   *
-  * SCALE: the batch's key set and the log's key set are broadcast. A log
-  * too large to broadcast is the point to write the base bucketed by
-  * `id`, making the anti-join co-partitioned.
+  * SCALE: [[readState]] broadcasts the log's key set. A log too large
+  * to broadcast is the point to write the base bucketed by `id`, making
+  * the anti-join co-partitioned. The rev index holds every live id and
+  * rev on the driver: about 190 bytes per live id with 20-char ids and
+  * 34-char revs (measured on JDK 17 with compressed oops: 187), so
+  * 10 M live ids take about 1.9 GB of driver heap per running query,
+  * and its rebuild collects the stored (id, rev) rows once. Past that,
+  * the guard needs the index on the executors (a store bucketed by id,
+  * probed per bucket).
   */
 object MergeSink {
 
@@ -137,14 +156,38 @@ object MergeSink {
         }
     }
 
-  /** Every stored row version, (id, rev, deleted, v), as ONE scan of
-    * the base and its deltas (base rows read `deleted` as null) — the
-    * input of the rev guard, [[ChangeApply.effectiveChanges]]. */
-  private[streaming] def versions(spark: SparkSession, root: String,
-      p: Pointer): DataFrame =
+  /** The live id -> rev of the store at pointer `p`, as the rev guard
+    * reads it; `at` is the pointer it reflects. */
+  private[streaming] final class RevIndex(var at: Pointer,
+      val revs: mutable.HashMap[String, String])
+
+  /** Rev indexes per session, then per store root. A streaming query
+    * runs its batches in its own cloned session, so an index lives as
+    * long as its query; a session that is gone frees its indexes. */
+  private val indexesBySession =
+    new java.util.WeakHashMap[SparkSession, TrieMap[String, RevIndex]]()
+
+  private def revIndexes(spark: SparkSession): TrieMap[String, RevIndex] =
+    indexesBySession.synchronized(
+      indexesBySession.computeIfAbsent(spark, _ => TrieMap.empty))
+
+  /** Build the index of pointer `p` by ONE scan of the base and its
+    * deltas' (id, rev, deleted, v), folded on the driver oldest version
+    * first (each version holds one row per id; base rows read `deleted`
+    * as null). */
+  private def scanIndex(spark: SparkSession, root: String, p: Pointer)
+      : RevIndex = {
+    val revs = mutable.HashMap.empty[String, String]
     spark.read.schema(logSchema).option("basePath", root)
       .parquet((p.base to p.version).map(v => s"$root/v=$v"): _*)
-      .select(col("id"), col("rev"), col("deleted"), col("v"))
+      .select(col("id"), col("rev"), coalesce(col("deleted"), lit(false)),
+        col("v"))
+      .collect().sortBy(_.getLong(3)).foreach { r =>
+        if (r.getBoolean(2)) revs -= r.getString(0)
+        else revs(r.getString(0)) = r.getString(1)
+      }
+    new RevIndex(p, revs)
+  }
 
   /** (version, lastAppliedBatchId) from the _CURRENT pointer. The
     * version rises on every applied batch (by two when it compacts). */
@@ -192,24 +235,40 @@ object MergeSink {
     val cur = pointer(root)
     if (cur.exists(_.batchId >= batchId)) return false // replayed batch: NOOP
     val v = cur.fold(0L)(_.version + 1)
-    val next = cur match {
+    val indexes = revIndexes(spark)
+    val (next, applied) = cur match {
       case Some(p) if !isBootstrapOnly(p) =>
-        // the rev guard reads the batch twice (its keys, then its rows):
-        // cache it so the source (an HTTP fetch) runs once
+        // the guard reads the batch twice (its keys, then its winning
+        // rows): cache it so the source (an HTTP fetch) runs once
         val owned = batch.storageLevel == StorageLevel.NONE
         val once = if (owned) batch.persist() else batch
-        try writeVersion(ChangeApply.effectiveChanges(
-            versions(spark, root, p), once, excludeTypes, mapDoc), root, v)
-        finally if (owned) once.unpersist()
-        Pointer(v, batchId, p.base)
+        try {
+          val index = indexes.get(root).filter(_.at == p)
+            .getOrElse { val ix = scanIndex(spark, root, p); indexes(root) = ix; ix }
+          val d = ChangeApply.delta(index.revs.get, once, excludeTypes, mapDoc)
+          // a small delta is one file, so its log weight is its bytes
+          val files = d.bytes / spark.sessionState.conf.filesMaxPartitionBytes + 1
+          writeVersion(d.rows.coalesce(files.toInt), root, v)
+          (Pointer(v, batchId, p.base), Some(index -> d.changed))
+        } finally if (owned) once.unpersist()
       case _ =>
         // first batch: no state (or only the bootstrap-empty v=0) —
-        // O(batch) insert path, no join against an empty table
+        // O(batch) insert path, no join against an empty table; the
+        // next batch scans the new base into an index
+        indexes.remove(root)
         writeVersion(ChangeApply.initialState(batch, excludeTypes, mapDoc),
           root, v)
-        Pointer(v, batchId, v)
+        (Pointer(v, batchId, v), None)
     }
     swap(root, next)
+    // only a swapped-in delta advances the index
+    applied.foreach { case (index, changed) =>
+      changed.foreach {
+        case (id, Some(rev)) => index.revs(id) = rev
+        case (id, None) => index.revs -= id
+      }
+      index.at = next
+    }
     // compaction: fold the log into a new base once it weighs LogPerBase
     // bases — a scan that shuffles only the log, never the base
     if (next.version > next.base &&
@@ -217,7 +276,10 @@ object MergeSink {
           LogPerBase * weight(spark, root, Seq(next.base))) {
       val c = next.version + 1
       writeVersion(readState(spark, root), root, c)
-      swap(root, Pointer(c, batchId, c))
+      val compacted = Pointer(c, batchId, c)
+      swap(root, compacted)
+      // same live rows, new pointer: the index stays valid
+      applied.foreach(_._1.at = compacted)
     }
     cur.foreach(prev => retireBelow(root, prev.base))
     true
@@ -266,12 +328,7 @@ object MergeSink {
     old.foreach { d =>
       val name = d.getFileName.toString
       if (name.startsWith("v=") &&
-          name.drop(2).toLongOption.exists(_ < keep)) deleteRecursive(d)
+          name.drop(2).toLongOption.exists(_ < keep)) SegmentLog.deleteTree(d)
     }
   }
-
-  private def deleteRecursive(p: Path): Unit =
-    if (Files.exists(p))
-      Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(f => Files.deleteIfExists(f))
 }

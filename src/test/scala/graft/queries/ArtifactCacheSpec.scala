@@ -66,16 +66,10 @@ class ArtifactCacheSpec extends SparkSpec {
     // the registry→catalog mapping is TOTAL (VERDICT r14 task 6): a
     // typo'd GateKeys name used to be silently .filter'd out of
     // GateBench's sweep, dropping that gate from the regression
-    // baseline with no error. Every non-pending key must resolve to a
-    // real catalog entry; a registry-leads-catalog entry goes in
-    // GateKeys.pending explicitly.
-    val unresolved =
-      GateKeys.byQuery.keySet -- GateKeys.pending --
-        graft.SparkEntry.queries.keySet
+    // baseline with no error. Every key must resolve to a real catalog
+    // entry.
+    val unresolved = GateKeys.byQuery.keySet -- graft.SparkEntry.queries.keySet
     assert(unresolved.isEmpty,
       s"GateKeys entries with no catalog query: $unresolved")
-    val stalePending = GateKeys.pending -- GateKeys.byQuery.keySet
-    assert(stalePending.isEmpty,
-      s"pending names not in the registry: $stalePending")
   }
 }

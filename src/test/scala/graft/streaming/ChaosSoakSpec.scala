@@ -120,15 +120,23 @@ class ChaosSoakSpec extends SparkSpec {
       // ---- phase 3: operator fixes the store; finder brings the feed
       // back; everything the couch accepted during the outage lands.
       Files.delete(java.nio.file.Paths.get(cfg.storeRoot, "_CURRENT.tmp"))
+      // the wave's chunks are POSTed from parallel tasks, so deletes can
+      // take lower seqs than updates and the count can converge a batch
+      // before the content does: wait until every update has landed too
+      def revs(): Map[String, String] = MergeSink.readState(spark, cfg.storeRoot)
+        .select("id", "rev").collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      val updated = (0 until 120).filter(i => i % 3 == 0 && i % 5 != 0)
       assert(await() {
         sup.reconcile(Seq(cfg))
-        nagios().difference == 0
+        nagios().difference == 0 && {
+          val st = revs()
+          updated.forall(i => st.get(s"d$i").contains(s"2-${md5hex(s"d$i:2")}"))
+        }
       }, s"phase3 did not converge: ${nagios()}")
       val since2 = since()
       assert(since2 >= since1, s"checkpoint regressed: $since1 -> $since2")
       // updated docs carry generation-2 revs; deleted docs are gone
-      val st3 = MergeSink.readState(spark, cfg.storeRoot)
-        .select("id", "rev").collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      val st3 = revs()
       assert(st3.contains("d3") && st3("d3") == s"2-${md5hex("d3:2")}")
       assert(!st3.contains("d5") && !st3.contains("d0"),
         "deletes (%5==0, overlap included) must drop the rows")
