@@ -66,15 +66,13 @@ object Fingerprint {
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map(b => f"$b%02x").mkString
 
-  /** Fingerprint of the compiled `graft` bytecode on the classpath
-    * (VERDICT r13 task 1): folded into every artifact cache key so a
-    * CODE change can never reuse an artifact built by older machinery.
-    * The hand-bumped `-vN` key suffixes used to be the only guard — a
-    * MergeSink edit without a bump silently served a stale gate result
-    * to both CORRECTNESS and bench. Now any change to any `graft`
-    * class file (the builder lambdas in the `queries` package included
-    * — they ARE the recipe) rekeys the whole cache; `-vN` remains as
-    * human-readable recipe markers only.
+  /** Fingerprint of the compiled `graft` bytecode on the classpath:
+    * folded into every artifact cache key
+    * ([[graft.queries.Pipeline.artifactDir]]) so a CODE change can never
+    * reuse an artifact built by older machinery. Any change to any
+    * `graft` class file (the builder lambdas in the `queries` package
+    * included — they ARE the recipe) rekeys the whole cache, so no
+    * artifact key carries a hand-bumped version.
     *
     * Computed once per JVM from the code-source location (the
     * `target/scala-2.13/classes` dir under sbt, the jar when packaged)

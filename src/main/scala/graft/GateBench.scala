@@ -21,11 +21,11 @@ import graft.streaming.SegmentLog
   */
 object GateBench {
 
-  /** gate name -> its cachedGate artifact key prefix — read from the
-    * shared [[graft.queries.GateKeys]] registry the definition sites
-    * use, so a key bump can never leave this map pointing at a dir that
-    * no longer exists (which made dropArtifacts delete nothing and the
-    * "live" column silently report warm-read times — ADVICE r13). */
+  /** gate name -> its artifact key — the shared
+    * [[graft.queries.GateKeys]] registry the definition sites use, so
+    * this map can never point at a dir no gate builds (which once made
+    * dropArtifacts delete nothing and the "live" column silently report
+    * warm-read times). */
   val gateKeys: Map[String, String] = graft.queries.GateKeys.byQuery
 
   /** SINGLE-PROCESS TOOL: artifact dirs live in the global tmpdir, and

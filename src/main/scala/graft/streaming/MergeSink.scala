@@ -24,9 +24,11 @@ import graft.cdc.ChangeApply
   *   <root>/v=<n>/      version n: either a base, the full (id, rev, doc)
   *                      table, or a delta, one batch's effective changes
   *                      (id, rev, doc, deleted)
-  *   <root>/_CURRENT    "n <appliedBatchId> <base>" pointer (atomic
-  *                      swap): the state is base v=<base> plus the
-  *                      deltas v=<base+1> .. v=<n>, oldest first
+  *   <root>/_CURRENT    "n <appliedBatchId> <base> [<queryId>]"
+  *                      pointer (atomic swap): the state is base
+  *                      v=<base> plus the deltas v=<base+1> .. v=<n>,
+  *                      oldest first; `queryId` is the persistent id of
+  *                      the streaming query that wrote it
   *
   * Each applied batch writes a new version v=n+1 and swaps the pointer:
   *  - first batch (no store, or only the [[bootstrap]]-empty v=0): a
@@ -85,10 +87,15 @@ import graft.cdc.ChangeApply
   * state (the crash-recovery window of one pointer).
   *
   * Idempotence / exactly-once: `_CURRENT` records the last applied
-  * foreachBatch batchId; a replayed batch (same id) is a NOOP — together
+  * foreachBatch batchId and the query that applied it; a batch of that
+  * same query at or below that id is a replay and a NOOP — together
   * with the rev-equality NOOP inside the merge (T3/T4) the sink
-  * converges under at-least-once redelivery. A two-token pointer
-  * ("n batchId", the snapshot layout) reads as base n with no deltas.
+  * converges under at-least-once redelivery. A batch of another query
+  * (a fresh checkpoint following an existing store starts again at
+  * batch 0) is applied. A pointer with no query id (written outside a
+  * stream, or before the id was recorded) counts every caller's batch
+  * ids as its own. A two-token pointer ("n batchId", the snapshot
+  * layout) reads as base n with no deltas.
   *
   * SCALE: [[readState]] broadcasts the log's key set. A log too large
   * to broadcast is the point to write the base bucketed by `id`, making
@@ -102,14 +109,19 @@ import graft.cdc.ChangeApply
   */
 object MergeSink {
 
-  /** Parsed `_CURRENT`: the newest version, the last applied batch, and
-    * the base (deltas are versions base+1 .. version). */
+  /** Parsed `_CURRENT`: the newest version, the last applied batch, the
+    * base (deltas are versions base+1 .. version), and the persistent
+    * id of the streaming query that applied the batch, if any. */
   private[streaming] final case class Pointer(
-      version: Long, batchId: Long, base: Long)
+      version: Long, batchId: Long, base: Long, query: Option[String] = None)
 
   /** Compaction multiple: the log may weigh up to this many bases
     * (see the header for the bounds it sets). */
   private val LogPerBase = 2
+
+  /** The local property Spark's stream execution sets to the query's
+    * persistent id (kept in its checkpoint, so a restart keeps it). */
+  private val QueryIdKey = "sql.streaming.queryId"
 
   private val logSchema = StructType.fromDDL(
     "id STRING, rev STRING, doc STRING, deleted BOOLEAN, v BIGINT")
@@ -119,8 +131,9 @@ object MergeSink {
     if (!Files.exists(p)) None
     else {
       val parts = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-        .trim.split(" ").map(_.toLong)
-      Some(Pointer(parts(0), parts(1), parts.lift(2).getOrElse(parts(0))))
+        .trim.split(" ")
+      Some(Pointer(parts(0).toLong, parts(1).toLong,
+        parts.lift(2).fold(parts(0).toLong)(_.toLong), parts.lift(3)))
     }
   }
 
@@ -232,8 +245,12 @@ object MergeSink {
       excludeTypes: Set[String] = Set.empty,
       mapDoc: Option[Column => Column] = None): Boolean = {
     val spark = batch.sparkSession
+    // the persistent query id, set on the thread that runs a streaming
+    // query's foreachBatch; None for a call outside a stream
+    val query = Option(spark.sparkContext.getLocalProperty(QueryIdKey))
     val cur = pointer(root)
-    if (cur.exists(_.batchId >= batchId)) return false // replayed batch: NOOP
+    if (cur.exists(p => p.batchId >= batchId && p.query.forall(query.contains)))
+      return false // replayed batch: NOOP
     val v = cur.fold(0L)(_.version + 1)
     val indexes = revIndexes(spark)
     val (next, applied) = cur match {
@@ -249,7 +266,7 @@ object MergeSink {
           // a small delta is one file, so its log weight is its bytes
           val files = d.bytes / spark.sessionState.conf.filesMaxPartitionBytes + 1
           writeVersion(d.rows.coalesce(files.toInt), root, v)
-          (Pointer(v, batchId, p.base), Some(index -> d.changed))
+          (Pointer(v, batchId, p.base, query), Some(index -> d.changed))
         } finally if (owned) once.unpersist()
       case _ =>
         // first batch: no state (or only the bootstrap-empty v=0) —
@@ -258,7 +275,7 @@ object MergeSink {
         indexes.remove(root)
         writeVersion(ChangeApply.initialState(batch, excludeTypes, mapDoc),
           root, v)
-        (Pointer(v, batchId, v), None)
+        (Pointer(v, batchId, v, query), None)
     }
     swap(root, next)
     // only a swapped-in delta advances the index
@@ -276,7 +293,7 @@ object MergeSink {
           LogPerBase * weight(spark, root, Seq(next.base))) {
       val c = next.version + 1
       writeVersion(readState(spark, root), root, c)
-      val compacted = Pointer(c, batchId, c)
+      val compacted = Pointer(c, batchId, c, query)
       swap(root, compacted)
       // same live rows, new pointer: the index stays valid
       applied.foreach(_._1.at = compacted)
@@ -297,8 +314,8 @@ object MergeSink {
   private def swap(root: String, p: Pointer): Unit = {
     val tmp = Paths.get(root, "_CURRENT.tmp")
     Files.createDirectories(Paths.get(root))
-    Files.write(tmp,
-      s"${p.version} ${p.batchId} ${p.base}".getBytes(StandardCharsets.UTF_8))
+    Files.write(tmp, (s"${p.version} ${p.batchId} ${p.base}" +
+      p.query.fold("")(" " + _)).getBytes(StandardCharsets.UTF_8))
     Files.move(tmp, Paths.get(root, "_CURRENT"),
       StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
   }

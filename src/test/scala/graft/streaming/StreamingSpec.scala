@@ -92,6 +92,43 @@ class StreamingSpec extends SparkSpec {
     assert(SinceCheckpoints.lastSince(ckpt.toString).contains(5L))
   }
 
+  test("a second query with a fresh checkpoint applies its first batches to an existing store") {
+    val store = tmp("store-q")
+    def follow(tag: String, rev: String): Unit = {
+      val feed = tmp(s"feed-$tag")
+      writeFeed(feed, "f.jsonl", (1 to 6).map(i =>
+        line(i, s"d$i", rev, doc = s"""{"r":"$rev"}""")))
+      ChangesPipeline.runOnce(spark, feed.toString, store.toString,
+        tmp(s"ckpt-$tag").toString, name = s"t-$tag",
+        maxChangesPerTrigger = Some(2))
+    }
+    follow("first", "1-a") // batches 0..2
+    follow("second", "2-b") // batches 0..2 again, of another query
+    val revs = MergeSink.readState(spark, store.toString)
+      .select("rev").collect().map(_.getString(0)).toSeq
+    assert(revs == Seq.fill(6)("2-b"))
+  }
+
+  test("a restart from the same checkpoint NOOPs the batch it replays") {
+    val feed = tmp("feed-r")
+    writeFeed(feed, "f.jsonl", (1 to 4).map(i =>
+      line(i, s"d$i", "1-a", doc = s"""{"n":$i}""")))
+    val store = tmp("store-r")
+    val ckpt = tmp("ckpt-r")
+    def run(name: String): Unit = ChangesPipeline.runOnce(spark,
+      feed.toString, store.toString, ckpt.toString, name = name,
+      maxChangesPerTrigger = Some(2))
+    run("t-replay1")
+    val before = MergeSink.currentVersion(store.toString)
+    assert(before.exists(_._2 == 1L))
+    // forget that batch 1 committed: the restart runs it again
+    Seq("1", ".1.crc").foreach(f =>
+      Files.deleteIfExists(ckpt.resolve("commits").resolve(f)))
+    run("t-replay2")
+    assert(MergeSink.currentVersion(store.toString) == before)
+    assert(MergeSink.readState(spark, store.toString).count() == 4)
+  }
+
   test("since_checkpoints compat view shape (README.md:273-281)") {
     val row = SinceCheckpoints.view(spark,
       Map("my_feed" -> "/nonexistent-ckpt"), Set("my_feed")).collect().head
