@@ -1,8 +1,11 @@
 package graft.cdc
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 
 /** Set-oriented CDC apply — the reference's per-change upsert decision
   * tree (reference lib/index.js:96-196, SURVEY.md §2.11 T1-T4) collapsed
@@ -118,64 +121,90 @@ object ChangeApply {
     }
 
   /** One change's keys, as [[delta]] collects them. */
-  private[cdc] final case class Key(row: Long, id: String, seq: Long, rev: String,
+  private final case class Key(row: Long, id: String, seq: Long, rev: String,
       deleted: Boolean, excluded: Boolean, len: Int)
 
   /** One batch's effective changes: `rows` are (id, rev, doc, deleted)
-    * for every INSERT and UPDATE plus a tombstone (doc null, deleted
-    * true) for every DELETE, one row per id; NOOP, DELETE_NOOP and
-    * IGNORE rows are dropped. `changed` is what they do to the live
-    * id -> rev (Some(rev) upserts, None deletes), and `bytes` the docs'
-    * size, to size the write by. */
-  final case class Delta(rows: DataFrame, changed: Map[String, Option[String]],
-      bytes: Long)
+    * ([[Delta.schema]]) for every INSERT and UPDATE plus a tombstone
+    * (doc null, deleted true) for every DELETE, one row per id; NOOP,
+    * DELETE_NOOP and IGNORE rows are dropped. `changed` is what they do
+    * to the live id -> rev (Some(rev) upserts, None deletes), and
+    * `bytes` the docs' size, to size the write by. */
+  final case class Delta(rows: RDD[InternalRow],
+      changed: Map[String, Option[String]], bytes: Long)
+
+  object Delta {
+    val schema: StructType =
+      StructType.fromDDL("id STRING, rev STRING, doc STRING, deleted BOOLEAN")
+  }
+
+  /** The row id of a batch row, in the layout of Spark's monotonically
+    * increasing id: the partition in the upper 31 bits, the ordinal in
+    * the lower 33. */
+  private def rowId(partition: Int, ordinal: Int): Long =
+    (partition.toLong << 33) + ordinal
+
+  private def str(r: InternalRow, i: Int): String =
+    Option(r.getUTF8String(i)).map(_.toString).orNull
 
   /** Delta form of [[applyChanges]], decided on the driver against the
-    * state's live id -> rev (`stored`): folding `rows` over the state
-    * (replace by id, drop tombstones) equals `applyChanges` row for row.
+    * state's live id -> rev (`stored`): folding the delta's rows over
+    * the state (replace by id, drop tombstones) equals `applyChanges`
+    * row for row. `use` receives the delta while its batch is cached;
+    * the cache is dropped when it returns.
     *
-    * `changes` is read twice and should be cached, so its source runs
-    * once. The first read collects only the keys (row, id, seq, rev,
-    * deleted, excluded on the `mapDoc`-mapped doc, doc length); the
-    * driver folds them with [[latestPerKey]]'s order and runs the T4
-    * grid per id. `rows` is the second read, filtered to the winning
-    * rows by their `monotonically_increasing_id`, which the cache makes
-    * stable across the two reads — so exact duplicates of a winner
-    * never both pass, and no join or shuffle touches the state. */
-  def delta(
+    * The batch is planned ONCE, as one select of (id, seq, rev,
+    * deleted, excluded, len, doc) with `mapDoc` applied and `len`
+    * measured on the doc that gets written; its rows are copied and
+    * cached as an RDD, so the source runs once and each row keeps its
+    * id, (partition << 33) + ordinal. Job 1 collects the keys (all but
+    * the doc); the driver folds them with [[latestPerKey]]'s order and
+    * runs the T4 grid per id. The delta's rows filter the same cached
+    * RDD by the winners' row ids, so exact duplicates of a winner never
+    * both pass, and no join or shuffle touches the state. Docs move only
+    * between executors and files, never through the driver, whose side
+    * holds one key per change of the batch on top of `stored`. */
+  def delta[T](
       stored: String => Option[String],
       changes: DataFrame,
       excludeTypes: Set[String] = Set.empty,
-      mapDoc: Option[Column => Column] = None): Delta = {
-    val keyed = withMapDoc(changes
-      .withColumn("__row", monotonically_increasing_id())
-      .withColumn("__len", coalesce(octet_length(col("doc")), lit(0)))
-      .withColumn("deleted", coalesce(col("deleted"), lit(false))), mapDoc)
-    val keys = keyed.select(col("__row").as("row"), col("id"),
-        col("seq").cast("long").as("seq"), col("rev"), col("deleted"),
-        coalesce(excluded(col("doc"), excludeTypes), lit(false)).as("excluded"),
-        col("__len").as("len"))
-      .as(Encoders.product[Key]).collect()
-    // latestPerKey's order: max seq, a seq tie to the delete
-    val top = scala.collection.mutable.HashMap.empty[String, Key]
-    keys.foreach { k =>
-      top.get(k.id) match {
-        case Some(t) if t.seq > k.seq || (t.seq == k.seq && (t.deleted || !k.deleted)) =>
-        case _ => top(k.id) = k
+      mapDoc: Option[Column => Column] = None)(use: Delta => T): T = {
+    val deleted = coalesce(col("deleted"), lit(false))
+    val doc = when(!deleted, mapDoc.fold(col("doc"))(_(col("doc"))))
+    val batch = changes.select(col("id"), col("seq").cast("long"), col("rev"),
+        deleted, coalesce(excluded(doc, excludeTypes), lit(false)),
+        coalesce(octet_length(doc), lit(0)), doc)
+      .queryExecution.toRdd.map(_.copy()).persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val keys = batch.mapPartitionsWithIndex((p, it) =>
+        it.zipWithIndex.map { case (r, i) =>
+          Key(rowId(p, i), str(r, 0), r.getLong(1), str(r, 2), r.getBoolean(3),
+            r.getBoolean(4), r.getInt(5))
+        }).collect()
+      // latestPerKey's order: max seq, a seq tie to the delete
+      val top = scala.collection.mutable.HashMap.empty[String, Key]
+      keys.foreach { k =>
+        top.get(k.id) match {
+          case Some(t) if t.seq > k.seq || (t.seq == k.seq && (t.deleted || !k.deleted)) =>
+          case _ => top(k.id) = k
+        }
       }
-    }
-    val won = top.valuesIterator.filter(k =>
-      decide(stored(k.id), k.rev, k.deleted, k.excluded) match {
-        case "INSERT" | "UPDATE" | "DELETE" => true
-        case _ => false
-      }).toSeq
-    val rowIds = won.map(_.row).sorted.toArray
-    val winner = udf((r: Long) => java.util.Arrays.binarySearch(rowIds, r) >= 0)
-    Delta(
-      keyed.where(winner(col("__row"))).select(col("id"), col("rev"),
-        when(!col("deleted"), col("doc")).as("doc"), col("deleted")),
-      won.map(k => k.id -> Option.when(!k.deleted)(k.rev)).toMap,
-      won.map(_.len.toLong).sum)
+      val won = top.valuesIterator.filter(k =>
+        decide(stored(k.id), k.rev, k.deleted, k.excluded) match {
+          case "INSERT" | "UPDATE" | "DELETE" => true
+          case _ => false
+        }).toSeq
+      val rowIds = won.map(_.row).sorted.toArray
+      val rows = batch.mapPartitionsWithIndex((p, it) =>
+        it.zipWithIndex.collect {
+          case (r, i) if java.util.Arrays.binarySearch(rowIds, rowId(p, i)) >= 0 =>
+            InternalRow(r.getUTF8String(0), r.getUTF8String(2), r.getUTF8String(6),
+              r.getBoolean(3))
+        })
+      use(Delta(rows,
+        won.map(k => k.id -> Option.when(!k.deleted)(k.rev)).toMap,
+        won.map(_.len.toLong).sum))
+    } finally batch.unpersist(blocking = false)
   }
 
   private def withMapDoc(changes: DataFrame,

@@ -1,16 +1,26 @@
 package graft.streaming
 
+import java.io.IOException
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.util.UUID
 
 import scala.collection.concurrent.TrieMap
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.TaskContext
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.OutputWriterFactory
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.storage.StorageLevel
 
 import graft.cdc.ChangeApply
 
@@ -43,9 +53,9 @@ import graft.cdc.ChangeApply
   *    (below) is at most max(D + O, 1.25 D): one open cost per file
   *    costs a large delta at most a quarter of its bytes.
   * The rev guard of a delta runs in two jobs and never reads the store:
-  * the cached batch's keys are collected, the driver decides the T4
-  * grid against the rev index (the store's live id -> rev), and the
-  * batch's winning rows are written.
+  * the batch is planned once and cached as an RDD, its keys are
+  * collected, the driver decides the T4 grid against the rev index (the
+  * store's live id -> rev), and the batch's winning rows are written.
   *
   * The rev index lives with the batch's session (per store root), and a
   * streaming query runs its batches in its own cloned session, so an
@@ -58,9 +68,24 @@ import graft.cdc.ChangeApply
   * [[readState]] is written as a new base v=n+2 and the pointer swaps
   * again, retiring the log. Both swaps leave a complete state, so a
   * crash between them loses nothing (the next batch compacts instead).
-  * Writing a NEW version then renaming the pointer gives readers
-  * snapshot isolation and makes a crashed write invisible (a re-applied
-  * batch overwrites the orphan).
+  *
+  * Commit: the pointer swap is the only commit. Writing a NEW version
+  * then renaming the pointer gives readers snapshot isolation and makes
+  * a crashed write invisible, so no version needs Spark's file-commit
+  * protocol: there is no `_temporary`, no task or job commit and no
+  * `_SUCCESS`. Every version (a base, a delta, a compaction,
+  * [[bootstrap]]'s v=0) is written by one part writer, a plain job in
+  * which task i writes its partition's rows with Spark's parquet writer
+  * (its schema metadata, the session's codec; the task gets only the
+  * Hadoop keys the parquet format sets) to the hidden, attempt-unique
+  * `.part-<i>-<job>.<ext>.<attempt>.tmp` and renames it to
+  * `part-<i>-<job>.<ext>`. A retried or speculative attempt thus leaves
+  * a whole part or a hidden temp that no reader lists, never a torn
+  * part. Partition 0 writes even when empty (an input of no partitions
+  * runs as one empty partition), so an empty version reads back with
+  * its schema. The driver swaps the pointer only after the job returns,
+  * so an orphan v=n of a crashed batch is never named by the pointer,
+  * and a re-applied batch deletes it before it writes v=n again.
   *
   * [[readState]] returns the base rows whose id has no delta row (an
   * anti-join against the broadcast key set of the log, so the base is
@@ -224,8 +249,7 @@ object MergeSink {
     currentVersion(root) match {
       case Some(_) => false
       case None =>
-        readState(spark, root) // statically empty (id, rev, doc)
-          .write.mode("overwrite").parquet(s"$root/v=0")
+        writeVersion(readState(spark, root), root, 0L) // empty (id, rev, doc)
         swap(root, Pointer(0L, -1L, 0L))
         true
     }
@@ -260,17 +284,14 @@ object MergeSink {
     val indexes = revIndexes(spark)
     val (next, applied) = cur match {
       case Some(p) if !isBootstrapOnly(p) =>
-        // the guard reads the batch twice (its keys, then its winning
-        // rows): cache it so the source (an HTTP fetch) runs once
-        val owned = batch.storageLevel == StorageLevel.NONE
-        val once = if (owned) batch.persist() else batch
-        try {
-          val index = indexes.get(root).filter(_.at == p)
-            .getOrElse { val ix = scanIndex(spark, root, p); indexes(root) = ix; ix }
-          val d = ChangeApply.delta(index.revs.get, once, excludeTypes, mapDoc)
-          writeVersion(d.rows.coalesce(deltaFiles(spark, d.bytes)), root, v)
-          (Pointer(v, batchId, p.base, query), Some(index -> d.changed))
-        } finally if (owned) once.unpersist()
+        val index = indexes.get(root).filter(_.at == p)
+          .getOrElse { val ix = scanIndex(spark, root, p); indexes(root) = ix; ix }
+        val changed = ChangeApply.delta(index.revs.get, batch, excludeTypes, mapDoc) { d =>
+          writeVersion(spark, d.rows.coalesce(deltaFiles(spark, d.bytes)),
+            ChangeApply.Delta.schema, root, v)
+          d.changed
+        }
+        (Pointer(v, batchId, p.base, query), Some(index -> changed))
       case _ =>
         // first batch: no state (or only the bootstrap-empty v=0) —
         // O(batch) insert path, no join against an empty table; the
@@ -315,7 +336,49 @@ object MergeSink {
   }
 
   private def writeVersion(rows: DataFrame, root: String, v: Long): Unit =
-    rows.write.mode("overwrite").parquet(s"$root/v=$v")
+    writeVersion(rows.sparkSession, rows.queryExecution.toRdd, rows.schema, root, v)
+
+  /** Write `rows` of `schema` as version `v` by the part writer (see the
+    * header), after deleting any orphan v=`v` a crashed attempt left. */
+  private def writeVersion(spark: SparkSession, rows: RDD[InternalRow],
+      schema: StructType, root: String, v: Long): Unit = {
+    val dir = Paths.get(root, s"v=$v")
+    SegmentLog.deleteTree(dir)
+    // only the keys the parquet format sets, not the session's Hadoop conf
+    val job = Job.getInstance(new Configuration(false))
+    val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
+    val conf = job.getConfiguration.iterator().asScala
+      .map(e => e.getKey -> e.getValue).toMap
+    // an input of no partitions still writes one (empty) part
+    val input = if (rows.getNumPartitions > 0) rows
+      else spark.sparkContext.parallelize(Seq.empty[InternalRow], 1)
+    spark.sparkContext.runJob(input,
+      new PartWriter(dir.toString, UUID.randomUUID().toString, factory, conf, schema))
+  }
+
+  /** One task of the part writer: partition i's rows (none but partition
+    * 0 writes when empty) go to the attempt-unique hidden temp file
+    * `.part-<i>-<job>.<ext>.<attempt>.tmp`, which is then renamed to
+    * `part-<i>-<job>.<ext>`; a failed write deletes its temp. */
+  private final class PartWriter(dir: String, job: String,
+      factory: OutputWriterFactory, conf: Map[String, String], schema: StructType)
+      extends ((TaskContext, Iterator[InternalRow]) => Unit) with Serializable {
+    def apply(ctx: TaskContext, rows: Iterator[InternalRow]): Unit =
+      if (ctx.partitionId() == 0 || rows.hasNext) {
+        val hconf = new Configuration(false)
+        conf.foreach { case (k, v) => hconf.set(k, v) }
+        val attempt = new TaskAttemptContextImpl(hconf, new TaskAttemptID(
+          "graft", ctx.stageId(), TaskType.MAP, ctx.partitionId(), ctx.attemptNumber()))
+        val part = f"part-${ctx.partitionId()}%05d-$job${factory.getFileExtension(attempt)}"
+        val tmp = new HPath(dir, s".$part.${ctx.taskAttemptId()}.tmp")
+        val fs = tmp.getFileSystem(hconf)
+        val out = factory.newInstance(tmp.toString, schema, attempt)
+        try try rows.foreach(out.write) finally out.close()
+        catch { case e: Throwable => fs.delete(tmp, false); throw e }
+        if (!fs.rename(tmp, new HPath(dir, part)))
+          throw new IOException(s"cannot rename $tmp to $part")
+      }
+  }
 
   /** foreachBatch hook: writeStream.foreachBatch(MergeSink.forBatch(root)). */
   def forBatch(root: String, excludeTypes: Set[String] = Set.empty,

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import java.nio.ByteBuffer
+import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 
@@ -15,7 +17,9 @@ import org.apache.spark.sql.functions.col
   *
   * Per batch ([[commit]]):
   *  1. a batchId already in the applied-batch log `root/<log>` (one id
-  *     per line, appended) is a NOOP;
+  *     per `\n`-terminated line, appended) is a NOOP; a final line with
+  *     no `\n` is a torn append of a crashed commit, read as nothing and
+  *     cut before the next append;
   *  2. each write lands in the hidden `_staging_batch_<id>` tree, then
   *     every staged file moves to a DETERMINISTIC name —
   *     `<dest>/<partCol>=<v>/batch-<id>[-i].parquet` for a partitioned
@@ -39,12 +43,17 @@ import org.apache.spark.sql.functions.col
 object SegmentLog {
 
   /** Batch ids recorded in the applied-batch log `root/<log>`. */
-  def applied(root: String, log: String): Set[Long] = {
-    val p = Paths.get(root, log)
-    if (!Files.exists(p)) Set.empty
-    else Files.readAllLines(p, StandardCharsets.UTF_8).asScala
-      .filter(_.nonEmpty).map(_.toLong).toSet
-  }
+  def applied(root: String, log: String): Set[Long] =
+    new String(completeLines(Paths.get(root, log)), StandardCharsets.UTF_8)
+      .split('\n').filter(_.nonEmpty).map(_.toLong).toSet
+
+  /** The log's bytes up to its last `\n`: a torn final line is dropped. */
+  private def completeLines(log: Path): Array[Byte] =
+    if (!Files.exists(log)) Array.emptyByteArray
+    else {
+      val b = Files.readAllBytes(log)
+      b.take(b.lastIndexOf('\n'.toByte) + 1)
+    }
 
   /** The staged writes of one batch; each moves into place as soon as
     * it is written. */
@@ -101,8 +110,13 @@ object SegmentLog {
     val rootP = Paths.get(root)
     writes(new Stage(rootP, batchId))
     Files.createDirectories(rootP)
-    Files.write(rootP.resolve(log), s"$batchId\n".getBytes(StandardCharsets.UTF_8),
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+    val logP = rootP.resolve(log)
+    val end = completeLines(logP).length.toLong
+    scala.util.Using.resource(FileChannel.open(logP,
+        StandardOpenOption.CREATE, StandardOpenOption.WRITE)) { ch =>
+      ch.truncate(end) // cut a torn append, so the id starts its own line
+      ch.write(ByteBuffer.wrap(s"$batchId\n".getBytes(StandardCharsets.UTF_8)), end)
+    }
     // every staging tree of this batch, including the per-write
     // `_staging_<kind>_<id>` names older stores used
     scala.util.Using.resource(Files.list(rootP)) { st =>

@@ -2,19 +2,20 @@ package graft.streaming
 
 import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.ConcurrentLinkedQueue
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 import scala.util.Random
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.graft.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.execution.{FileSourceScanLike, QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.execution.{FileSourceScanLike, SparkPlan}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.sql.types.StructType
 
 import graft.SparkSpec
 import graft.cdc.ChangeApply
@@ -226,54 +227,44 @@ class MergeSinkLogSpec extends SparkSpec {
       case s: FileSourceScanLike => s.relation.location.rootPaths.map(_.toString)
     }.flatten)
 
-  private object Plans extends AdaptiveSparkPlanHelper
-
-  /** The executed plan of every query `body` runs in this session. */
-  private def plansOf(body: => Unit): Seq[SparkPlan] = {
-    val plans = new ConcurrentLinkedQueue[SparkPlan]
-    val l = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        plans.add(qe.executedPlan)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(l)
-    try { body; ListenerDrain(spark.sparkContext) }
-    finally spark.listenerManager.unregister(l)
-    plans.asScala.toSeq
-  }
-
-  /** The number of Spark jobs `body` runs in this thread. */
-  private def jobsOf(body: => Unit): Int = {
+  /** The start event of every Spark job `body` runs in this thread. */
+  private def jobsStarted(body: => Unit): Seq[SparkListenerJobStart] = {
     val sc = spark.sparkContext
     val group = s"mslog-jobs-${System.nanoTime()}"
-    val jobs = new AtomicInteger
+    val jobs = new ConcurrentLinkedQueue[SparkListenerJobStart]
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
+          jobs.add(e)
     }
     sc.addSparkListener(l)
     sc.setJobGroup(group, group)
     try { body; ListenerDrain(sc) }
     finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
-    jobs.get
+    jobs.asScala.toSeq
   }
+
+  /** The number of Spark jobs `body` runs in this thread. */
+  private def jobsOf(body: => Unit): Int = jobsStarted(body).size
+
+  /** The file scans among the RDDs of the jobs' stages. */
+  private def fileScans(jobs: Seq[SparkListenerJobStart]): Seq[String] =
+    jobs.flatMap(_.stageInfos).flatMap(_.rddInfos).map(_.name)
+      .filter(_ == "FileScanRDD")
 
   test("neither readState nor the delta write shuffles the base") {
     val root = tmp("mslogplan")
     first(root)
     MergeSink.applyBatch(root.toString, batchDf(b1), 1)
-    // b2 finds its rev index warm (built by b1): neither of its two
-    // queries (the key collect, the delta write) scans a version of the
+    // b2 finds its rev index warm (built by b1): no stage of its two
+    // jobs (the key collect, the delta write) scans a version of the
     // store, let alone shuffles one
-    val scans = (p: SparkPlan) =>
-      Plans.collectWithSubqueries(p) { case s: FileSourceScanLike => s }
-    val plans = plansOf(MergeSink.applyBatch(root.toString, batchDf(b2), 2))
-    assert(plans.size == 2, plans)
-    plans.foreach(p => assert(scans(p).isEmpty, p))
-    // the same walk does see the store's scans through AQE's wrappers
-    val read = plansOf(MergeSink.readState(spark, root.toString).collect())
-    assert(read.exists(p => scans(p).nonEmpty), read)
+    val jobs = jobsStarted(MergeSink.applyBatch(root.toString, batchDf(b2), 2))
+    assert(jobs.size == 2, jobs)
+    assert(fileScans(jobs).isEmpty, jobs.flatMap(_.stageInfos).flatMap(_.rddInfos))
+    // the same walk does see the store's scans
+    assert(fileScans(jobsStarted(MergeSink.readState(spark, root.toString).collect()))
+      .nonEmpty)
     assert(MergeSink.pointer(root.toString).contains(MergeSink.Pointer(2L, 2L, 0L)))
     val key = "spark.sql.adaptive.enabled"
     val was = spark.conf.get(key)
@@ -434,5 +425,87 @@ class MergeSinkLogSpec extends SparkSpec {
       assert(read(root) == rows(ChangeApply.applyAll(stateDf(Set.empty),
         Seq(batchDf(base), batchDf(big)))))
     } finally spark.conf.unset("spark.sql.files.openCostInBytes")
+  }
+
+  /** The file names in version `v`'s directory. */
+  private def entries(root: Path, v: Long): Seq[String] =
+    root.resolve(s"v=$v").toFile.listFiles().map(_.getName).toSeq
+
+  /** The key-value metadata keys of a parquet file's footer. */
+  private def footerKeys(f: Path): Set[String] = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(f.toString), new Configuration()))
+    try r.getFooter.getFileMetaData.getKeyValueMetaData.keySet.asScala.toSet
+    finally r.close()
+  }
+
+  test("the part writer leaves only part files and writes what Spark writes") {
+    val root = tmp("mspart")
+    first(root) // a base of several parts
+    assert(MergeSink.applyBatch(root.toString, batchDf(b1), 1)) // a delta
+    val spark0 = tmp("mspartspark")
+    // Spark's own write of the same two versions' rows
+    ChangeApply.initialState(batchDf(b0)).write.parquet(s"$spark0/v=0")
+    spark.read.parquet(s"$root/v=1").write.parquet(s"$spark0/v=1")
+    for (v <- Seq(0L, 1L)) {
+      val names = entries(root, v)
+      val (hidden, visible) = names.partition(_.startsWith("."))
+      // no _SUCCESS, no _temporary, no temp file: parts and their checksums
+      assert(visible.nonEmpty && visible.forall(_.matches("part-\\d{5}-.+\\.parquet")), names)
+      assert(hidden.toSet == visible.map(n => s".$n.crc").toSet, names)
+      val theirs = entries(spark0, v).filter(_.startsWith("part-"))
+      val ext = (n: String) => n.substring(n.indexOf('.'))
+      assert(visible.map(ext).toSet == theirs.map(ext).toSet, "the session's codec")
+      assert(footerKeys(root.resolve(s"v=$v").resolve(visible.head)) ==
+        footerKeys(spark0.resolve(s"v=$v").resolve(theirs.head)))
+      val (ours, spark1) = (spark.read.parquet(s"$root/v=$v"), spark.read.parquet(s"$spark0/v=$v"))
+      assert(ours.schema == spark1.schema)
+      assert(ours.collect().toSet == spark1.collect().toSet)
+    }
+    assert(spark.read.parquet(s"$root/v=1").schema == ChangeApply.Delta.schema)
+    assert(partFiles(root, 0) > 1, "the base should span several parts")
+  }
+
+  test("an empty first batch (only deletes, or no partitions) writes one empty, readable part") {
+    val deletes = batchDf(Seq((1L, "a", "9-a", true, null), (2L, "b", "9-b", true, null)))
+    val noParts = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], deletes.schema)
+    for ((b, i) <- Seq(deletes, noParts).zipWithIndex) {
+      val root = tmp(s"msempty$i")
+      assert(MergeSink.applyBatch(root.toString, b, 0))
+      assert(partFiles(root, 0) == 1, entries(root, 0))
+      val state = MergeSink.readState(spark, root.toString)
+      assert(state.schema == StructType.fromDDL("id STRING, rev STRING, doc STRING"))
+      assert(state.isEmpty)
+      // the next batch is a delta over the empty base
+      assert(MergeSink.applyBatch(root.toString, batchDf(b1), 1))
+      assert(read(root) == Set(("a", "2-a", """{"v":11}"""), ("d", "1-d", """{"v":4}""")))
+    }
+    // bootstrap's empty state has no partitions at all
+    val empty = MergeSink.readState(spark, tmp("msnone").toString)
+    assert(empty.queryExecution.toRdd.getNumPartitions == 0)
+    val boot = tmp("msemptyboot")
+    assert(MergeSink.bootstrap(spark, boot.toString))
+    assert(partFiles(boot, 0) == 1, entries(boot, 0))
+    assert(read(boot).isEmpty)
+  }
+
+  test("an orphan version holding a torn part is never read and is replaced on re-apply") {
+    val root = tmp("msorphan")
+    first(root)
+    assert(MergeSink.applyBatch(root.toString, batchDf(b1), 1))
+    val before = read(root)
+    val v = MergeSink.pointer(root.toString).get.version + 1
+    // a crash mid-write: v=<v> holds the first half of a real part
+    val part = root.resolve("v=1").resolve(entries(root, 1).find(_.startsWith("part-")).get)
+    val bytes = Files.readAllBytes(part)
+    val orphan = Files.createDirectories(root.resolve(s"v=$v"))
+    val torn = orphan.resolve("part-00000-torn.snappy.parquet")
+    Files.write(torn, bytes.take(bytes.length / 2))
+    intercept[Exception](spark.read.parquet(orphan.toString).collect())
+    assert(read(root) == before)
+    assert(MergeSink.applyBatch(root.toString, batchDf(b2), 2))
+    assert(!Files.exists(torn))
+    assert(read(root) == after2)
+    assert(delta(root, v) == Set(("c", "2-c", """{"v":33}""", false)))
   }
 }
