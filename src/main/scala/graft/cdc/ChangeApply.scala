@@ -216,8 +216,7 @@ object ChangeApply {
   /** A statically-empty plan (LocalRelation with no rows) — the only
     * case where emptiness is knowable without running a job. An empty
     * LogicalRDD/parquet scan is NOT detected; use [[initialState]]
-    * directly when the caller knows there is no state yet (first
-    * batch), as [[graft.streaming.MergeSink]] does. */
+    * directly when the caller knows there is no state yet. */
   private def isKnownEmpty(df: DataFrame): Boolean =
     df.queryExecution.optimizedPlan match {
       case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
@@ -225,8 +224,8 @@ object ChangeApply {
       case _ => false
     }
 
-  /** First-batch fast path: with no existing state the T4 grid needs no
-    * join at all — every surviving change is an INSERT. O(batch): one
+  /** The T4 grid with no existing state, as a plan: it needs no join
+    * at all — every surviving change is an INSERT. O(batch): one
     * partial-agg'd latestPerKey, a filter, zero extra shuffles (the
     * full-outer merge would shuffle the empty state through every
     * partition for nothing). Equivalent to

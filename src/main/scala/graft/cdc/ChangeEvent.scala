@@ -26,21 +26,6 @@ object ChangeEvent {
     StructField("rev", StringType, nullable = true),
     StructField("deleted", BooleanType, nullable = false),
     StructField("doc", StringType, nullable = true)))
-
-  /** Parse a raw `_changes` JSON line into the envelope columns.
-    * Shape: {"seq":12,"id":"x","changes":[{"rev":"2-abc"}],
-    *         "deleted":true?,"doc":{...}} (FIXTURES.md §1). */
-  def fromJsonLine(line: Column): Column = {
-    val parsed = from_json(line, DataType.fromDDL(
-      "seq BIGINT, id STRING, changes ARRAY<STRUCT<rev: STRING>>, " +
-        "deleted BOOLEAN, doc STRING"))
-    struct(
-      parsed.getField("seq").as("seq"),
-      parsed.getField("id").as("id"),
-      element_at(parsed.getField("changes"), 1).getField("rev").as("rev"),
-      coalesce(parsed.getField("deleted"), lit(false)).as("deleted"),
-      parsed.getField("doc").as("doc"))
-  }
 }
 
 /** CouchDB revision-string helpers — `"N-hash"` with ordinal prefix.

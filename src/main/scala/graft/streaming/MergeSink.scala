@@ -40,30 +40,31 @@ import graft.cdc.ChangeApply
   *                      oldest first; `queryId` is the persistent id of
   *                      the streaming query that wrote it
   *
-  * Each applied batch writes a new version v=n+1 and swaps the pointer:
-  *  - first batch (no store, or only the [[bootstrap]]-empty v=0): a
-  *    base, [[ChangeApply.initialState]] — O(batch), no join;
-  *  - otherwise a delta: the rows [[ChangeApply.delta]] keeps
-  *    (INSERT/UPDATE rows plus DELETE tombstones, one row per id) —
-  *    O(batch) written, sized by its doc bytes D against Spark's
-  *    per-file open cost O (`spark.sql.files.openCostInBytes`): a delta
-  *    under 4 O (16 MB by default; every tail batch) is one file, a
-  *    larger one is written by up to `defaultParallelism` tasks as
-  *    min(D / 4 O, defaultParallelism) files. Either way its log weight
-  *    (below) is at most max(D + O, 1.25 D): one open cost per file
-  *    costs a large delta at most a quarter of its bytes.
-  * The rev guard of a delta runs in two jobs and never reads the store:
-  * the batch is planned once and cached as an RDD, its keys are
-  * collected, the driver decides the T4 grid against the rev index (the
-  * store's live id -> rev), and the batch's winning rows are written.
+  * Each applied batch writes a new version v=n+1 and swaps the pointer.
+  * One merge path decides every batch: [[ChangeApply.delta]] against
+  * the rev index (the store's live id -> rev), in two jobs that never
+  * read the store (the batch is planned once and cached as an RDD, its
+  * keys are collected, the driver decides the T4 grid, and the winning
+  * rows are written). A first batch (no store, or only the
+  * [[bootstrap]]-empty v=0) meets an empty index, so its winners are
+  * all INSERTs and their (id, rev, doc) is the base; a later batch
+  * writes a delta, its INSERT/UPDATE rows plus DELETE tombstones as
+  * (id, rev, doc, deleted), one row per id. Either is O(batch), sized
+  * by its doc bytes D against Spark's per-file open cost O
+  * (`spark.sql.files.openCostInBytes`): under 4 O (16 MB by default;
+  * every tail batch) one file, else up to `defaultParallelism` tasks
+  * write min(D / 4 O, defaultParallelism) files. Either way its log
+  * weight (below) is at most max(D + O, 1.25 D): one open cost per file
+  * costs a large version at most a quarter of its bytes.
   *
   * The rev index lives with the batch's session (per store root), and a
   * streaming query runs its batches in its own cloned session, so an
   * index lives as long as its query. It is tagged with the pointer it
-  * reflects; on a mismatch (a query's first delta batch, a restart, another
-  * writer) it is rebuilt by one scan of the base and deltas' (id, rev,
-  * deleted) columns. It advances only after a delta's pointer swap, and
-  * a compaction (same live rows) only re-tags it.
+  * reflects; on a mismatch (a query's first batch on an existing store,
+  * a restart, another writer) it is rebuilt by one scan of the base and
+  * deltas' (id, rev, deleted) columns. A first batch starts it empty.
+  * It advances only after a batch's pointer swap, and a compaction
+  * (same live rows) only re-tags it.
   * When the log then weighs twice the base, the same batch compacts:
   * [[readState]] is written as a new base v=n+2 and the pointer swaps
   * again, retiring the log. Both swaps leave a complete state, so a
@@ -133,7 +134,10 @@ import graft.cdc.ChangeApply
   * rev on the driver: about 190 bytes per live id with 20-char ids and
   * 34-char revs (measured on JDK 17 with compressed oops: 187), so
   * 10 M live ids take about 1.9 GB of driver heap per running query,
-  * and its rebuild collects the stored (id, rev) rows once. Past that,
+  * and its rebuild collects the stored (id, rev) rows once. Every batch,
+  * a first one (the bulk load) included, also holds one key per change
+  * on the driver while it is decided, bounded by the source's
+  * `maxChangesPerTrigger`. Past that,
   * the guard needs the index on the executors (a store bucketed by id,
   * probed per bucket).
   */
@@ -153,6 +157,8 @@ object MergeSink {
     * persistent id (kept in its checkpoint, so a restart keeps it). */
   private val QueryIdKey = "sql.streaming.queryId"
 
+  private val stateSchema = StructType.fromDDL("id STRING, rev STRING, doc STRING")
+
   private val logSchema = StructType.fromDDL(
     "id STRING, rev STRING, doc STRING, deleted BOOLEAN, v BIGINT")
 
@@ -167,18 +173,18 @@ object MergeSink {
     }
   }
 
-  /** Read the current state (id, rev, doc); empty if none yet. The
-    * empty case is a LocalRelation (statically empty), so downstream
-    * merges short-circuit via [[ChangeApply.initialState]] instead of
-    * joining against nothing. */
+  /** Read the current state (id, rev, doc); empty if none yet. Every
+    * version is read with its known schema, so building the state runs
+    * no Spark job. The empty case is a LocalRelation (statically empty),
+    * so [[ChangeApply.applyChanges]] over it short-circuits to
+    * [[ChangeApply.initialState]] instead of joining against nothing. */
   def readState(spark: SparkSession, root: String): DataFrame =
     pointer(root) match {
       case None =>
         spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          StructType.fromDDL("id STRING, rev STRING, doc STRING"))
+          java.util.Collections.emptyList[org.apache.spark.sql.Row](), stateSchema)
       case Some(p) =>
-        val base = spark.read.parquet(s"$root/v=${p.base}")
+        val base = spark.read.schema(stateSchema).parquet(s"$root/v=${p.base}")
         if (p.version == p.base) base
         else {
           // the deltas as one scan; `v` comes from the directory names
@@ -242,9 +248,10 @@ object MergeSink {
     * table, CREATE TABLE + seed the `since_checkpoints` row when
     * missing, BEFORE the feed connects). Writes an empty v=0 state with
     * batchId -1 so the store exists and is readable the moment the
-    * finder admits the feed; the first real batch (id 0) still takes
-    * the O(batch) insert path ([[applyBatch]] recognizes the bootstrap
-    * pointer). NOOP (false) if the store already exists. */
+    * finder admits the feed; the first real batch (id 0) is still
+    * decided against an empty index and written as the base
+    * ([[applyBatch]] recognizes the bootstrap pointer). NOOP (false) if
+    * the store already exists. */
   def bootstrap(spark: SparkSession, root: String): Boolean =
     currentVersion(root) match {
       case Some(_) => false
@@ -281,35 +288,31 @@ object MergeSink {
     if (cur.exists(p => p.batchId >= batchId && p.query.forall(query.contains)))
       return false // replayed batch: NOOP
     val v = cur.fold(0L)(_.version + 1)
+    // a first batch (no store, or only the bootstrap-empty v=0) is a
+    // delta against an empty index, written as the base v=n
+    val prev = cur.filterNot(isBootstrapOnly)
+    val next = Pointer(v, batchId, prev.fold(v)(_.base), query)
     val indexes = revIndexes(spark)
-    val (next, applied) = cur match {
-      case Some(p) if !isBootstrapOnly(p) =>
-        val index = indexes.get(root).filter(_.at == p)
-          .getOrElse { val ix = scanIndex(spark, root, p); indexes(root) = ix; ix }
-        val changed = ChangeApply.delta(index.revs.get, batch, excludeTypes, mapDoc) { d =>
-          writeVersion(spark, d.rows.coalesce(deltaFiles(spark, d.bytes)),
-            ChangeApply.Delta.schema, root, v)
-          d.changed
-        }
-        (Pointer(v, batchId, p.base, query), Some(index -> changed))
-      case _ =>
-        // first batch: no state (or only the bootstrap-empty v=0) —
-        // O(batch) insert path, no join against an empty table; the
-        // next batch scans the new base into an index
-        indexes.remove(root)
-        writeVersion(ChangeApply.initialState(batch, excludeTypes, mapDoc),
-          root, v)
-        (Pointer(v, batchId, v, query), None)
+    val index = prev.fold(new RevIndex(next, mutable.HashMap.empty))(p =>
+      indexes.get(root).filter(_.at == p).getOrElse(scanIndex(spark, root, p)))
+    val changed = ChangeApply.delta(index.revs.get, batch, excludeTypes, mapDoc) { d =>
+      // against an empty index every row is an INSERT: a base keeps (id, rev, doc)
+      val (rows, schema) =
+        if (prev.isEmpty) (d.rows.map(r => InternalRow(r.getUTF8String(0),
+          r.getUTF8String(1), r.getUTF8String(2))), stateSchema)
+        else (d.rows, ChangeApply.Delta.schema)
+      writeVersion(spark, rows.coalesce(deltaFiles(spark, d.bytes)), schema, root, v)
+      d.changed
     }
     swap(root, next)
-    // only a swapped-in delta advances the index
-    applied.foreach { case (index, changed) =>
-      changed.foreach {
-        case (id, Some(rev)) => index.revs(id) = rev
-        case (id, None) => index.revs -= id
-      }
-      index.at = next
+    // only a swapped-in version advances the index, which the query's
+    // next batch then reads warm
+    changed.foreach {
+      case (id, Some(rev)) => index.revs(id) = rev
+      case (id, None) => index.revs -= id
     }
+    index.at = next
+    indexes(root) = index
     // compaction: fold the log into a new base once it weighs LogPerBase
     // bases — a scan that shuffles only the log, never the base
     if (next.version > next.base &&
@@ -320,9 +323,9 @@ object MergeSink {
       val compacted = Pointer(c, batchId, c, query)
       swap(root, compacted)
       // same live rows, new pointer: the index stays valid
-      applied.foreach(_._1.at = compacted)
+      index.at = compacted
     }
-    cur.foreach(prev => retireBelow(root, prev.base))
+    cur.foreach(p => retireBelow(root, p.base))
     true
   }
 

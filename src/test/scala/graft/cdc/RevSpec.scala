@@ -26,17 +26,4 @@ class RevSpec extends SparkSpec {
     // ordinal beats string order: 12 > 9 even though "12" < "9"
     assert(Rev.winner(Seq("9-a", "12-b")).contains("12-b"))
   }
-
-  test("change-line JSON parse (FIXTURES.md §1)") {
-    val lines = Seq(
-      """{"seq":12,"id":"1234567","changes":[{"rev":"2-b9f"}],"doc":{"_id":"1234567","myvar":"bar"}}""",
-      """{"seq":13,"id":"gone001","changes":[{"rev":"3-abc"}],"deleted":true}""")
-    val parsed = lines.toDF("line")
-      .select(ChangeEvent.fromJsonLine(col("line")).as("c"))
-      .select("c.seq", "c.id", "c.rev", "c.deleted", "c.doc")
-      .as[(Long, String, String, Boolean, String)].collect().toSeq
-    assert(parsed(0)._1 == 12L && parsed(0)._2 == "1234567" &&
-      parsed(0)._3 == "2-b9f" && !parsed(0)._4 && parsed(0)._5.contains("myvar"))
-    assert(parsed(1)._1 == 13L && parsed(1)._4 && parsed(1)._5 == null)
-  }
 }

@@ -134,8 +134,8 @@ class MergeSinkLogSpec extends SparkSpec {
     assert(runs.map(_._2).sum >= 1, s"no run compacted: $runs")
   }
 
-  // filler docs spread the first base over several files, so a few
-  // single-file deltas stay below the compaction weight
+  // filler docs and a tiny open cost spread the first base over several
+  // files, so a few single-file deltas stay below the compaction weight
   private val filler = (0 until 40).map(i =>
     (100L + i, s"z$i", "1-z", false, s"""{"z":$i}"""))
   private val b0 = Seq[Change](
@@ -143,13 +143,12 @@ class MergeSinkLogSpec extends SparkSpec {
     (2L, "b", "1-b", false, """{"v":2}"""),
     (3L, "c", "1-c", false, """{"v":3}""")) ++ filler
   private def first(root: Path): Boolean = {
-    // a multi-file base: the batch's 4 shuffle partitions, uncoalesced
-    val conf = Map("spark.sql.shuffle.partitions" -> "4",
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
-    val was = conf.keys.map(k => k -> spark.conf.get(k)).toMap
-    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    // a multi-file base: at 64 bytes per file, b0's ~330 doc bytes ask
+    // for more files than the 4 cores write
+    val key = "spark.sql.files.openCostInBytes"
+    spark.conf.set(key, "16")
     try MergeSink.applyBatch(root.toString, batchDf(b0), 0)
-    finally was.foreach { case (k, v) => spark.conf.set(k, v) }
+    finally spark.conf.unset(key)
   }
   private val b1 = Seq[Change](
     (4L, "a", "2-a", false, """{"v":11}"""),
@@ -327,8 +326,8 @@ class MergeSinkLogSpec extends SparkSpec {
 
   test("rev index coherence: another session's write, a failed swap, a compaction") {
     val root = tmp("msindex")
-    first(root)
-    MergeSink.applyBatch(root.toString, batchDf(b1), 1) // builds the index
+    first(root) // seeds the index
+    MergeSink.applyBatch(root.toString, batchDf(b1), 1)
     var ref = rows(ChangeApply.applyAll(
       stateDf(rows(ChangeApply.initialState(batchDf(b0)))), Seq(batchDf(b1))))
     def step(cs: Seq[Change], id: Long): Unit = {
@@ -379,16 +378,19 @@ class MergeSinkLogSpec extends SparkSpec {
     val rnd = new Random(7L)
     val docs = (0 until 2000).map(i => (i.toLong, s"doc$i", "1-a", false, s"""{"n":$i}"""))
     assert(MergeSink.applyBatch(root.toString, batchDf(docs), 0))
+    // the first batch seeded this session's index; a fresh session (as
+    // a restarted query) finds none and rebuilds it
+    val fresh = spark.newSession()
     var seq = 10000L
-    def batch(): DataFrame = batchDf(Seq.fill(100) {
+    def batch(): DataFrame = fresh.createDataFrame(Seq.fill(100) {
       seq += 1
       val id = s"doc${rnd.nextInt(2200)}"
       if (rnd.nextInt(10) == 0) (seq, id, s"9-$seq", true, null: String)
       else (seq, id, s"2-$seq", false, s"""{"n":$seq}""")
-    })
+    }).toDF("seq", "id", "rev", "deleted", "doc")
     val b1 = batch()
     val b2 = batch()
-    // the first delta batch after the base builds the index
+    // the fresh session's first batch builds its index
     val rebuild = jobsOf(MergeSink.applyBatch(root.toString, b1, 1))
     val warm = jobsOf(MergeSink.applyBatch(root.toString, b2, 2))
     assert(MergeSink.pointer(root.toString).contains(MergeSink.Pointer(2L, 2L, 0L)),
@@ -397,6 +399,68 @@ class MergeSinkLogSpec extends SparkSpec {
     assert(warm == 2, s"warm delta batch: $warm jobs")
     assert(rebuild <= 3, s"index-building batch: $rebuild jobs")
     assert(partFiles(root, 2) == 1, "a small delta is one file")
+  }
+
+  test("first-batch differential: a batch into an empty store is a delta against an empty index") {
+    val marker: Column => Column = d => regexp_replace(d, "}$", ""","m":1}""")
+    for (seed <- 21L to 26L) {
+      val (excludeTypes, mapDoc) = seed % 3 match {
+        case 0 => (Set.empty[String], None)
+        case 1 => (Set("log"), None)
+        case _ => (Set("log"), Some(marker))
+      }
+      val root = tmp(s"msfirst$seed")
+      if (seed % 2 == 0) assert(MergeSink.bootstrap(spark, root.toString))
+      val rnd = new Random(seed)
+      var seq = 0L
+      val next = () => { seq += 1; seq }
+      val (s1, s2, s3, s4) = (next(), next(), next(), next())
+      val fixed = Seq[Change](
+        (s1, "u0", "1-u", false, """{"type":"a","u":0}"""), // exact duplicate
+        (s1, "u0", "1-u", false, """{"type":"a","u":0}"""),
+        (s2, "i0", "1-i", false, """{"type":"a","i":0}"""), // insert, then delete
+        (s3, "i0", "2-i", true, null),
+        (s4, "t0", "1-t", false, """{"type":"a","t":0}"""), // a seq tie: the delete wins
+        (s4, "t0", "2-t", true, null),
+        (next(), "x0", "1-x", false, """{"type":"log","x":0}""")) // excluded type
+      val cs = fixed ++ genTricky(rnd, next, Set.empty)
+      val b = batchDf(rnd.shuffle(cs)).repartition(1 + (seed % 3).toInt)
+      assert(MergeSink.applyBatch(root.toString, b, 0, excludeTypes, mapDoc))
+      val p = MergeSink.pointer(root.toString).get
+      assert(p.base == p.version && p.batchId == 0L, p)
+      val ref = rows(ChangeApply.applyAll(stateDf(Set.empty), Seq(b), excludeTypes, mapDoc))
+      assert(ref.exists(_._1 == "u0") && !ref.exists(r => r._1 == "i0" || r._1 == "t0"))
+      assert(ref.exists(_._1 == "x0") == excludeTypes.isEmpty)
+      assert(read(root) == ref, s"seed $seed")
+      // the base is the state itself: (id, rev, doc), one row per live id
+      val base = spark.read.parquet(s"$root/v=${p.base}")
+      assert(base.schema.fieldNames.toSeq == ChangeApply.stateCols, s"seed $seed")
+      assert(base.count() == ref.size && rows(base) == ref, s"seed $seed")
+    }
+  }
+
+  test("the batch after a first batch reads the index it left: 2 jobs, no store scan") {
+    for (boot <- Seq(false, true)) {
+      val root = tmp(s"msseeded$boot")
+      if (boot) assert(MergeSink.bootstrap(spark, root.toString))
+      assert(first(root))
+      val jobs = jobsStarted(MergeSink.applyBatch(root.toString, batchDf(b1), 1))
+      assert(jobs.size == 2, s"bootstrapped $boot: $jobs")
+      assert(fileScans(jobs).isEmpty, jobs.flatMap(_.stageInfos).flatMap(_.rddInfos))
+      assert(read(root) == rows(ChangeApply.applyAll(stateDf(Set.empty),
+        Seq(batchDf(b0), batchDf(b1)))))
+    }
+  }
+
+  test("building readState runs no Spark job, on a base alone or with its log") {
+    val root = tmp("msreadjobs")
+    first(root)
+    assert(jobsOf(MergeSink.readState(spark, root.toString)) == 0, "base only")
+    MergeSink.applyBatch(root.toString, batchDf(b1), 1)
+    assert(jobsOf(MergeSink.readState(spark, root.toString)) == 0, "base and one delta")
+    MergeSink.applyBatch(root.toString, batchDf(b2), 2)
+    assert(jobsOf(MergeSink.readState(spark, root.toString)) == 0, "base and two deltas")
+    assert(read(root) == after2)
   }
 
   private def partFiles(root: Path, v: Long): Int =
